@@ -78,6 +78,12 @@ object Curation {
       .withColumn("f2", col("f1") && col("cl").between(100, 520))
       .withColumn("f3", col("f2") && col("ntok") > 0 && col("ratio") >= 0.35)
 
+  // sig4's per-thread digest: MessageDigest is stateful, so each task
+  // thread reuses its own instance instead of a provider lookup per row
+  private val sig4Md5 =
+    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
+  private val hexChars = "0123456789abcdef".toCharArray
+
   /** Compiled 4-lane near-dup signature (r22, guide §1.2 "per-task
     * work"): byte-identical to the HOF chain it replaces —
     * `mds = ntok>=3 ? transform(shingles, md5) : [md5(text)]`, lane l =
@@ -92,8 +98,7 @@ object Curation {
     * condition also took the otherwise branch) hashes the RAW text;
     * null text → null sig. */
   private[graft] val sig4 = udf((ts: Seq[String], text: String) => {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hexChars = "0123456789abcdef".toCharArray
+    val md = sig4Md5.get()
     def md5Hex(v: String): String = {
       val dg = md.digest(v.getBytes("UTF-8")); md.reset()
       val hex = new Array[Char](32)

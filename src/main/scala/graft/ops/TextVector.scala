@@ -1493,9 +1493,12 @@ object TextVector {
     * which exploded the corpus ×k and paid a Sort+SortAggregate
     * exchange per assignment pass (3 passes in the t31 plan). Encoding
     * is a pure projection: at the 100 TB design point PQ encode must
-    * run at scan speed, which this does. A codeword of mismatched
-    * width contributed null d2 under min_by and is likewise never
-    * chosen. Equivalence is spec-pinned in TextVectorSpec. */
+    * run at scan speed, which this does. The two forms differ only
+    * for a codeword whose width mismatches the subvector: its d2 was
+    * NULL under min_by, and NULL struct fields sort FIRST, so the old
+    * form would have picked it, while this loop never does. At the
+    * fixed 16 lanes of every subvector and codeword that case cannot
+    * arise. Equivalence is spec-pinned in TextVectorSpec. */
   private[graft] def pqEncode(subs: DataFrame,
                               cbRows: Seq[(Int, Int, Seq[Double])]): DataFrame = {
     val byJ: Map[Int, (Array[Int], Array[Array[Double]])] =

@@ -237,7 +237,7 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
       }
       val staged = readBack()
       val (checked0, boundChecks) =
-        GraftManifestSource.bindDeclaredChecks(staged, dir,
+        ManifestSupport.bindDeclaredChecks(staged, dir,
           recomputeGenerated = true)
       // S50: the task writers staged these rows BEFORE the generation
       // step could run (the rewrite plan is Spark's own) — when the
@@ -442,7 +442,7 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo)
       // job pre-commit; DELETE records are exempt — their null-filled
       // data columns must not be judged ('v IS NOT NULL' would
       // otherwise fail every DELETE)
-      val (cs, boundKeys) = GraftManifestSource.bindDeclaredChecks(cs0, dir,
+      val (cs, boundKeys) = ManifestSupport.bindDeclaredChecks(cs0, dir,
         exemptWhen = Some(s"${GraftDeltaWrite.ChangeCol} = 1"),
         recomputeGenerated = true)
       MergeInto.applyBatch(cs, dir, key,
@@ -681,7 +681,7 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       def landImages(df0: org.apache.spark.sql.DataFrame)
           : Option[(String, Option[String])] = {
         val (checked, bc) =
-          GraftManifestSource.bindDeclaredChecks(df0, dir,
+          ManifestSupport.bindDeclaredChecks(df0, dir,
             recomputeGenerated = true)
         boundChecks ++= bc
         val c = "pd-" + java.util.UUID.randomUUID().toString.take(8)

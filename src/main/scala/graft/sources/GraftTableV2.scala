@@ -25,16 +25,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
 /** S21 — the manifest table family on the DataSource V2 API
-  * (`TableProvider`), short name `graft`. The V1 surface
-  * ([[GraftManifestSource]], short name `graft-manifest`) stays as the
-  * compatibility alias — it additionally carries the SaveModes V2
-  * path-writes define away (ErrorIfExists/Ignore) and the CDC feed.
-  *
-  * What V2 buys over the V1 relation, in plan terms:
+  * (`TableProvider`), short name `graft`. `graft-manifest`
+  * ([[GraftManifestAlias]]) is the same provider under a second name,
+  * adding only the V1 seams Spark reaches for SaveMode writes and the
+  * CDC stream. Every batch read under either name is this table:
   *  - **Columnar batch reads.** The scan hands Spark `FilePartition`s
   *    read by Spark's own vectorized parquet reader factory — rows
-  *    arrive as `ColumnarBatch`, not the V1 `Row` bridge with its
-  *    per-row conversion ([[GraftManifestRelation]]'s documented tax).
+  *    arrive as `ColumnarBatch`, with no per-row `Row` conversion.
   *  - **Aggregate pushdown from manifest stats.** A global
   *    `count(*)`/`min(c)`/`max(c)` over an append table is answered
   *    METADATA-ONLY from the `#stats` manifest headers — zero data
@@ -47,25 +44,25 @@ import org.apache.spark.util.SerializableConfiguration
   *    dimension join re-prunes commit dirs before execution.
   *  - **Statistics.** `estimateStatistics` reports the PRUNED byte
   *    size and (when stats cover every surviving dir) the row count,
-  *    so broadcast planning sees post-pruning reality, better than the
-  *    V1 relation's whole-table `sizeInBytes`.
+  *    so broadcast planning sees post-pruning reality.
+  *  - **Change feed.** `readChangeFeed` with `startingVersion` serves
+  *    the row-level diff between two versions ([[GraftChangesTable]]).
   *
-  * Filter pushdown stays correctness-free exactly like V1: every
-  * filter is returned as residual (Spark re-applies it above the
-  * scan); pushed copies only drive manifest-level dir pruning and
-  * parquet row-group pruning. Snapshot semantics match V1: the table
-  * pins its version at `getTable` (one query, one version;
-  * `versionAsOf` = explicit time travel).
+  * Filter pushdown is correctness-free: every filter is returned as
+  * residual (Spark re-applies it above the scan); pushed copies only
+  * drive manifest-level dir pruning and parquet row-group pruning.
+  * The table pins its version at `getTable` (one query, one version;
+  * `versionAsOf` / `timestampAsOf` = explicit time travel).
   *
   * Write side: `V1Write` bridge (the sanctioned V2→`InsertableRelation`
   * seam, same as Spark's JDBC source) onto [[ManifestTable.append]] /
-  * [[GraftManifestSource.overwrite]] — the write is a driver-orchestrated
-  * parquet job + manifest commit, which is precisely what the V1
-  * insert path does; a custom `BatchWrite` would re-implement parquet
-  * task commit for zero plan benefit. A first write to an uncommitted
-  * path gets `ACCEPT_ANY_SCHEMA` (there is no schema to resolve
-  * against yet); once committed, writes resolve by-name against the
-  * declared schema with Spark's standard cast/reorder semantics.
+  * [[ManifestSupport.overwrite]] — the write is a driver-orchestrated
+  * parquet job + manifest commit; a custom `BatchWrite` would
+  * re-implement parquet task commit for zero plan benefit. A first
+  * write to an uncommitted path gets `ACCEPT_ANY_SCHEMA` (there is no
+  * schema to resolve against yet); once committed, writes resolve
+  * by-name against the declared schema with Spark's standard
+  * cast/reorder semantics.
   */
 class GraftTableProvider extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -73,6 +70,14 @@ class GraftTableProvider extends TableProvider
   override def shortName(): String = "graft"
 
   override def supportsExternalMetadata(): Boolean = true
+
+  /** Whether this provider's tables take `DataFrameWriter` saves on the
+    * V2 path (`BATCH_WRITE`); the `graft-manifest` alias routes them to
+    * its V1 SaveMode writer instead. */
+  protected def batchWrite: Boolean = true
+
+  private def changeFeed(options: CaseInsensitiveStringMap): Boolean =
+    options.getBoolean("readChangeFeed", false)
 
   private def dirOf(options: CaseInsensitiveStringMap): String =
     Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
@@ -144,10 +149,8 @@ class GraftTableProvider extends TableProvider
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    if (options.containsKey("readChangeFeed"))
-      throw new UnsupportedOperationException(
-        "the change feed is served by the V1 alias: " +
-          "spark.read.format(\"graft-manifest\").option(\"readChangeFeed\", true)")
+    // a change feed's table resolves its own schema (see getTable)
+    if (changeFeed(options)) return new StructType()
     val spark = SparkSession.active
     val dir = dirOf(options)
     pinnedVersion(spark, options) match {
@@ -171,17 +174,70 @@ class GraftTableProvider extends TableProvider
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
+    if (changeFeed(options)) return new GraftChangesTable(dirOf(options), options)
     val spark = SparkSession.active
     GraftTable(dirOf(options), pinnedVersion(spark, options), schema,
-      properties.asScala.toMap)
+      properties.asScala.toMap, batchWrite)
   }
+}
+
+/** Batch `readChangeFeed`: the row-level change feed between two
+  * retained versions — `option("readChangeFeed", true)
+  * .option("startingVersion", v)[.option("endingVersion", w)]`, the
+  * Delta CDF consumption shape; `endingVersion` defaults to the head at
+  * load. The feed is [[ManifestTable.changes]], a diff with a shuffle
+  * rather than a set of file partitions, so it reaches Spark through a
+  * `V1Scan` as a plain `TableScan`. There is nothing for pushdown to
+  * win: the diff already reads ONLY the commit dirs that differ
+  * between the versions (inputFiles-asserted in MergeIntoSpec).
+  *
+  * Resolution is lazy: `readStream` with the same options loads this
+  * table too, then falls back to the alias's X14 stream source without
+  * reading its schema — so a stream needs no `startingVersion`. */
+private[sources] class GraftChangesTable(dir: String,
+                                         options: CaseInsensitiveStringMap)
+    extends Table with SupportsRead {
+  import org.apache.spark.sql.{Row, SQLContext}
+  import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+
+  private lazy val relation: BaseRelation with TableScan = {
+    val spark = SparkSession.active
+    val from = Option(options.get("startingVersion")).getOrElse(
+      throw new IllegalArgumentException(
+        "readChangeFeed needs startingVersion")).toLong
+    val to = Option(options.get("endingVersion")).map(_.toLong)
+      .orElse(ManifestTable.headVersion(spark, dir))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no committed manifest at $dir"))
+    val feed = ManifestTable.changes(spark, dir, from, to)
+    new BaseRelation with TableScan {
+      override def sqlContext: SQLContext = spark.sqlContext
+      override def schema: StructType = feed.schema
+      override def buildScan(): org.apache.spark.rdd.RDD[Row] = feed.rdd
+    }
+  }
+
+  override def name(): String = s"graft-changes:$dir"
+
+  override def schema(): StructType = relation.schema
+
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
+    () => new org.apache.spark.sql.connector.read.V1Scan {
+      override def readSchema(): StructType = relation.schema
+      override def toV1TableScan[T <: BaseRelation with TableScan](
+          context: SQLContext): T = relation.asInstanceOf[T]
+    }
 }
 
 /** One pinned version of a manifest table behind the V2 `Table` API.
   * `version` None = the path has never been committed (write-only
   * until the first commit lands). */
 case class GraftTable(tableDir: String, pinnedV: Option[Long],
-                      tableSchema: StructType, tableProps: Map[String, String])
+                      tableSchema: StructType, tableProps: Map[String, String],
+                      batchWrite: Boolean = true)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
@@ -268,14 +324,15 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
 
   // columns() derives from schema() via Table's default implementation
   override def capabilities(): java.util.Set[TableCapability] = {
-    // BATCH_WRITE admits the table to DataFrameWriter's V2 write path;
-    // V1_BATCH_WRITE tells the physical planner the Write is a V1Write
-    // bridge (AppendDataExecV1) — both are required, same as Delta
+    // BATCH_WRITE admits the table to DataFrameWriter's V2 write path
+    // (without it, saves fall back to the provider's V1 SaveMode
+    // writer); V1_BATCH_WRITE tells the physical planner the Write is a
+    // V1Write bridge (AppendDataExecV1), and alone admits SQL INSERT
     val base = java.util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
+    if (batchWrite) base.add(TableCapability.BATCH_WRITE)
     // first write to an uncommitted path: nothing to resolve against
     if (tableSchema.isEmpty) base.add(TableCapability.ACCEPT_ANY_SCHEMA)
     base
@@ -323,7 +380,7 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
         tableDir, deleteWhen = org.apache.spark.sql.functions.lit(true)): Unit
     } else {
       val zone = ManifestTable.statsZoneOf(spark, fs, tableDir, head)
-      val bounds = GraftManifestSource.boundsOf(filters.toIndexedSeq, zone)
+      val bounds = ManifestSupport.boundsOf(filters.toIndexedSeq, zone)
       // S41 — `dml.mode=merge-on-read` (TBLPROPERTIES): the delete
       // stages a deletion vector instead of rewriting touched dirs —
       // write cost ∝ deleted rows; compaction materializes later
@@ -364,7 +421,7 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
     // contract on the DSv2 OPTIONS surface): per-WRITE options only,
     // never table properties (a persisted txnVersion would make every
     // write "the same" transaction).
-    val txn = GraftManifestSource.txnOf(
+    val txn = ManifestSupport.txnOf(
       k => Option(info.options.get(k)))
     new GraftWriteBuilder(tableDir, statsCols, retain, clusterBy, checks,
       info, viaCatalog, txn)
@@ -707,7 +764,7 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
     }
 
     private def txnMeta: Map[String, String] =
-      GraftManifestSource.txnMetaOf(txn)
+      ManifestSupport.txnMetaOf(txn)
 
     override def toInsertableRelation: InsertableRelation =
       (data0, _) =>
@@ -717,7 +774,7 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
       // not just before the pointer publish. (No `return` here: a
       // non-local return from this lambda would fire after
       // toInsertableRelation already returned.)
-      if (!GraftManifestSource.txnApplied(data0.sparkSession, tableDir, txn)) {
+      if (!ManifestSupport.txnApplied(data0.sparkSession, tableDir, txn)) {
         // the peel must see the PREPARED plan's top — before the check
         // guards wrap it (append path only: overwrite has no second
         // shuffle to save, and keeping Spark's sort there is free)
@@ -746,9 +803,9 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
         // route.
         val (declChecked, boundCheckKeys) =
           if (bucketedGeom.isDefined)
-            GraftManifestSource.bindDeclaredChecks(unprepared, tableDir)
+            ManifestSupport.bindDeclaredChecks(unprepared, tableDir)
           else (unprepared, Set.empty[String])
-        val data = GraftManifestSource.applyChecks(declChecked, checks)
+        val data = ManifestSupport.applyChecks(declChecked, checks)
         // a per-write upsertTies OPTION overrides the declared table
         // property (which the kernel itself resolves when no explicit
         // order arrives); on a non-bucketed table it refuses loudly —
@@ -786,7 +843,7 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
           else MergeInto.merge(data, tableDir, tieCols = ties,
             validateHead = guard): Unit
         } else {
-          if (overwrite) GraftManifestSource.overwrite(data, tableDir,
+          if (overwrite) ManifestSupport.overwrite(data, tableDir,
             statsCols, retain, extraMeta = txnMeta,
             // an explicit clusterBy OPTION governs THIS overwrite's
             // layout, not only the spec it declares below (r20)
@@ -964,7 +1021,7 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
     ManifestTable.statsZoneOf(spark, fsOf(spark), tableDir, version)
 
   private def boundsFor(fs: Array[Filter]): Map[String, (String, String)] =
-    GraftManifestSource.boundsOf(fs.toIndexedSeq, statsZone)
+    ManifestSupport.boundsOf(fs.toIndexedSeq, statsZone)
       .filter { case (c, _) => tableSchema.fieldNames.contains(c) }
 
   /** S44 — per-scan bloom sidecar cache (driver-side, loaded on demand
@@ -2354,7 +2411,7 @@ object GraftStatsAgg {
 
 /** V1 `Filter` → `Column` translation for [[GraftTable.deleteWhere]] —
   * EXACT SQL semantics, unlike the pruning envelope
-  * ([[GraftManifestSource.boundsOf]] widens; this predicate decides
+  * ([[ManifestSupport.boundsOf]] widens; this predicate decides
   * which rows live, so nothing may widen). None = a filter shape the
   * delete refuses, surfaced by `canDeleteWhere` before Spark commits
   * to the operation. */

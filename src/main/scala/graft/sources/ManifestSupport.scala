@@ -1,186 +1,15 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
 
-/** S20 — the manifest table family exposed through Spark's standard
-  * data-source surface, so a user reaches it with the SAME API as any
-  * parquet/Delta path and from pure SQL:
-  *
-  *   spark.read.format("graft-manifest").load(dir)
-  *   spark.read.format("graft-manifest").option("versionAsOf", 3).load(dir)
-  *   df.write.format("graft-manifest").mode("append")
-  *     .option("statsCols", "o_orderdate").save(dir)
-  *   CREATE TABLE t USING `graft-manifest` OPTIONS (path '...');
-  *   SELECT * FROM t WHERE o_orderdate BETWEEN ...
-  *   spark.read.format("graft-manifest").option("readChangeFeed", true)
-  *     .option("startingVersion", v).load(dir)   // row-level CDC feed
-  *
-  * Built on the stable V1 `sources` API (RelationProvider +
-  * PrunedFilteredScan): Spark hands the relation the query's pushed
-  * (requiredColumns, filters); supported comparison filters are folded
-  * into per-column bounds and routed through [[ManifestTable.rangeScan]]
-  * — so manifest-stats DIR pruning happens before any parquet footer is
-  * opened, and the surviving dirs are read by the normal vectorized
-  * parquet scan with the residual filter + column pruning pushed into
-  * it. ALL filters are declared unhandled, so Spark re-applies the
-  * exact predicates above the scan: stats pruning stays a pure I/O
-  * optimization, never a correctness dependency (rangeScan's contract;
-  * strict `>` pruned as `>=` is therefore safe, as is folding `IN` to
-  * its [min,max] envelope).
-  *
-  * Snapshot isolation: the relation resolves the head version ONCE at
-  * creation, so one query — or a long-lived SQL table registration —
-  * reads one consistent version throughout, Delta-style (option
-  * `versionAsOf` = explicit time travel through the same seam).
-  *
-  * Scale note (the honest V1 trade): rows cross a Row boundary at the
-  * relation edge (RowDataSourceScanExec), costing one conversion vs a
-  * native FileSourceScanExec — the price of the stable public API. The
-  * native path ([[ManifestTable.read]]/[[ManifestTable.rangeScan]])
-  * remains the hot path; this source is the INTEROP surface (BI tools,
-  * SQL-only users, catalogs). A DSv2 TableProvider with its own
-  * PartitionReaderFactory could close the gap at ~5x the code against
-  * semi-internal parquet reader APIs.
-  */
-class GraftManifestSource extends RelationProvider
-    with CreatableRelationProvider with DataSourceRegister
-    with StreamSourceProvider {
-
-  override def shortName(): String = "graft-manifest"
-
-  private def pathOf(parameters: Map[String, String]): String =
-    parameters.getOrElse("path", throw new IllegalArgumentException(
-      "graft-manifest needs a path: .load(dir) or OPTIONS (path '...')"))
-
-  /** X14 — `spark.readStream.format("graft-manifest")
-    * .option("readChangeFeed", true).load(dir)`: the row-level CDC
-    * feed as a STREAM. Served through Spark's V1 `Source` API
-    * deliberately — each micro-batch is a signed-aggregation DIFF (a
-    * plan with a shuffle), which the V2 `MicroBatchStream` partition
-    * contract cannot express; Delta's streaming source rides the same
-    * seam for the same reason. Append tailing (dirs only, columnar)
-    * stays on the V2 X13 source (`format("graft")`). */
-  override def sourceSchema(ctx: SQLContext, schema: Option[StructType],
-                            providerName: String,
-                            parameters: Map[String, String])
-      : (String, StructType) = {
-    require(parameters.get("readChangeFeed").exists(_.toBoolean),
-      "graft-manifest streams the CHANGE FEED (option readChangeFeed=" +
-        "true); to tail appends columnar use spark.readStream" +
-        ".format(\"graft\") — the X13 source")
-    (shortName(),
-      GraftMetaTables.changesSchemaOf(ctx.sparkSession, pathOf(parameters)))
-  }
-
-  override def createSource(ctx: SQLContext, metadataPath: String,
-                            schema: Option[StructType], providerName: String,
-                            parameters: Map[String, String])
-      : org.apache.spark.sql.execution.streaming.Source = {
-    require(parameters.get("readChangeFeed").exists(_.toBoolean),
-      "graft-manifest streams the CHANGE FEED (option readChangeFeed=true)")
-    val dir = pathOf(parameters)
-    val spark = ctx.sparkSession
-    // default floor = the head at stream START: only NEW commits
-    // stream (Delta CDF streaming's default); startingVersion=v makes
-    // the first batch INCLUDE v's changes
-    val floor = parameters.get("startingVersion").map { s =>
-      val v = s.toLong
-      // validated HERE, not at the first batch: an invalid option
-      // used to start the stream and then die with a misleading
-      // "version -1 no longer retained ... size retention" error
-      // pointing the user at the wrong knob (r20 review find)
-      require(v >= 1,
-        s"startingVersion must be >= 1 (versions number from 1), got $v")
-      v - 1
-    }
-      .orElse(ManifestTable.headVersion(spark, dir))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no committed manifest at $dir"))
-    new GraftCdcSource(spark, dir, floor,
-      parameters.get("maxVersionsPerTrigger").map(_.toLong))
-  }
-
-  override def createRelation(ctx: SQLContext,
-                              parameters: Map[String, String]): BaseRelation = {
-    val dir = pathOf(parameters)
-    def head: Option[Long] = ManifestTable.headVersion(ctx.sparkSession, dir)
-    if (parameters.get("readChangeFeed").exists(_.toBoolean)) {
-      // Delta-CDF-shaped option set: row-level changes between two
-      // retained versions, change_type ∈ insert/delete
-      val from = parameters.getOrElse("startingVersion",
-        throw new IllegalArgumentException(
-          "readChangeFeed needs startingVersion")).toLong
-      val to = parameters.get("endingVersion").map(_.toLong).orElse(head)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no committed manifest at $dir"))
-      GraftChangesRelation(ctx, dir, from, to)
-    } else {
-      val v = parameters.get("versionAsOf")
-        .map(ManifestTable.resolveVersionArg(ctx.sparkSession, dir, _))
-        .orElse(head)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no committed manifest at $dir"))
-      // table-level write options (CREATE TABLE ... OPTIONS) ride on
-      // the relation so SQL INSERT INTO honors them
-      val statsCols = parameters.get("statsCols")
-        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-      val retain = parameters.get("retainGenerations").map(_.toInt).getOrElse(2)
-      GraftManifestRelation(ctx, dir, v, statsCols, retain)
-    }
-  }
-
-  /** Write side: append lands through [[ManifestTable.append]] (one
-    * immutable commit dir + optional `statsCols` skipping stats observed
-    * in the write job); Overwrite commits a manifest listing ONLY the
-    * new dir — prior dirs stay on disk for time travel until GC'd, the
-    * Delta overwrite semantic. ErrorIfExists/Ignore key off whether the
-    * table has any committed version. */
-  override def createRelation(ctx: SQLContext, mode: SaveMode,
-                              parameters: Map[String, String],
-                              data0: DataFrame): BaseRelation = {
-    val dir = pathOf(parameters)
-    val statsCols = parameters.get("statsCols")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Seq.empty)
-    // a CDF consumer needs the versions it will diff to SURVIVE GC —
-    // retention is a write-side option, like Delta's retention knobs
-    val retain = parameters.get("retainGenerations").map(_.toInt).getOrElse(2)
-    val exists = ManifestTable.headVersion(ctx.sparkSession, dir).isDefined
-    // S47 — idempotent batch writes on the V1 alias too: same option
-    // pair, same check-then-write replay gate as the V2 builder
-    val txn = GraftManifestSource.txnOf(parameters.get)
-    val txnMeta = GraftManifestSource.txnMetaOf(txn)
-    if (GraftManifestSource.txnApplied(ctx.sparkSession, dir, txn))
-      return createRelation(ctx, parameters)
-    // declared data contracts bind inside the routed write (S30) —
-    // each route binds exactly once and guards its own commit
-    val data = data0
-    mode match {
-      case SaveMode.Append =>
-        GraftManifestSource.appendRespectingSpec(data, dir, statsCols, retain,
-          extraMeta = txnMeta)
-      case SaveMode.Overwrite =>
-        GraftManifestSource.overwrite(data, dir, statsCols, retain,
-          extraMeta = txnMeta)
-      case SaveMode.ErrorIfExists if exists =>
-        throw new IllegalStateException(
-          s"graft-manifest table already committed at $dir (mode=ErrorIfExists)")
-      case SaveMode.ErrorIfExists =>
-        ManifestTable.append(data, dir, statsCols, retain, meta = txnMeta): Unit
-      case SaveMode.Ignore =>
-        if (!exists) ManifestTable.append(data, dir, statsCols, retain,
-          meta = txnMeta): Unit
-    }
-    // a catalog table over this path must not keep serving the
-    // pre-write pinned snapshot (see GraftManifestRelation.insert)
-    ctx.sparkSession.sessionState.catalog.invalidateAllCachedTables()
-    createRelation(ctx, parameters)
-  }
-}
-
-object GraftManifestSource {
+/** Helpers every write and pruning surface of the manifest table family
+  * shares — the `graft`/`graft-manifest` providers, [[ManifestTable]],
+  * [[GraftRowLevelOps]] and the streaming sinks: pushed-filter → stats
+  * bounds folding, S47 txn idempotence, and the S30/S50/S51 declared
+  * contracts bound inside each write job, plus the overwrite and
+  * spec-respecting append routes. */
+object ManifestSupport {
 
   /** CHECK constraints (S30, SQL semantics: NULL passes, only a FALSE
     * evaluation violates) enforced IN the write job — a per-row
@@ -201,14 +30,10 @@ object GraftManifestSource {
     }
   }
 
-  /** Append honoring the table's DECLARED cluster spec (S27): when one
-    * is set, the batch lands clustered on arrival whatever API carried
-    * it — a V1-alias writer must not quietly degrade the layout a
-    * catalog table declared. No spec = the plain single-dir append. */
   /** S47 — parse the per-write idempotence options (Delta's
     * txnAppId/txnVersion pair): both-or-neither, numeric version,
     * appId manifest-line-safe. Shared by the V2 write builder and the
-    * V1 alias so both surfaces validate identically. */
+    * `graft-manifest` SaveMode writer so both validate identically. */
   private[graft] def txnOf(opt: String => Option[String])
       : Option[(String, Long)] = {
     val app = opt("txnAppId").map(_.trim).filter(_.nonEmpty)
@@ -248,6 +73,10 @@ object GraftManifestSource {
       : Map[String, String] =
     txn.map { case (a, v) => s"txn:$a" -> v.toString }.toMap
 
+  /** Append honoring the table's DECLARED cluster spec (S27): when one
+    * is set, the batch lands clustered on arrival whatever API carried
+    * it — a `graft-manifest` writer must not quietly degrade the layout a
+    * catalog table declared. No spec = the plain single-dir append. */
   private[graft] def appendRespectingSpec(data0: DataFrame, dir: String,
                                             statsCols: Seq[String],
                                             retain: Int,
@@ -288,8 +117,8 @@ object GraftManifestSource {
   }
 
   /** The table's PERSISTED constraints (`prop:check.<name>` in `#meta`,
-    * the catalog's declared data contracts) applied to `data` — the V1
-    * write paths run this so an older-API writer cannot sidestep a
+    * the catalog's declared data contracts) applied to `data` — the
+    * streaming sinks run this so an older-API writer cannot sidestep a
     * contract the catalog declared. */
   private[graft] def withDeclaredChecks(data: DataFrame,
                                           dir: String): DataFrame =
@@ -300,8 +129,9 @@ object GraftManifestSource {
     * declared keys against this set at publish time and refuse when a
     * constraint appeared after the write job was built (the
     * ALTER-vs-write metadata race; Delta fails the same interleave
-    * with MetadataChangedException). */
-  /** `exemptWhen`: rows matching this predicate are NOT judged by the
+    * with MetadataChangedException).
+    *
+    * `exemptWhen`: rows matching this predicate are NOT judged by the
     * declared constraints — the delta-changeset path uses it for
     * delete records, whose null-filled data columns would otherwise
     * spuriously fail a non-null-propagating check (`v IS NOT NULL`)
@@ -504,11 +334,11 @@ object GraftManifestSource {
     * bounds widen to inclusive, IN folds to its envelope, OR and
     * unsupported filters contribute nothing.
     *
-    * `zone` must be the SESSION's `spark.sql.session.timeZone`: the
-    * manifest stats were rendered by cast-to-string in the writing
-    * session's zone, so pushed timestamp literals must render in the
-    * same zone or an exact-boundary dir mis-prunes. (The relation
-    * passes its session's zone; pinning UTC here would only agree
+    * `zone` must be the zone the stats were WRITTEN in
+    * ([[ManifestTable.statsZoneOf]]): the manifest stats were rendered
+    * by cast-to-string in the writing session's zone, so pushed
+    * timestamp literals must render in the same zone or an
+    * exact-boundary dir mis-prunes. (Pinning UTC here would only agree
     * with the stats because build.sbt pins the session to UTC — a
     * user overriding the session TZ would silently drop rows.) */
   private[graft] def boundsOf(filters: Seq[Filter],
@@ -619,214 +449,4 @@ object GraftManifestSource {
     if (micros == 0) base
     else base + "." + f"$micros%06d".reverse.dropWhile(_ == '0').reverse
   }
-}
-
-/** The row-level change feed between two retained versions, behind the
-  * same source (`option("readChangeFeed", true)
-  * .option("startingVersion", v)[.option("endingVersion", w)]`) — the
-  * Delta CDF consumption shape. A plain TableScan: CDC feeds are
-  * consumed whole by replication/audit consumers, so there is nothing
-  * for filter pushdown to win here; the diff itself already reads ONLY
-  * the commit dirs that differ between the versions
-  * ([[ManifestTable.changes]], inputFiles-asserted in MergeIntoSpec). */
-case class GraftChangesRelation(ctx: SQLContext, tableDir: String,
-                                fromV: Long, toV: Long)
-    extends BaseRelation with TableScan {
-  private lazy val feed: DataFrame =
-    ManifestTable.changes(ctx.sparkSession, tableDir, fromV, toV)
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = feed.schema
-  override def buildScan(): RDD[Row] = feed.rdd
-}
-
-/** One pinned version of a manifest table behind the V1 relation API. */
-case class GraftManifestRelation(ctx: SQLContext, tableDir: String,
-                                 version: Long,
-                                 statsCols: Seq[String] = Seq.empty,
-                                 retainGenerations: Int = 2)
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
-
-  /** SQL INSERT INTO / INSERT OVERWRITE on a `CREATE TABLE USING
-    * graft-manifest` table. The table's declared OPTIONS (statsCols,
-    * retainGenerations) apply to every INSERT — the DDL, not each
-    * statement, owns the table's stats policy, same as Delta table
-    * properties. The pinned `version` is a READ snapshot only; writes
-    * always land on the current head (append rebases via commitIf). */
-  override def insert(data0: DataFrame, overwrite: Boolean): Unit = {
-    // declared data contracts bind inside the routed write (S30) —
-    // each route binds exactly once and guards its own commit
-    if (overwrite)
-      GraftManifestSource.overwrite(data0, tableDir, statsCols,
-        retainGenerations)
-    else
-      GraftManifestSource.appendRespectingSpec(data0, tableDir, statsCols,
-        retainGenerations)
-    // Spark's FindDataSourceTable caches the resolved relation per
-    // catalog table; THIS relation pins a version, so without
-    // invalidation the next SELECT would keep serving the pre-insert
-    // snapshot. (External writers from another session still need
-    // REFRESH TABLE, same as parquet tables.)
-    ctx.sparkSession.sessionState.catalog.invalidateAllCachedTables()
-  }
-
-  private def spark: SparkSession = ctx.sparkSession
-
-  override def sqlContext: SQLContext = ctx
-
-  // metadata-only when the manifest declares a schema — relation
-  // creation (and SQL planning against it) must not open data files
-  override val schema: StructType =
-    ManifestTable.declaredSchemaOf(spark, tableDir, version).getOrElse(
-      ManifestTable.readVersion(spark, tableDir, version).schema)
-
-  /** Actual on-disk size of the pinned version's commit dirs. Without
-    * this a V1 relation reports spark.sql.defaultSizeInBytes (Long.Max
-    * scale), so a small manifest dim joined through the SQL surface
-    * would NEVER be auto-broadcast — the one optimizer decision that
-    * matters most for star joins. One file-listing pass at first use
-    * (lazy), no data I/O; a missing dir contributes 0 (it may be
-    * legitimately pruned at scan time). */
-  override lazy val sizeInBytes: Long = {
-    val fs = new org.apache.hadoop.fs.Path(tableDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    ManifestTable.pathsOf(fs, tableDir, version).map { p =>
-      try fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(tableDir, p)).getLength
-      catch { case _: java.io.IOException => 0L }
-    }.sum
-  }
-
-  /** Everything is re-applied by Spark above the scan — pruning below
-    * is I/O-only (see class doc). */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    // render pushed literals in the zone the stats were WRITTEN in
-    // (pinned by the first ts-stats writer), not this session's
-    val zone = ManifestTable.statsZoneOf(spark,
-      new org.apache.hadoop.fs.Path(tableDir)
-        .getFileSystem(spark.sessionState.newHadoopConf()),
-      tableDir, version)
-    val bounds = GraftManifestSource.boundsOf(filters.toSeq, zone)
-      .filter { case (c, _) => schema.fieldNames.contains(c) }
-    val base =
-      if (bounds.isEmpty) ManifestTable.readVersion(spark, tableDir, version)
-      else ManifestTable.rangeScan(spark, tableDir, bounds, Some(version))
-    val projected =
-      if (requiredColumns.isEmpty) base.select()
-      else base.select(requiredColumns.toIndexedSeq.map(
-        org.apache.spark.sql.functions.col): _*)
-    projected.rdd
-  }
-}
-
-/** X14 — the manifest table's CDC feed as a Structured Streaming
-  * SOURCE. Offsets are manifest VERSIONS (the same log positions X13
-  * uses); each micro-batch is the union of per-adjacent-version diff
-  * feeds in `(start, end]`, tagged `_commit_version` — an update
-  * arrives as delete(old image) + insert(new image), and a pure
-  * compaction contributes an EMPTY diff (old and new dirs cancel in
-  * the multiset), so maintenance never floods the consumer the way
-  * X13's `ignoreChanges` re-emission does.
-  *
-  * Exactly-once: versions in the checkpoint; re-planned batches diff
-  * the same immutable manifests. A restart whose checkpointed version
-  * is no longer RETAINED fails loudly naming the retention knobs — the
-  * diff needs the old manifest as its base (size `retainGenerations` /
-  * `minRetainMs` to the longest restart gap, the X13 rule).
-  *
-  * Scale: each batch costs only the dirs that CHANGED in its version
-  * steps; the steady-state tail is O(changes), never O(table). */
-private[sources] class GraftCdcSource(spark: SparkSession, dir: String,
-                                      floor: Long,
-                                      maxVersions: Option[Long] = None)
-    extends org.apache.spark.sql.execution.streaming.Source
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
-  import org.apache.spark.sql.execution.streaming.Offset
-  import org.apache.spark.sql.execution.streaming.runtime.{LongOffset, SerializedOffset}
-
-  private def fs = new org.apache.hadoop.fs.Path(dir)
-    .getFileSystem(spark.sessionState.newHadoopConf())
-
-  override val schema: StructType =
-    GraftMetaTables.changesSchemaOf(spark, dir)
-
-  private def versionOf(o: org.apache.spark.sql.connector.read.streaming.Offset)
-      : Long = o match {
-    case LongOffset(v) => v
-    case so: SerializedOffset => so.json.toLong
-    case other => other.json.toLong // every offset here is a version
-  }
-
-  // ---- admission control (X14): `maxVersionsPerTrigger` caps each
-  // micro-batch to n version-diff steps, so a long-stopped consumer
-  // drains its backlog in bounded batches instead of one giant union
-  // of every missed diff. Implemented on the engine's own
-  // SupportsAdmissionControl seam (the FileStreamSource shape): the
-  // engine hands this source its true position as `startOffset`, so
-  // pacing needs no side state and survives restarts by construction.
-  // ReadMaxRows carries the cap (the unit is version STEPS — the
-  // feed's atomic batch unit — not rows; the engine treats the limit
-  // as opaque and hands it back).
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersions.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
-
-  /** Trigger.AvailableNow (SupportsTriggerAvailableNow): pin the head
-    * at query start; the engine then loops bounded batches up to it. */
-  @volatile private var availableNowCap: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = ManifestTable.headVersion(spark, dir)
-
-  override def latestOffset(
-      startOffset: org.apache.spark.sql.connector.read.streaming.Offset,
-      limit: ReadLimit): org.apache.spark.sql.connector.read.streaming.Offset = {
-    val s = Option(startOffset).map(versionOf).getOrElse(floor)
-    val head0 = ManifestTable.headVersion(spark, dir).getOrElse(s)
-    val head = availableNowCap.fold(head0)(math.min(head0, _))
-    val capped = limit match {
-      case r: ReadMaxRows => math.min(head, s + r.maxRows())
-      case _ => head
-    }
-    LongOffset(math.max(s, capped))
-  }
-
-  override def reportLatestOffset()
-      : org.apache.spark.sql.connector.read.streaming.Offset =
-    ManifestTable.headVersion(spark, dir).map(LongOffset(_)).orNull
-
-  // legacy (non-admission) path — the head, unconditionally: `floor`
-  // must only bound a FRESH stream's first batch (getBatch's
-  // start=None case) — a source is RE-created on restart with a new
-  // floor, and filtering here would suppress batches the checkpointed
-  // offset is entitled to
-  override def getOffset: Option[Offset] =
-    ManifestTable.headVersion(spark, dir).map(LongOffset(_))
-
-  override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
-    val lo = start.map(versionOf).getOrElse(floor)
-    val hi = versionOf(end)
-    // the diff for version lo+1 needs version lo's manifest as its
-    // base. The only legitimate base OUTSIDE the retained set is the
-    // EMPTY pre-table (lo=0) — and only while version 1 itself is
-    // still retained (version numbers are dense, so a retained head
-    // above 1 means real history was GC'd and its changes are
-    // unrecoverable, not empty).
-    val vs = ManifestTable.versions(fs, dir)
-    require(lo >= hi || vs.contains(lo) || (lo == 0L && vs.headOption.contains(1L)),
-      s"stream offset version $lo is no longer retained at $dir — size " +
-        "retainGenerations/minRetainMs to cover the longest restart gap, " +
-        "or restart from a fresh checkpoint")
-    val feed = GraftMetaTables.changesFeedRange(spark, dir, lo, hi)
-    // the engine asserts isStreaming on the returned plan; the diff
-    // stays LAZY — toRdd builds the DAG, rows compute when the
-    // micro-batch runs (see StreamingShim for the seam rationale)
-    org.apache.spark.sql.graft.StreamingShim.streamingDataFrame(
-      spark, feed.queryExecution.toRdd, feed.schema)
-  }
-
-  override def stop(): Unit = ()
 }

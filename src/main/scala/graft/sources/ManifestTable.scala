@@ -1135,8 +1135,8 @@ object ManifestTable {
 
   /** Current head version, or None for an uncommitted/absent table —
     * the snapshot-pinning entry point for external access layers (the
-    * [[GraftManifestSource]] relation resolves this once at creation,
-    * so one SQL query sees one version throughout). */
+    * V2 [[GraftTableProvider]] resolves this once per table load, so
+    * one SQL query sees one version throughout). */
   def headVersion(spark: SparkSession, tableDir: String): Option[Long] =
     versions(fsOf(spark, tableDir), tableDir).lastOption
 
@@ -1258,7 +1258,7 @@ object ManifestTable {
     val (minted, idClaims) = assignIdentity(df, tableDir, fs,
       headHint = headV0)
     val (checked, boundChecks) =
-      GraftManifestSource.bindDeclaredChecks(minted, tableDir,
+      ManifestSupport.bindDeclaredChecks(minted, tableDir,
         headHint = headV0)
     // identity columns are always stats-tracked: the per-dir max IS
     // the watermark-advance input (and point lookups on ids prune)
@@ -1831,7 +1831,7 @@ object ManifestTable {
     // declared CHECK constraints bind here like on the plain append
     // path, with the same publish-time metadata-conflict guard
     val (checked, boundChecks) =
-      GraftManifestSource.bindDeclaredChecks(minted, tableDir,
+      ManifestSupport.bindDeclaredChecks(minted, tableDir,
         headHint = headV0)
     val statsCols2 = (statsCols ++ idClaims.map(_.logical)).distinct
     val cid = "ci-" + java.util.UUID.randomUUID().toString.take(8)
@@ -2673,7 +2673,7 @@ object ManifestTable {
       if (assignments.isEmpty) None
       else {
         val cid = "mu-" + java.util.UUID.randomUUID().toString.take(8)
-        val (checked, bc) = GraftManifestSource.bindDeclaredChecks(
+        val (checked, bc) = ManifestSupport.bindDeclaredChecks(
           matches.select(dataCols: _*), tableDir)
         boundChecks = bc
         val obs = org.apache.spark.sql.Observation()
@@ -2914,7 +2914,7 @@ object ManifestTable {
     // one seam for DELETE/UPDATE/MERGE instead of per-caller wrapping —
     // and the bound keyset arms the publish-time conflict guard below
     val (rewritten, boundChecks) =
-      GraftManifestSource.bindDeclaredChecks(rewrite(touchedDf), tableDir,
+      ManifestSupport.bindDeclaredChecks(rewrite(touchedDf), tableDir,
         recomputeGenerated = true)
     val kept = rewritten.observe(obs, aggs.head, aggs.tail: _*)
     writePhysical(kept, colMapOf(fs, tableDir, baseV))
@@ -3142,13 +3142,12 @@ object ManifestTable {
     * that either dimension alone rules out (the same conjunctive
     * semantics Delta applies across its per-file column stats). */
   def rangeScan(spark: SparkSession, tableDir: String,
-                bounds: Map[String, (String, String)],
-                version: Option[Long] = None): DataFrame = {
+                bounds: Map[String, (String, String)]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     require(bounds.nonEmpty, "rangeScan needs at least one bounded column")
     val fs = fsOf(spark, tableDir)
-    val v = version.getOrElse(versions(fs, tableDir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed manifest at $tableDir")))
+    val v = versions(fs, tableDir).lastOption.getOrElse(
+      throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
     // one manifest parse serves paths, stats, schema, colmap and masks
     val snap = snapshotOf(fs, tableDir, v)
     // type resolution is metadata-only when the manifest declares a

@@ -606,12 +606,13 @@ object Sources {
   }
 
   /** S20: the manifest table behind Spark's standard source API
-    * ([[GraftManifestSource]]) — a filtered read via
-    * `spark.read.format("graft-manifest")` whose pushed date predicate
-    * prunes to one commit dir of seven through the relation's
-    * filter→bounds→rangeScan path (deleted-dir-proven in
-    * GraftSourceSpec), with the price band left as residual work the
-    * re-applied exact filters handle. Oracle = the same predicates as
+    * ([[GraftManifestAlias]], the `graft-manifest` name of the V2
+    * provider) — a filtered read via `spark.read.format("graft-manifest")`
+    * whose pushed date predicate prunes to one commit dir of seven in
+    * the V2 scan's filter→bounds→stats path (deleted-dir-proven in
+    * GraftSourceSpec; planned as a columnar `BatchScanExec`), with the
+    * price band left as residual work the re-applied exact filters
+    * handle. Oracle = the same predicates as
     * plain SQL over orders: the interop surface must change WHERE the
     * rows are read, never WHICH rows come back. */
   def s20_source_pushdown(s: SparkSession, d: String): DataFrame = {

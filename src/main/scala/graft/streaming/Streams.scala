@@ -379,7 +379,7 @@ object Streams {
       // violating micro-batch fails BEFORE its manifest commit — the
       // checkpoint doesn't advance, so the stream surfaces the error
       // instead of quietly thinning
-      val guarded = graft.sources.GraftManifestSource
+      val guarded = graft.sources.ManifestSupport
         .withDeclaredChecks(b, tableDir)
       val spec = headV.flatMap(v =>
         graft.sources.ManifestTable.clusterSpecOf(fs, tableDir, v))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sources.{GraftManifestSource, ManifestTable}
+import graft.sources.{ManifestSupport, ManifestTable}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -25,7 +25,7 @@ class GraftSourceSpec extends SparkTestBase {
   private val utc = java.time.ZoneOffset.UTC
 
   test("filter -> bounds translation is conservative and typed") {
-    val b = GraftManifestSource.boundsOf(Seq(
+    val b = ManifestSupport.boundsOf(Seq(
       GreaterThanOrEqual("d", java.sql.Date.valueOf("1997-01-01")),
       LessThan("d", java.sql.Date.valueOf("1997-12-31")),
       EqualTo("k", 42L),
@@ -38,29 +38,29 @@ class GraftSourceSpec extends SparkTestBase {
     assert(b("v") == ("1.5", "3.5"))
     assert(!b.contains("name"))
     // numeric compare is numeric, not lexicographic: 9 < 10
-    val n = GraftManifestSource.boundsOf(Seq(
+    val n = ManifestSupport.boundsOf(Seq(
       GreaterThanOrEqual("k", 9L), LessThanOrEqual("k", 10L)), utc)
     assert(n("k") == ("9", "10"))
     // half-bounded columns contribute nothing (closed-interval contract)
-    assert(!GraftManifestSource.boundsOf(Seq(GreaterThan("k", 1L)), utc).contains("k"))
+    assert(!ManifestSupport.boundsOf(Seq(GreaterThan("k", 1L)), utc).contains("k"))
     // timestamp rendering matches the stats encoding (no trailing ".0")
-    val ts = GraftManifestSource.render(
+    val ts = ManifestSupport.render(
       java.time.Instant.parse("2024-01-01T10:00:00Z"), utc).get
     assert(ts == "2024-01-01 10:00:00", ts)
-    assert(GraftManifestSource.render(
+    assert(ManifestSupport.render(
       java.time.Instant.parse("2024-01-01T10:00:00.5Z"), utc).get
       == "2024-01-01 10:00:00.5")
     // the zone is honored, not silently pinned to UTC: one instant, two
     // FIXED-OFFSET zones, two renderings — each matching what
     // cast-to-string in a session pinned to that zone wrote into stats
     val instant = java.time.Instant.parse("2024-01-01T15:00:00Z")
-    assert(GraftManifestSource.render(instant, utc).get == "2024-01-01 15:00:00")
-    assert(GraftManifestSource.render(
+    assert(ManifestSupport.render(instant, utc).get == "2024-01-01 15:00:00")
+    assert(ManifestSupport.render(
       instant, java.time.ZoneOffset.ofHours(-5)).get == "2024-01-01 10:00:00")
     // DST zones DECLINE instant rendering: local-string order diverges
     // from instant order inside fall-back overlaps, so lexicographic
     // pruning there would be unsound — no bound, no pruning, correct
-    assert(GraftManifestSource.render(
+    assert(ManifestSupport.render(
       instant, java.time.ZoneId.of("America/New_York")).isEmpty)
   }
 
@@ -120,10 +120,36 @@ class GraftSourceSpec extends SparkTestBase {
       .filter(col("d") >= lit("1997-01-01") && col("d") <= lit("1997-12-31"))
     assert(pruned.count() == 10)
     assert(pruned.agg(sum(col("k"))).head.getLong(0) == (0 until 10).map(1997000L + _).sum)
-    // the unpruned full scan must now fail — proves the dir mattered
+    // the unpruned full scan must now fail — proves the dir mattered.
+    // (NOT .count(): the aggregate pushdown answers that from manifest
+    // stats without touching the deleted dir — by design.)
     intercept[Exception] {
-      spark.read.format("graft-manifest").load(dir).count()
+      spark.read.format("graft-manifest").load(dir).agg(sum(col("k"))).head
     }
+  }
+
+  test("graft-manifest reads plan as the columnar V2 BatchScanExec, never a Row scan") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.RowDataSourceScanExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      assert(helper.collect(plan) { case b: BatchScanExec => b }.nonEmpty, plan)
+      assert(helper.collect(plan) { case r: RowDataSourceScanExec => r }.isEmpty,
+        plan)
+    }
+    val dir = freshDir()
+    Seq(1995, 1996).foreach(y =>
+      batch(y).write.format("graft-manifest").option("statsCols", "d")
+        .mode(SaveMode.Append).save(dir))
+    val pruned = spark.read.format("graft-manifest").load(dir)
+      .filter(col("d") >= lit("1996-01-01") && col("d") <= lit("1996-12-31"))
+    assertColumnar(pruned)
+    assert(pruned.count() == 10)
+    val s20 = graft.sources.Sources.s20_source_pushdown(spark, sf)
+    assertColumnar(s20)
+    assert(s20.collect().length == 1)
   }
 
   test("snapshot pinning + versionAsOf time travel") {
@@ -159,10 +185,9 @@ class GraftSourceSpec extends SparkTestBase {
     ManifestTable.append(batch(1995), dir, statsCols = Seq("d"))
     val dim = spark.read.format("graft-manifest").load(dir)
     val rel = dim.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
     }.get
-    val sz = rel.sizeInBytes
+    val sz = rel.stats.sizeInBytes
     assert(sz > 0 && sz < (1L << 20), s"expected real small size, got $sz")
     // a fact × manifest-dim join must pick BroadcastHashJoin without hints
     val fact = spark.range(100000).selectExpr("id % 10000 AS k", "id AS payload")
@@ -303,9 +328,20 @@ class GraftSourceSpec extends SparkTestBase {
     batch(1996).write.format("graft-manifest").option("retainGenerations", 10)
       .option("statsCols", "d").mode(SaveMode.Append).save(dir)
     val v2 = ManifestTable.headVersion(spark, dir).get
+    // both short names serve the same feed, row for row
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def sameUnderGraft(feed: org.apache.spark.sql.DataFrame,
+                       opts: (String, Any)*): Unit = {
+      val viaGraft = opts.foldLeft(spark.read.format("graft")
+        .option("readChangeFeed", true)) { case (r, (k, v)) =>
+          r.option(k, v.toString) }.load(dir)
+      assert(rows(viaGraft) == rows(feed))
+    }
     val feed = spark.read.format("graft-manifest")
       .option("readChangeFeed", true).option("startingVersion", v1)
       .option("endingVersion", v2).load(dir)
+    sameUnderGraft(feed, "startingVersion" -> v1, "endingVersion" -> v2)
     val byType = feed.groupBy("change_type").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byType == Map("insert" -> 10L), byType)
@@ -319,6 +355,7 @@ class GraftSourceSpec extends SparkTestBase {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byType2 == Map("delete" -> 20L, "insert" -> 4L), byType2)
     assert(v3 > v2)
+    sameUnderGraft(feed2, "startingVersion" -> v2)
     // consuming through SQL works too (TableScan relation)
     feed2.createOrReplaceTempView("cdf")
     assert(spark.sql("SELECT count(*) FROM cdf WHERE change_type = 'insert'")
