@@ -143,14 +143,18 @@ object Curation {
     // that failed the stateless gates can never be an exact-dedup
     // survivor (f4 ⊆ f3), and a non-f4 row's sig only ever places it in
     // a near-dup partition where it contributes nothing to
-    // min(CASE WHEN f4 ...) and its own f5 is false && NULL = false
-    // either way. Null sigs group under the null partition, which holds
-    // no f4 rows — so every stage count is unchanged while only
-    // repetition-gate survivors pay the signature compute (the
-    // pipeline's dominant per-row cost). Proven against the ungated HOF
-    // form in CurationSpec.
+    // min(CASE WHEN f4 ...) and its own f5 is false either way. A
+    // gate failure takes a per-doc sentinel sig instead: a leading NUL
+    // no hex signature can carry, so it never joins a real sig's
+    // partition, and failures spread over their own singleton keys
+    // rather than piling every one of them into a single window
+    // partition (a NULL sig would, since NULLs hash alike). So every
+    // stage count is unchanged while only repetition-gate survivors
+    // pay the signature compute (the pipeline's dominant per-row
+    // cost). Proven against the ungated HOF form in CurationSpec.
     val enr = statelessGates(triCorpus(s, d))
-      .withColumn("sig", when(col("f3"), sig4(col("t"), col("text"))))
+      .withColumn("sig", when(col("f3"), sig4(col("t"), col("text")))
+        .otherwise(concat(lit("\u0000"), col("doc_id").cast("string"))))
     val wH = Window.partitionBy("h")
     val wS = Window.partitionBy("sig")
     val flagged = enr

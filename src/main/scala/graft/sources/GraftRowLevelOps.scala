@@ -12,6 +12,7 @@ import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Native row-level operations (S24–S26 via Spark's OWN DML rewrites):
@@ -507,8 +508,8 @@ class GraftPositionDeltaOperation(table: GraftTable, cmd: Command)
     Expressions.column(GraftRowLevel.PosCol))
 
   /** NO metadata attributes: the dv channel's per-commit-dir key is
-    * derived from the file path at commit time (a file's parent IS its
-    * commit dir). Requesting `_graft_dir` here would be wrong anyway —
+    * derived from the file path in the task writer (a file's parent IS
+    * its commit dir). Requesting `_graft_dir` here would be wrong anyway —
     * it declares PRESERVE_ON_DELETE=false for the group-CoW path, so
     * Spark's delta rewrite would nullify it in every delete record. */
   override def requiredMetadataAttributes(): Array[NamedReference] =
@@ -529,18 +530,23 @@ class GraftPositionDeltaOperation(table: GraftTable, cmd: Command)
 }
 
 /** The MoR delta write: executor task writers stage the changeset
-  * (delete records = (dir, file, pos); insert records = fresh row
-  * images), commit turns delete records into `_dv/<name>/d=<i>`
-  * position parquet and insert records into ONE fresh data dir, and
-  * publishes both through [[ManifestTable.publishMorDelta]] — the same
-  * commit (and the same conflict guards) the direct
-  * `deleteWhereMoR`/`updateWhereMoR` API uses. */
+  * (delete records = (file, pos); insert records = fresh row images)
+  * AND the deletion vectors — one `(path, pos)` parquet file per
+  * parent commit dir per task — and report per-marker record counts
+  * and their dv files in the commit messages. Commit therefore never
+  * re-reads the changeset to build masks: it moves exactly the
+  * message-named dv files into `_dv/<name>/d=<i>`, lands insert
+  * records into fresh data dirs, and publishes both through
+  * [[ManifestTable.publishMorDelta]] — the same commit (and the same
+  * conflict guards) the direct `deleteWhereMoR`/`updateWhereMoR` API
+  * uses. */
 class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
                               cmd: Command = Command.MERGE)
     extends DeltaWrite with DeltaBatchWrite {
 
   private val runId = java.util.UUID.randomUUID().toString.take(8)
   private val stageRel = s"rl-$runId/stage"
+  private val dvStageRel = s"rl-$runId/dv"
   private val pubRel = s"rl-$runId/pub"
 
   private def spark: SparkSession = SparkSession.active
@@ -565,13 +571,15 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
     val rowTypes = this.info.schema().fields.map(_.dataType)
     GraftPositionDeltaWriterFactory(s"${table.tableDir}/$stageRel",
       GraftTaskWriters.writeConf(spark, changesetSchema),
+      s"${table.tableDir}/$dvStageRel",
+      GraftTaskWriters.writeConf(spark, ManifestTable.DvSchema),
       rowMap, rowTypes, tableFields.length)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    import org.apache.spark.sql.functions.broadcast
     val dir = table.tableDir
-    val files = messages.collect { case m: GraftTaskCommit if m.rows > 0 => m }
+    val tasks = messages.collect { case m: GraftPositionDeltaCommit => m }
+    val files = tasks.map(_.changeset).filter(_.rows > 0)
     // staged artifacts OUTSIDE the rl-<runId> shell (_dv payloads,
     // pd-* image dirs, the staged _cdc feed) — deleted when the
     // publish never lands. publishMorDelta cleans them on its own
@@ -579,7 +587,6 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
     // raise_error mid-landImages used to leak them permanently
     // (r20 review find); deletes are idempotent either way.
     val stagedRels = scala.collection.mutable.ArrayBuffer.empty[String]
-    var csCached: Option[org.apache.spark.sql.DataFrame] = None
     try {
       if (files.isEmpty) return // no-op DML: nothing matched, nothing landed
       GraftTaskWriters.publishNamed(fs, new Path(dir, stageRel),
@@ -588,28 +595,23 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
         throw new IllegalStateException(s"no committed graft table at $dir"))
       val tableSchema = table.schema()
       val marker = col(GraftDeltaWrite.ChangeCol)
-      // persisted: the changeset feeds the kind counts, the dv join,
-      // both image landings, and the staged feed — uncached that is
-      // ~5 extra full reads of the staged parquet per MERGE (r20)
+      // the changeset is read only by what still needs row images: the
+      // image landings and the staged CDC feed
       val cs = spark.read.schema(changesetSchema).parquet(s"$dir/$pubRel")
-        .persist()
-      csCached = Some(cs)
-      // a file's PARENT is its commit dir — the dv channel's key
-      // (derived here rather than carried as a metadata column, see
-      // requiredMetadataAttributes)
-      // plain deletes (1) and update pre-images (2) both become masks;
-      // the `upd` flag keeps the per-record provenance for the feed
+      // per-marker record counts, summed over the tasks' messages
+      val kindCounts = (0 until 4).map(k => tasks.map(_.kinds(k)).sum)
+      // plain deletes (1) and update pre-images (2) both became masks
+      // in the task writers; the `upd` flag keeps the per-record
+      // provenance for the feed
       val deletes = cs.filter(marker.isin(1, 2)).select(
-        org.apache.spark.sql.functions.regexp_replace(
-          col(GraftRowLevel.FileCol), "/[^/]*$", "").as("__graft_parent"),
         col(GraftRowLevel.FileCol).as("path"),
         col(GraftRowLevel.PosCol).as("pos"),
         (marker === 2).as("upd"))
-      // touched dirs: the DISTINCT parent dirs among delete records —
-      // dir-granular metadata (bounded by the table's dir count), not
-      // row-scale data, so the collect is manifest-sized by nature
-      val parents = deletes.select(col("__graft_parent")).distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
+      // touched dirs: the parent dirs the tasks' dv files name — a
+      // file's PARENT is its commit dir (derived task-side rather than
+      // carried as a metadata column, see requiredMetadataAttributes)
+      val dvByParent = tasks.toSeq.flatMap(_.dvs).groupBy(_.parent)
+      val parents = dvByParent.keys.toSeq.sorted
       // parent (qualified URI) → the manifest's own relPath entry
       val parentToRel = ManifestTable.pathsOf(fs, dir, baseV).map(p =>
         fs.makeQualified(new Path(ManifestTable.absPath(dir, p)))
@@ -619,23 +621,16 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
           s"delta delete names $par, which is no commit dir of $dir@v$baseV")))
       val dvName = "dv-" + java.util.UUID.randomUUID().toString.take(8)
       val dvRel = s"${ManifestTable.DvDirName}/$dvName"
-      var counts = Map.empty[Int, Long]
-      if (touched.nonEmpty) {
-        stagedRels += dvRel
-        val ords = broadcast(spark.createDataFrame(
-          parents.zipWithIndex.map { case (p, i) => (p, i) })
-          .toDF("__graft_ord_dir", "d"))
-        deletes.join(ords, col("__graft_parent") === col("__graft_ord_dir"))
-          .select(col("path"), col("pos"), col("d")) // upd is feed-only
-          .write.partitionBy("d").parquet(s"$dir/$dvRel")
-        counts = spark.read
-          .schema(StructType(ManifestTable.DvSchema.fields :+
-            StructField("d", IntegerType)))
-          .parquet(s"$dir/$dvRel")
-          .groupBy("d").count().collect()
-          .map(r => r.getAs[Number]("d").intValue -> r.getAs[Long]("count"))
-          .toMap
-      }
+      if (touched.nonEmpty) stagedRels += dvRel
+      // the dv dir: exactly the message-named files of each parent move
+      // into d=<i> (ordinals in sorted parent order), so a straggler
+      // attempt's file never becomes a mask; counts sum the messages
+      val counts: Map[Int, Long] = parents.zipWithIndex.map { case (par, i) =>
+        val named = dvByParent(par)
+        GraftTaskWriters.publishNamed(fs, new Path(dir, dvStageRel),
+          new Path(dir, s"$dvRel/d=$i"), named.map(_.file))
+        i -> named.map(_.rows).sum
+      }.toMap
       // insert records → ONE fresh images dir, with the same
       // stats/CHECK treatment as every rewrite output
       val baseStats = ManifestTable.statsOf(fs, dir, baseV)
@@ -653,10 +648,8 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       // column, refused inside the contract binding). Two dirs land
       // (one per kind, empty ones skipped) so the CDC feed can tag
       // each image exactly.
-      // one tiny agg decides which image kinds exist at all — a pure
-      // DELETE must not pay two empty write jobs over the changeset
-      val kindCounts = cs.groupBy(marker).count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      // the message counts decide which image kinds exist at all — a
+      // pure DELETE must not pay two empty write jobs over the changeset
       val fresh = cs.filter(marker === 0)
         .select(tableSchema.fieldNames.toIndexedSeq.map(col): _*)
       val post = cs.filter(marker === 3)
@@ -666,7 +659,7 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       // the claims still thread (the watermark must advance past
       // explicit BY DEFAULT ids in update post-images)
       val freshSrc =
-        if (kindCounts.getOrElse(0, 0L) == 0L)
+        if (kindCounts(0) == 0L)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             org.apache.spark.sql.types.StructType(tableSchema.fields))
@@ -699,10 +692,10 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
           Some(ManifestTable.statsPayloadFrom(n, statsCols2, m))))
       }
       val cidFresh =
-        if (kindCounts.getOrElse(0, 0L) == 0L) None
+        if (kindCounts(0) == 0L) None
         else landImages(freshMinted)
       val cidPost =
-        if (kindCounts.getOrElse(3, 0L) == 0L) None
+        if (kindCounts(3) == 0L) None
         else landImages(post)
       val cids = cidFresh.toSeq ++ cidPost.toSeq
       if (counts.valuesIterator.sum == 0L && cids.isEmpty) {
@@ -715,7 +708,7 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       // mint DIFFERENT ids than were written). Tags are exact per
       // record now, for MERGE as much as UPDATE.
       val stagedCdc = ManifestTable.stageMorDeltaCdc(spark, dir, baseV,
-        touched, deletes.select(col("path"), col("pos"), col("upd")),
+        touched, deletes,
         cidFresh.map { case (c, _) =>
           ManifestTable.readDirs(spark, dir, baseV, Seq(c)) -> "insert"
         }.toSeq ++
@@ -739,7 +732,6 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
         catch { case _: java.io.IOException => () })
       throw t
     } finally {
-      csCached.foreach(_.unpersist(): Unit)
       fs.delete(new Path(dir, s"rl-$runId"), true): Unit
     }
   }
@@ -749,7 +741,8 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
 }
 
 case class GraftPositionDeltaWriterFactory(stageDir: String,
-    conf: SerializableConfiguration, rowMap: Array[Int],
+    conf: SerializableConfiguration, dvStageDir: String,
+    dvConf: SerializableConfiguration, rowMap: Array[Int],
     rowTypes: Array[DataType], nTable: Int)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int,
@@ -757,44 +750,92 @@ case class GraftPositionDeltaWriterFactory(stageDir: String,
     new GraftPositionDeltaTaskWriter(
       s"$stageDir/part-$partitionId-$taskId-" +
         java.util.UUID.randomUUID().toString.take(8) + ".snappy.parquet",
-      conf.value, rowMap, rowTypes, nTable)
+      conf.value, s"$dvStageDir/part-$partitionId-$taskId-" +
+        java.util.UUID.randomUUID().toString.take(8),
+      dvConf.value, rowMap, rowTypes, nTable)
 }
 
-/** One task's MoR changeset writer: delete records carry (dir, file,
-  * pos) from the operation's metadata/row-id projections; insert
-  * records carry the fresh row image. Rows are consumed synchronously
-  * by the parquet write support, so Spark's per-record row reuse is
-  * safe. */
+/** One deletion-vector file a task staged: the commit dir its
+  * positions mask (`_graft_file`'s parent, as a canonical URI), the
+  * file's name in the dv staging dir, and its position-record count. */
+case class GraftDvFile(parent: String, file: String, rows: Long)
+
+/** A MoR task's commit message: its changeset file, its record count
+  * per changeset marker (0–3), and the dv files it wrote — everything
+  * the driver commit needs, so it never re-reads the changeset. */
+case class GraftPositionDeltaCommit(changeset: GraftTaskCommit,
+                                    kinds: Seq[Long], dvs: Seq[GraftDvFile])
+    extends WriterCommitMessage
+
+/** One task's MoR changeset writer: delete records carry (file, pos)
+  * from the operation's row-id projection; insert records carry the
+  * fresh row image. Every delete/update pre-image also lands as a
+  * `(path, pos)` deletion-vector record in one lazily opened
+  * [[ManifestTable.DvSchema]] file per parent commit dir, so the
+  * commit publishes the masks by moving files. Rows are consumed
+  * synchronously by the parquet write support, so Spark's per-record
+  * row reuse is safe. */
 class GraftPositionDeltaTaskWriter(path: String,
-    conf: org.apache.hadoop.conf.Configuration, rowMap: Array[Int],
+    conf: org.apache.hadoop.conf.Configuration, dvPrefix: String,
+    dvConf: org.apache.hadoop.conf.Configuration, rowMap: Array[Int],
     rowTypes: Array[DataType], nTable: Int)
     extends DeltaWriter[InternalRow] {
 
   private val inner = new GraftTaskWriter(path, conf)
   private val markerOrd = nTable + 2
+  private val kinds = new Array[Long](4)
+  // parent commit dir → its dv writer, in first-seen order
+  private val dvWriters =
+    scala.collection.mutable.LinkedHashMap.empty[String, GraftTaskWriter]
+  // consecutive records mostly share a file: skip the parent lookup then
+  private var lastFile: UTF8String = _
+  private var lastDv: GraftTaskWriter = _
+  private val dvRow = new GenericInternalRow(2)
 
   private def emit(marker: Int)(fill: GenericInternalRow => Unit): Unit = {
     val out = new GenericInternalRow(markerOrd + 1)
     fill(out)
     out.update(markerOrd, marker)
     inner.write(out)
+    kinds(marker) += 1
   }
 
-  override def delete(metadata: InternalRow, id: InternalRow): Unit =
-    emit(1) { out =>
-      out.update(nTable, id.get(0, StringType))           // _graft_file
-      out.update(nTable + 1,
-        id.get(1, org.apache.spark.sql.types.LongType))   // _graft_pos
+  /** A delete/update pre-image: the changeset record plus its mask
+    * entry in the dv file of the row's commit dir (the file path minus
+    * its last `/segment`). */
+  private def retire(marker: Int, id: InternalRow): Unit = {
+    val file = id.getUTF8String(0)
+    val pos = id.getLong(1)
+    emit(marker) { out =>
+      out.update(nTable, file)     // _graft_file
+      out.update(nTable + 1, pos)  // _graft_pos
     }
+    if (lastFile == null || lastFile != file) {
+      val f = file.toString
+      val cut = f.lastIndexOf('/')
+      val parent = if (cut < 0) f else f.substring(0, cut)
+      lastDv = dvWriters.getOrElseUpdate(parent, new GraftTaskWriter(
+        s"$dvPrefix-${dvWriters.size}.snappy.parquet", dvConf))
+      lastFile = file.clone()
+    }
+    dvRow.update(0, file)
+    dvRow.update(1, pos)
+    lastDv.write(dvRow)
+  }
 
-  override def insert(row: InternalRow): Unit =
-    emit(0) { out =>
+  private def image(marker: Int, row: InternalRow): Unit =
+    emit(marker) { out =>
       var i = 0
       while (i < rowMap.length) {
         out.update(rowMap(i), row.get(i, rowTypes(i)))
         i += 1
       }
     }
+
+  override def delete(metadata: InternalRow, id: InternalRow): Unit =
+    retire(1, id)
+
+  override def insert(row: InternalRow): Unit = image(0, row)
 
   /** An UPDATE decomposes into a pre-image position record and a
     * post-image row record under their OWN markers (2/3, vs delete's 1
@@ -802,22 +843,22 @@ class GraftPositionDeltaTaskWriter(path: String,
     * unrelated delete+insert pair, per record. */
   override def update(metadata: InternalRow, id: InternalRow,
                       row: InternalRow): Unit = {
-    emit(2) { out =>
-      out.update(nTable, id.get(0, StringType))           // _graft_file
-      out.update(nTable + 1,
-        id.get(1, org.apache.spark.sql.types.LongType))   // _graft_pos
-    }
-    emit(3) { out =>
-      var i = 0
-      while (i < rowMap.length) {
-        out.update(rowMap(i), row.get(i, rowTypes(i)))
-        i += 1
-      }
-    }
+    retire(2, id)
+    image(3, row)
   }
 
-  override def commit(): WriterCommitMessage = inner.commit()
-  override def abort(): Unit = inner.abort()
+  override def commit(): WriterCommitMessage =
+    GraftPositionDeltaCommit(inner.commit().asInstanceOf[GraftTaskCommit],
+      kinds.toSeq, dvWriters.toSeq.map { case (parent, w) =>
+        val m = w.commit().asInstanceOf[GraftTaskCommit]
+        GraftDvFile(parent, new Path(m.file).getName, m.rows)
+      })
+
+  override def abort(): Unit = {
+    inner.abort()
+    dvWriters.valuesIterator.foreach(_.abort())
+  }
+
   override def close(): Unit = inner.close()
 }
 

@@ -575,17 +575,22 @@ object ManifestTable {
     }
 
   /** Total position records across a version's dvs = the EXACT
-    * masked-row count. Exactness rests on a protocol invariant every
-    * dv writer upholds: stacked entries of one dir are pairwise
-    * position-disjoint, because (a) both mask producers
-    * ([[deleteWhereMoR]]/[[morRewrite]]'s anti-join and the S43 delta
-    * scan) compute new positions against
-    * the BASE version's LOGICAL rows — already-masked positions can
-    * never re-enter a changeset — and (b) [[publishMorDelta]] aborts
-    * (no retry) when a touched dir's dv advanced past the base, so no
-    * concurrent writer can stack a mask computed against other masks.
-    * S21's metadata-only COUNT(*) under masks and the V2 scan's
-    * reported statistics both lean on this arithmetic. */
+    * masked-row count. Exactness rests on two protocol invariants
+    * every dv writer upholds. First, each entry's `@<rows>` is the
+    * exact record count of its `d=<i>` dataset: [[morRewrite]]
+    * observes it on the dv write itself, and the S43 SQL delta write
+    * (GraftPositionDeltaWrite) sums the per-file counts its task
+    * writers report for exactly the files it moves into `d=<i>`.
+    * Second, stacked entries of one dir are pairwise position-disjoint,
+    * because (a) both mask producers ([[deleteWhereMoR]]/
+    * [[morRewrite]]'s anti-join and the S43 delta task writers, fed by
+    * the delta scan) compute new positions against the BASE version's
+    * LOGICAL rows — already-masked positions can never re-enter a
+    * changeset — and (b) [[publishMorDelta]] aborts (no retry) when a
+    * touched dir's dv advanced past the base, so no concurrent writer
+    * can stack a mask computed against other masks. S21's
+    * metadata-only COUNT(*) under masks and the V2 scan's reported
+    * statistics both lean on this arithmetic. */
   private[graft] def dvDeletedRows(dv: Map[String, String]): Long =
     dv.valuesIterator.flatMap(dvEntries(_).map(_._2)).sum
 
@@ -2589,7 +2594,7 @@ object ManifestTable {
                          assignments: Seq[(String, org.apache.spark.sql.Column)],
                          bounds: Map[String, (String, String)],
                          retainGenerations: Int): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
     val fs = fsOf(spark, tableDir)
     require(!fs.exists(new Path(tableDir, MergeInto.KeyMarker)),
       s"$tableDir is a bucketed merge table — its DML is the O(changeset) " +
@@ -2641,18 +2646,19 @@ object ManifestTable {
     val matches = live.filter(coalesce(cond, lit(false)))
     val dvName = "dv-" + java.util.UUID.randomUUID().toString.take(8)
     val dvRel = s"$DvDirName/$dvName"
-    matches.select(col("__graft_file").as("path"),
+    // per-dir position counts observed on the dv write itself — one
+    // count per touched ordinal, so nothing re-reads the files just
+    // written
+    val dvObs = org.apache.spark.sql.Observation()
+    val dvRows = matches.select(col("__graft_file").as("path"),
         col("__graft_pos").as("pos"), col("__graft_dv_d").as("d"))
+    val dvCounts = touched.indices.map(i =>
+      count(when(col("d") === i, 1)).as(s"d$i"))
+    dvRows.observe(dvObs, dvCounts.head, dvCounts.tail: _*)
       .write.partitionBy("d").parquet(s"$tableDir/$dvRel")
-    // per-dir position counts from the tiny files just written
-    // (explicit schema: a zero-match job leaves no file to infer from)
-    val counts: Map[Int, Long] = spark.read
-      .schema(org.apache.spark.sql.types.StructType(DvSchema.fields :+
-        org.apache.spark.sql.types.StructField("d",
-          org.apache.spark.sql.types.IntegerType)))
-      .parquet(s"$tableDir/$dvRel")
-      .groupBy("d").count().collect()
-      .map(r => r.getAs[Number]("d").intValue -> r.getAs[Long]("count")).toMap
+    val observed = dvObs.get
+    val counts: Map[Int, Long] = touched.indices.map(i =>
+      i -> observed(s"d$i").asInstanceOf[Long]).toMap
     if (counts.valuesIterator.sum == 0L) {
       fs.delete(new Path(tableDir, dvRel), true)
       return baseV // nothing matched

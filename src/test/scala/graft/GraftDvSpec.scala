@@ -227,6 +227,108 @@ class GraftDvSpec extends SparkTestBase {
       "rows >= 30 unmatched by source must be masked out")
   }
 
+  /** Spark jobs `body` starts, counted by a listener over a drained
+    * bus (nothing before `body` leaks in, nothing of it is missed). */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("SQL MoR DELETE runs no job past its write; UPDATE only lands its images") {
+    val dir = fourDirTable("m13")
+    // non-translatable conditions (k % 5): both ride the position delta
+    val del = jobsOf(spark.sql("DELETE FROM gdv.lake.m13 WHERE k % 5 = 0"))
+    val upd = jobsOf(spark.sql("UPDATE gdv.lake.m13 SET v = 'UP' WHERE k % 5 = 1"))
+    // the task writers emit the masks and the commit messages carry
+    // every count: past the statement's own write job, the DELETE
+    // commit needs no job at all, the UPDATE commit one (landing its
+    // post-images)
+    assert(del <= 1, s"SQL MoR DELETE ran $del jobs")
+    assert(upd <= 2, s"SQL MoR UPDATE ran $upd jobs")
+    val all = (0 until 20).map(b => b / 5 * 10 + b % 5)
+    assert(ks("gdv.lake.m13") == all.filter(_ % 5 != 0))
+    assert(spark.table("gdv.lake.m13").where(col("v") === "UP")
+      .collect().map(_.getInt(0)).sorted.toSeq == all.filter(_ % 5 == 1))
+    val head = ManifestTable.headVersion(spark, dir).get
+    assert(ManifestTable.dvDeletedRows(ManifestTable.dvOf(fs, dir, head)) == 8L)
+  }
+
+  test("every dv entry's row count is its exact position-record count") {
+    // the lemma dvDeletedRows and S21's metadata-only COUNT(*) rest on,
+    // with one commit dir's files split across several scan tasks — so
+    // one dir's masks come from several task writers
+    val maxPart = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    val openCost = spark.conf.get("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    spark.conf.set("spark.sql.files.openCostInBytes", "1024")
+    try {
+      wh: Unit
+      val t = "gdv.lake.m14"
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k INT, v STRING) " +
+        "TBLPROPERTIES ('statsCols'='k', 'retainGenerations'='10', " +
+        "'dml.mode'='merge-on-read')")
+      (0 until 4).foreach { b =>
+        spark.sql(s"INSERT INTO $t SELECT /*+ REPARTITION(3) */ " +
+          s"CAST(id AS INT) AS k, concat('v', id) AS v " +
+          s"FROM range(${b * 1000}, ${b * 1000 + 300})")
+      }
+      val dir = s"$wh/lake/m14"
+      def checkEntries(stmt: String): Unit = {
+        val head = ManifestTable.headVersion(spark, dir).get
+        val dv = ManifestTable.dvOf(fs, dir, head)
+        assert(dv.nonEmpty, s"$stmt left no masks")
+        dv.valuesIterator.flatMap(ManifestTable.dvEntries).foreach {
+          case (dvDir, n) =>
+            val recs = spark.read.schema(ManifestTable.DvSchema)
+              .parquet(ManifestTable.absPath(dir, dvDir)).count()
+            assert(recs == n, s"after $stmt: $dvDir@$n holds $recs records")
+        }
+        val full = spark.table(t).collect().length.toLong
+        assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == full,
+          s"after $stmt: metadata count disagrees with the full scan")
+      }
+      spark.sql(s"DELETE FROM $t WHERE k % 5 = 0")
+      // the scenario under test: some dir's masks came from >= 2 tasks
+      val head = ManifestTable.headVersion(spark, dir).get
+      val dvFiles = ManifestTable.dvOf(fs, dir, head).valuesIterator
+        .flatMap(ManifestTable.dvEntries).map { case (d, _) =>
+          fs.listStatus(new Path(ManifestTable.absPath(dir, d)))
+            .count(_.getPath.getName.endsWith(".parquet")) }.toSeq
+      assert(dvFiles.exists(_ >= 2),
+        s"no commit dir was split across scan tasks: $dvFiles")
+      checkEntries("DELETE")
+      spark.sql(s"UPDATE $t SET v = 'UP' WHERE k % 5 = 1")
+      checkEntries("UPDATE")
+      spark.sql(
+        s"""MERGE INTO $t t
+           |USING (SELECT CAST(id AS INT) AS k, 'M' AS v FROM range(0, 4000)
+           |       WHERE id % 5 = 2) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET t.v = s.v
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      checkEntries("MERGE")
+      // 1200 rows, 240 deleted; of the merge's 800 keys with k % 5 = 2,
+      // 240 match standing rows and 560 insert
+      assert(spark.table(t).count() == 1200L - 240L + 560L)
+    } finally {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", maxPart)
+      spark.conf.set("spark.sql.files.openCostInBytes", openCost)
+    }
+  }
+
   test("SQL position-delta UPDATE on a shallow CLONE: masks land in the clone, source untouched") {
     val dir = fourDirTable("m14")
     val target = s"$wh/lake/m14c"
