@@ -978,7 +978,11 @@ case class GraftScanBuilder(tableDir: String, version: Long,
   * or a pruned parquet file scan through Spark's own vectorized V2
   * parquet reader factory. Mutable `keptPaths` is the runtime-filter
   * seam: Spark may call [[filter]] with join-derived predicates (DPP
-  * shape) before planning partitions. */
+  * shape) before planning partitions. The reader factory is built once
+  * per planned-dir set ([[createReaderFactory]] memoizes it, keyed on
+  * [[plannedPaths]]; the aggregate answer keys on the empty set), so a
+  * masked scan loads its masks and broadcasts its confs once per query,
+  * and a runtime filter that narrows the dirs gets a fresh factory. */
 class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
                 requiredSchema: StructType, filters: Array[Filter],
                 agg: Option[(StructType, InternalRow)],
@@ -1249,7 +1253,20 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
       else GraftParquetRead.packPartitions(spark, listFiles(spark))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = agg match {
+  /** The factory last built, with the planned dirs it was built for. */
+  @transient private var factoryMemo: (Seq[String], PartitionReaderFactory) =
+    null
+
+  /** Memoized (see the class doc): every `BatchScanExec` copy between
+    * the physical and the executed plan asks for its own factory. */
+  override def createReaderFactory(): PartitionReaderFactory = synchronized {
+    val key = if (agg.isDefined) Seq.empty else plannedPaths
+    if (factoryMemo == null || factoryMemo._1 != key)
+      factoryMemo = (key, buildReaderFactory())
+    factoryMemo._2
+  }
+
+  private def buildReaderFactory(): PartitionReaderFactory = agg match {
     case Some(_) => GraftAggReaderFactory
     case None =>
       // GROUP mode must return EVERY row of a surviving dir — rows the
@@ -1291,7 +1308,6 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
         val masksOpt =
           if (dirty.isEmpty) Some(Map.empty[String, Array[Long]])
           else DvStore.tryReadPositions(conf, dvDirs)
-        val masks = masksOpt.getOrElse(Map.empty)
         // nullable, like Spark's own ROW_INDEX_FIELD: the reader's
         // missing-column check throws for required absent columns; the
         // row-index generator recognizes the name and fills positions
@@ -1311,15 +1327,15 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
         val bound = ((0 until nData) ++
           partSchema.fields.indices.map(nData + 1 + _) ++
           (if (emitPos) Seq(nData) else Seq.empty)).toArray
-        GraftDvReaderFactory(base, ext, masks,
-          driverLoaded = masksOpt.isDefined,
-          // BROADCAST, not a per-task closure field: the Configuration
-          // serializes to tens of KB and is only read by the executor-
-          // side mask fallback — shipping it with every task of a
-          // 100k-task scan is pure overhead (r19 review find; the
-          // parquet factories broadcast theirs the same way)
-          spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
-          nData, bound,
+        // BROADCAST, not a per-task closure field: the Configuration
+        // serializes to tens of KB — and only when the driver declined
+        // the masks, the one case a reader reads it
+        val fallbackConf =
+          if (masksOpt.isDefined) None
+          else Some(spark.sparkContext.broadcast(
+            new SerializableConfiguration(conf)))
+        GraftDvReaderFactory(base, ext, masksOpt.getOrElse(Map.empty),
+          fallbackConf, nData, bound,
           outFields.map(_.dataType), outFields.map(_.nullable), emitPos)
       }
   }
@@ -1501,11 +1517,13 @@ class GraftDvFilePartition(idx: Int, partFiles: Array[PartitionedFile],
   * (or surface it as `_graft_pos` when the scan asked for positions —
   * the MoR delta-DML row id). Every other partition delegates to the
   * plain factory, except that pos-emitting scans route ALL partitions
-  * through `ext`. Masks ship from the driver when they fit the cap
-  * (`driverLoaded`, one read for the whole scan); otherwise each
-  * reader loads its own file's positions from its partition's dv
-  * dirs — per-task I/O bounded by one commit dir's masks, scale
-  * bounded by nothing.
+  * through `ext`. Masks ship from the driver in `masks` when they fit
+  * the cap (`conf` = None, one read for the whole scan); otherwise
+  * `conf` carries the broadcast Hadoop conf and each reader loads its
+  * own file's positions from its partition's dv dirs through it —
+  * per-task I/O bounded by one commit dir's masks, scale bounded by
+  * nothing. The conf is broadcast only in that fallback (and always
+  * for the streaming read, which never loads masks on the driver).
   *
   * Columnar: supported whenever both parquet factories support it and
   * no positions are being emitted. Clean partitions serve Spark's own
@@ -1516,17 +1534,18 @@ class GraftDvFilePartition(idx: Int, partFiles: Array[PartitionedFile],
   * until the next compaction. */
 case class GraftDvReaderFactory(clean: PartitionReaderFactory,
     ext: PartitionReaderFactory, masks: Map[String, Array[Long]],
-    driverLoaded: Boolean,
-    conf: org.apache.spark.broadcast.Broadcast[SerializableConfiguration],
+    conf: Option[org.apache.spark.broadcast.Broadcast[
+      SerializableConfiguration]],
     rowIdxOrd: Int, boundOrds: Array[Int],
     outTypes: Array[DataType], outNullable: Array[Boolean],
     emitPos: Boolean = false)
     extends PartitionReaderFactory {
 
-  private def maskOf(d: GraftDvFilePartition): Array[Long] =
-    if (driverLoaded) masks.getOrElse(d.fileKey, Array.emptyLongArray)
-    else DvStore.positionsForFile(conf.value.value,
+  private def maskOf(d: GraftDvFilePartition): Array[Long] = conf match {
+    case None => masks.getOrElse(d.fileKey, Array.emptyLongArray)
+    case Some(c) => DvStore.positionsForFile(c.value.value,
       d.dvDirs.map(new Path(_)), d.fileKey)
+  }
 
   private def filteredRows(inner: PartitionReader[InternalRow],
                            mask: Array[Long]): PartitionReader[InternalRow] =
@@ -2202,9 +2221,9 @@ class GraftMicroBatchStream(tableDir: String, tableSchema: StructType,
       ManifestTable.toPhysical(tableSchema, cmap), extSchema,
       GraftFilterXlate.toPhysical(filters, cmap))
     val nData = requiredSchema.length
-    GraftDvReaderFactory(base, ext, Map.empty, driverLoaded = false,
-      spark.sparkContext.broadcast(new SerializableConfiguration(
-        spark.sessionState.newHadoopConf())),
+    GraftDvReaderFactory(base, ext, Map.empty,
+      Some(spark.sparkContext.broadcast(new SerializableConfiguration(
+        spark.sessionState.newHadoopConf()))),
       rowIdxOrd = nData, boundOrds = (0 until nData).toArray,
       outTypes = requiredSchema.fields.map(_.dataType),
       outNullable = requiredSchema.fields.map(_.nullable))

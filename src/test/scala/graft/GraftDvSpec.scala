@@ -414,6 +414,90 @@ class GraftDvSpec extends SparkTestBase {
     dir: Unit
   }
 
+  test("a masked scan builds its reader factory once per query") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    // the scan node of the physical plan and the one that executes are
+    // distinct copies; each asks the scan for its factory, and building
+    // one loads the masks and broadcasts the Hadoop confs
+    def scans(t: String): (BatchScanExec, BatchScanExec) = {
+      val qe = spark.table(t).queryExecution
+      val planned = qe.sparkPlan.collect { case b: BatchScanExec => b }
+      qe.executedPlan.executeCollect(): Unit
+      val executed = (qe.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }).collect { case b: BatchScanExec => b }
+      assert(planned.size == 1 && executed.size == 1,
+        s"one scan expected in:\n${qe.executedPlan}")
+      (planned.head, executed.head)
+    }
+    fourDirTable("m16")
+    spark.sql("DELETE FROM gdv.lake.m16 WHERE k = 12")
+    fourDirTable("m17")
+    Seq("gdv.lake.m16" -> true, "gdv.lake.m17" -> false).foreach {
+      case (t, masked) =>
+        val (planned, executed) = scans(t)
+        assert(planned.readerFactory.isInstanceOf[
+          graft.sources.GraftDvReaderFactory] == masked, t)
+        assert(planned.readerFactory eq executed.readerFactory,
+          s"$t: the scan built its reader factory twice")
+    }
+    assert(ks("gdv.lake.m16") ==
+      (0 until 20).map(b => b / 5 * 10 + b % 5).filter(_ != 12))
+  }
+
+  test("runtime group filtering that narrows away every masked dir keeps the masks") {
+    wh: Unit
+    val t = "gdv.lake.m18"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k INT, v STRING) " +
+      "TBLPROPERTIES ('statsCols'='k', 'retainGenerations'='10', " +
+      "'dml.mode'='merge-on-read')")
+    spark.sql(s"INSERT INTO $t VALUES " +
+      (0 until 5).map(k => s"($k,'v$k')").mkString(","))
+    spark.sql(s"INSERT INTO $t VALUES " +
+      (10 until 15).map(k => s"($k,'v$k')").mkString(","))
+    val dir = s"$wh/lake/m18"
+    spark.sql(s"DELETE FROM $t WHERE k = 2")
+    // from here on DML rewrites whole dirs (copy-on-write); the masked
+    // dir holds no match, so runtime group filtering must narrow it
+    // away and leave it — and its mask — standing
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('dml.mode'='copy-on-write')")
+    val dv0 = ManifestTable.dvOf(fs, dir,
+      ManifestTable.headVersion(spark, dir).get)
+    assert(dv0.size == 1, s"one masked dir: $dv0")
+    def checkMasks(stmt: String, clean: String): Unit = {
+      val head = ManifestTable.headVersion(spark, dir).get
+      assert(ManifestTable.dvOf(fs, dir, head) == dv0,
+        s"after $stmt the pre-existing masks changed")
+      val live = ManifestTable.livePaths(fs, dir)
+      assert(live.contains(dv0.keys.head),
+        s"after $stmt the masked dir was rewritten")
+      assert(!live.contains(clean), s"$stmt did not rewrite the clean dir")
+    }
+    def cleanDir(): String =
+      ManifestTable.livePaths(fs, dir).filterNot(dv0.contains).head
+    // join condition and k * 2 = 26 are not stats-translatable: only
+    // the runtime group filter can prune the masked dir
+    val clean0 = cleanDir()
+    spark.sql(
+      s"""MERGE INTO $t t
+         |USING (SELECT * FROM VALUES (11, 'M') AS s(k, v)) s
+         |ON t.k = s.k
+         |WHEN MATCHED THEN UPDATE SET t.v = s.v""".stripMargin)
+    checkMasks("MERGE", clean0)
+    val clean1 = cleanDir()
+    spark.sql(s"UPDATE $t SET v = 'U' WHERE k * 2 = 26")
+    checkMasks("UPDATE", clean1)
+    val expect = ((0 until 5) ++ (10 until 15)).filter(_ != 2)
+      .map(k => k -> (if (k == 11) "M" else if (k == 13) "U" else s"v$k"))
+      .toMap
+    assert(spark.table(t).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap == expect)
+    assert(spark.sql(s"SELECT count(*) FROM $t").head.getLong(0) == 9L)
+  }
+
   test("compaction materializes masks away; GC sweeps the dv dirs") {
     val dir = fourDirTable("m5")
     spark.sql("DELETE FROM gdv.lake.m5 WHERE k IN (2, 12)")
