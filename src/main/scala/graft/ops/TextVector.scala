@@ -238,10 +238,7 @@ object TextVector {
   private def l2sq(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.l2_squared(a, b)
 
-  private def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorFunctions.cosine_sim(a, b)
-
-  /** Precomputed-norm cosine — bit-identical to `cosine(a, b)`: the
+  /** Precomputed-norm cosine — bit-identical to `cosine_sim(a, b)`: the
     * fused kernel evaluates dot / (sqrt(na) * sqrt(nb)) and this form
     * keeps exactly that operand order (sqrt of the self-dot, then
     * na*nb, then the division), while each side's norm is computed

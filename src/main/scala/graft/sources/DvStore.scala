@@ -11,11 +11,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** S41 — deletion-vector position loading for the V2 scan.
   *
-  * The DataFrame read surfaces apply masks as a distributed anti-join
-  * (ManifestTable.readMasked); the V2 scan instead filters row
-  * positions INSIDE its partition readers, which needs the positions
-  * on the driver at plan time — the same move Delta makes (DV
-  * descriptors load driver-side and ship with the scan). The dv files
+  * Every read surface — SQL, the DataFrame API, and the engine's own
+  * internal reads (ManifestTable.readMasked) — is the V2 scan, which
+  * filters row positions INSIDE its partition readers
+  * ([[GraftDvReaderFactory]], the one masking implementation). That
+  * needs the positions on the driver at plan time — the same move
+  * Delta makes (DV descriptors load driver-side and ship with the
+  * scan). The dv files
   * are small by the feature's contract (deletion vectors serve
   * SELECTIVE deletes; bulk deletes take the copy-on-write path and
   * compaction materializes accumulated masks away), and the loader
@@ -36,9 +38,9 @@ private[sources] object DvStore {
   /** Positions per data-file key, loaded from `dvDirs` (each a
     * `_dv/<name>/d=<i>` parquet dataset of (path, pos)). Keys and the
     * probe side are both normalized through `Path.toString`, so the
-    * `file:///x` vs `file:/x` rendering difference between
-    * `_metadata.file_path` and a listed `FileStatus` path can never
-    * miss. Arrays come back SORTED for the readers' pointer walk.
+    * `file:///x` vs `file:/x` rendering difference between dv files
+    * staged from `_metadata.file_path` (older writers) and a listed
+    * `FileStatus` path can never miss. Arrays come back SORTED for the readers' pointer walk.
     * None = the scan's masks exceed `cap` positions — the caller falls
     * back to per-reader EXECUTOR-side loading instead of inching the
     * driver toward an OOM. */

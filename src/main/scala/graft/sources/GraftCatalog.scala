@@ -225,15 +225,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   private def tableAt(ident: Identifier, dir: String, v: Long): GraftTable = {
-    val vMeta = ManifestTable.metaOf(fs, dir, v)
+    val snap = ManifestTable.snapshotOf(fs, dir, v)
+    val vMeta = snap.meta
     // S48: default metadata rides the served schema — Spark's INSERT
     // resolution reads CURRENT_DEFAULT from here, and the scan's
     // required schema carries EXISTS_DEFAULT down to the parquet
     // readers (which fill missing columns with the frozen constant)
     val schema = ManifestTable.withDefaults(
-      ManifestTable.declaredSchemaOf(spark, dir, v)
-        .getOrElse(ManifestTable.readVersion(spark, dir, v).schema),
-      vMeta, ManifestTable.colMapOf(fs, dir, v))
+      ManifestTable.schemaAt(spark, dir, snap), vMeta, snap.cmap)
     val props = vMeta.collect {
       case (k, value) if k.startsWith(PropPrefix) =>
         k.stripPrefix(PropPrefix) -> value
@@ -801,7 +800,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       (Some(ManifestTable.cleanDdl(f(old))), ManifestTable.metaOf(fs, dir, head), identity)
     }
 
-  private def alterHead(dir: String, validate: Long => Unit = _ => ())(
+  private def alterHead(dir: String, validate: Long => Unit)(
       f: Long => (Option[String], Map[String, String])): Unit =
     alterFull(dir, validate) { head =>
       val (ddl, meta) = f(head)

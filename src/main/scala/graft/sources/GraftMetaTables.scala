@@ -71,8 +71,7 @@ object GraftMetaTables {
                             dir: String): StructType = {
     val head = ManifestTable.headVersion(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $dir"))
-    ManifestTable.declaredSchemaOf(spark, dir, head)
-      .getOrElse(ManifestTable.readVersion(spark, dir, head).schema)
+    ManifestTable.schemaAt(spark, dir, ManifestTable.snapshotOf(fs, dir, head))
       .add("change_type", StringType, nullable = false)
       .add("_commit_version", LongType, nullable = false)
   }

@@ -147,30 +147,18 @@ object GraftProcedures {
     val fresh: Map[String, Seq[(String, Array[Byte])]] =
       if (need.isEmpty) Map.empty
       else {
-        val dirKey = expr(
-          "regexp_replace(_metadata.file_path, '/[^/]*$', '')")
         val aggs = cols.map(c =>
           expr(s"hll_sketch_agg(CAST(`$c` AS STRING), $lgK)").as(s"ndv:$c"))
-        val perDir = ManifestTable.readDirs(spark, dir, head, need)
-          .withColumn("__graft_ndv_dir", dirKey)
-          .groupBy("__graft_ndv_dir")
+        // grouped by the scan's dir column: the manifest's own entry
+        val scan = ManifestTable.readMasked(spark, dir, head, need,
+          Map.empty)
+        val perDir = scan
+          .groupBy(scan.metadataColumn(GraftRowLevel.DirCol))
           .agg(aggs.head, aggs.tail: _*)
           .collect()
-        val parentToRel = need.map(p => fs.makeQualified(
-          new org.apache.hadoop.fs.Path(
-            ManifestTable.absPath(dir, p))).toString -> p).toMap
-        // `_metadata.file_path` can render URL-ENCODED where
-        // makeQualified does not (paths with spaces) — tolerate both
-        // renderings instead of silently abandoning the sketch job to
-        // the full pass forever (r19 review find)
-        def relOf(qual: String): Option[String] =
-          parentToRel.get(new org.apache.hadoop.fs.Path(qual).toString)
-            .orElse(scala.util.Try(parentToRel.get(
-              new org.apache.hadoop.fs.Path(
-                new java.net.URI(qual)).toString)).toOption.flatten)
         def emptySketch: Array[Byte] = ManifestTable.emptyNdvSketch
         val sketched = perDir.map { r =>
-          val rel = relOf(r.getString(0)).getOrElse(return None)
+          val rel = r.getString(0)
           // an all-null column yields no sketch — persist an EMPTY one
           // so the dir never re-reads on later ANALYZEs
           rel -> cols.map(c => c ->
@@ -621,8 +609,8 @@ object GraftProcedures {
           val head = ManifestTable.headVersion(spark, dir).getOrElse(
             throw new IllegalArgumentException(
               s"no committed graft table at $dir"))
-          val tblSchema = ManifestTable.declaredSchemaOf(spark, dir, head)
-            .getOrElse(ManifestTable.read(spark, dir).schema)
+          val tblSchema = ManifestTable.schemaAt(spark, dir,
+            ManifestTable.snapshotOf(catalog.activeFs, dir, head))
           // the DEFAULT column set filters to stat-supportable atomic
           // types — countDistinct over a MAP column throws, so an
           // unfiltered default crashed every analyze of such tables

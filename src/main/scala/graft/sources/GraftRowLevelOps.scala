@@ -710,10 +710,10 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       val stagedCdc = ManifestTable.stageMorDeltaCdc(spark, dir, baseV,
         touched, deletes,
         cidFresh.map { case (c, _) =>
-          ManifestTable.readDirs(spark, dir, baseV, Seq(c)) -> "insert"
+          ManifestTable.readMasked(spark, dir, baseV, Seq(c), Map.empty) -> "insert"
         }.toSeq ++
         cidPost.map { case (c, _) =>
-          ManifestTable.readDirs(spark, dir, baseV, Seq(c)) ->
+          ManifestTable.readMasked(spark, dir, baseV, Seq(c), Map.empty) ->
             "update_postimage"
         }.toSeq)
       stagedCdc.filterNot(_ == ManifestTable.CdcEmptyToken)

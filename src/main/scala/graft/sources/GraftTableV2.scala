@@ -18,6 +18,7 @@ import org.apache.spark.sql.connector.expressions.{SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RequiresDistributionAndOrdering, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
@@ -159,15 +160,12 @@ class GraftTableProvider extends TableProvider
       // clear message rather than here, so EXISTS-style probing works
       case None => new StructType()
       case Some(v) =>
-        val fs = new Path(dir)
-          .getFileSystem(spark.sessionState.newHadoopConf())
+        val snap = ManifestTable.snapshotOf(new Path(dir)
+          .getFileSystem(spark.sessionState.newHadoopConf()), dir, v)
         // S48: path-loaded reads serve the same default contract the
         // catalog route does (exists-defaults fill pre-ADD dirs)
-        ManifestTable.withDefaults(
-          ManifestTable.declaredSchemaOf(spark, dir, v)
-            .getOrElse(ManifestTable.readVersion(spark, dir, v).schema),
-          ManifestTable.metaOf(fs, dir, v),
-          ManifestTable.colMapOf(fs, dir, v))
+        ManifestTable.withDefaults(ManifestTable.schemaAt(spark, dir, snap),
+          snap.meta, snap.cmap)
     }
   }
 
@@ -189,7 +187,7 @@ class GraftTableProvider extends TableProvider
   * rather than a set of file partitions, so it reaches Spark through a
   * `V1Scan` as a plain `TableScan`. There is nothing for pushdown to
   * win: the diff already reads ONLY the commit dirs that differ
-  * between the versions (inputFiles-asserted in MergeIntoSpec).
+  * between the versions (scanned files asserted in MergeIntoSpec).
   *
   * Resolution is lazy: `readStream` with the same options loads this
   * table too, then falls back to the alias's X14 stream source without
@@ -234,10 +232,12 @@ private[sources] class GraftChangesTable(dir: String,
 
 /** One pinned version of a manifest table behind the V2 `Table` API.
   * `version` None = the path has never been committed (write-only
-  * until the first commit lands). */
+  * until the first commit lands). `pinned` = the snapshot the scan
+  * serves instead of the version's own manifest ([[GraftTable.read]]). */
 case class GraftTable(tableDir: String, pinnedV: Option[Long],
                       tableSchema: StructType, tableProps: Map[String, String],
-                      batchWrite: Boolean = true)
+                      batchWrite: Boolean = true,
+                      pinned: Option[ManifestTable.Snapshot] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
@@ -379,7 +379,8 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
       MergeInto.merge(ManifestTable.read(spark, tableDir).filter(cond),
         tableDir, deleteWhen = org.apache.spark.sql.functions.lit(true)): Unit
     } else {
-      val zone = ManifestTable.statsZoneOf(spark, fs, tableDir, head)
+      val zone = ManifestTable.statsZoneOf(spark,
+        ManifestTable.metaOf(fs, tableDir, head))
       val bounds = ManifestSupport.boundsOf(filters.toIndexedSeq, zone)
       // S41 — `dml.mode=merge-on-read` (TBLPROPERTIES): the delete
       // stages a deletion vector instead of rewriting touched dirs —
@@ -395,7 +396,7 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
     val v = pinnedV.getOrElse(throw new IllegalArgumentException(
       s"no committed graft table at $tableDir"))
     GraftScanBuilder(tableDir, v, schema(),
-      options.asCaseSensitiveMap().asScala.toMap)
+      options.asCaseSensitiveMap().asScala.toMap, pinned = pinned)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -425,6 +426,32 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
       k => Option(info.options.get(k)))
     new GraftWriteBuilder(tableDir, statsCols, retain, clusterBy, checks,
       info, viaCatalog, txn)
+  }
+}
+
+object GraftTable {
+
+  /** The one masked-read kernel: `paths` of `tableDir` read through the
+    * deletion vectors `dv` (entries for other paths are ignored), served
+    * under `anchor`'s schema, column mapping and stats — `anchor` may
+    * be another version of the table (the change feed's newer side) or
+    * another table's snapshot (a branch publish reading parent dirs).
+    * No `paths` = an empty frame of the anchor's schema.
+    * The frame plans the same `BatchScanExec` over [[GraftScan]] a SQL
+    * read does, so every internal read masks in [[GraftDvReaderFactory]]
+    * and pushes filters into manifest and row-group pruning. */
+  private[sources] def read(spark: SparkSession, tableDir: String,
+                            anchor: ManifestTable.Snapshot, paths: Seq[String],
+                            dv: Map[String, String]): org.apache.spark.sql.DataFrame = {
+    val keep = paths.toSet
+    val snap = anchor.copy(paths = paths, dv = dv.filter(e => keep(e._1)))
+    val schema = ManifestTable.withDefaults(ManifestTable.schemaAt(spark,
+      tableDir, if (paths.isEmpty) anchor else snap), snap.meta, snap.cmap)
+    val table = GraftTable(tableDir, Some(anchor.version), schema, Map.empty,
+      pinned = Some(snap))
+    org.apache.spark.sql.GraftShims.dataFrame(spark,
+      DataSourceV2Relation.create(table, None, None,
+        CaseInsensitiveStringMap.empty()))
   }
 }
 
@@ -530,7 +557,7 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
       // the wrong zone shift the domain; clamping keeps that a layout
       // nuance, but parse right anyway)
       lazy val statsZone =
-        ManifestTable.statsZoneOf(spark, fs, tableDir, head)
+        ManifestTable.statsZoneOf(spark, ManifestTable.metaOf(fs, tableDir, head))
       def ordinalOf(dt: org.apache.spark.sql.types.DataType,
                     s: String): Option[Long] = dt match {
         case org.apache.spark.sql.types.DateType =>
@@ -896,7 +923,8 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
 case class GraftScanBuilder(tableDir: String, version: Long,
                             tableSchema: StructType,
                             scanOptions: Map[String, String] = Map.empty,
-                            rowLevel: Option[GraftGroupOperation] = None)
+                            rowLevel: Option[GraftGroupOperation] = None,
+                            pinned: Option[ManifestTable.Snapshot] = None)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
@@ -922,12 +950,18 @@ case class GraftScanBuilder(tableDir: String, version: Long,
   // compute the manifest-backed result once per Aggregation instance
   private var answered: Option[(Aggregation, Option[(StructType, InternalRow)])] = None
 
+  /** The snapshot the aggregate answer and the scan serve: `pinned`,
+    * else version `version`'s manifest. */
+  private lazy val snap: ManifestTable.Snapshot = pinned.getOrElse(
+    ManifestTable.snapshotOf(new Path(tableDir).getFileSystem(
+      SparkSession.active.sessionState.newHadoopConf()), tableDir, version))
+
   private def answerOf(aggregation: Aggregation): Option[(StructType, InternalRow)] =
     answered match {
       case Some((prev, r)) if prev eq aggregation => r
       case _ =>
-        val r = GraftStatsAgg.answer(SparkSession.active, tableDir, version,
-          tableSchema, aggregation, filters)
+        val r = GraftStatsAgg.answer(SparkSession.active, snap, tableSchema,
+          aggregation, filters)
         answered = Some((aggregation, r))
         r
     }
@@ -965,7 +999,7 @@ case class GraftScanBuilder(tableDir: String, version: Long,
     val dataSchema =
       if (requested.isEmpty) readSchema
       else StructType(readSchema.fields.filterNot(f => metaCols(f.name)))
-    new GraftScan(tableDir, version, tableSchema, dataSchema, filters, agg,
+    new GraftScan(tableDir, snap, tableSchema, dataSchema, filters, agg,
       limit.filter(_ => filters.isEmpty), scanOptions,
       emitDir = requested(GraftRowLevel.DirCol),
       rowLevel = rowLevel,
@@ -982,8 +1016,13 @@ case class GraftScanBuilder(tableDir: String, version: Long,
   * per planned-dir set ([[createReaderFactory]] memoizes it, keyed on
   * [[plannedPaths]]; the aggregate answer keys on the empty set), so a
   * masked scan loads its masks and broadcasts its confs once per query,
-  * and a runtime filter that narrows the dirs gets a fresh factory. */
-class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
+  * and a runtime filter that narrows the dirs gets a fresh factory.
+  * `snap` is the one manifest parse every planning surface serves from
+  * (pruning, filterAttributes, statistics, runtime re-pruning, masks,
+  * column mapping): a version's own manifest, or the pinned snapshot of
+  * a [[GraftTable.read]]. */
+class GraftScan(tableDir: String, snap: ManifestTable.Snapshot,
+                tableSchema: StructType,
                 requiredSchema: StructType, filters: Array[Filter],
                 agg: Option[(StructType, InternalRow)],
                 limit: Option[Int] = None,
@@ -1000,13 +1039,6 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
   private def fsOf(s: SparkSession) =
     new Path(tableDir).getFileSystem(s.sessionState.newHadoopConf())
 
-  // ONE manifest PARSE serves every planning surface of this scan
-  // (pruning, filterAttributes, statistics, runtime re-pruning, masks,
-  // column mapping) — each per-channel accessor re-reads the file, a
-  // GET per plan step on an object store. Driver-only state: the scan
-  // object itself never ships to executors.
-  @transient private lazy val snap: ManifestTable.Snapshot =
-    ManifestTable.snapshotOf(fsOf(spark), tableDir, version)
   private def livePaths: Seq[String] = snap.paths
   private def liveStats: Map[String, String] = snap.stats
   /** S41 — the pinned version's deletion vectors: dv'd dirs plan as
@@ -1022,7 +1054,7 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
   /** The zone timestamp stats are ENCODED in — the pinned writer zone
     * ([[ManifestTable.statsZoneOf]]), not this session's. */
   @transient private lazy val statsZone: java.time.ZoneId =
-    ManifestTable.statsZoneOf(spark, fsOf(spark), tableDir, version)
+    ManifestTable.statsZoneOf(spark, snap.meta)
 
   private def boundsFor(fs: Array[Filter]): Map[String, (String, String)] =
     ManifestSupport.boundsOf(fs.toIndexedSeq, statsZone)
@@ -1350,7 +1382,7 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
       "versionAsOf is batch time travel; a streaming read tails the " +
         "LIVE table — use startingVersion to choose where the tail begins")
     new GraftMicroBatchStream(tableDir, tableSchema, requiredSchema,
-      filters, streamOptions, version)
+      filters, streamOptions, snap.version)
   }
 
   /** Post-pruning size, and a row count when every surviving dir has
@@ -1436,7 +1468,10 @@ class GraftScan(tableDir: String, version: Long, tableSchema: StructType,
 
   override def description(): String = {
     val b = boundsFor(filters)
-    s"GraftScan $tableDir@v$version prunedBounds=${b.keys.toSeq.sorted.mkString(",")}" +
+    s"GraftScan $tableDir@v${snap.version} prunedBounds=${b.keys.toSeq.sorted.mkString(",")}" +
+      // the filters the parquet readers prune row groups with
+      (if (filters.isEmpty || rowLevel.isDefined) ""
+       else filters.mkString(" PushedFilters: [", ", ", "]")) +
       agg.map(a => s" PushedAggregates=[${a._1.fieldNames.mkString(", ")}]").getOrElse("") +
       limit.map(n => s" PushedLimit=$n").getOrElse("")
   }
@@ -1620,26 +1655,23 @@ case class GraftDvReaderFactory(clean: PartitionReaderFactory,
         new PartitionReader[ColumnarBatch] {
           private var mi = 0
           private var cur: ColumnarBatch = _
-          override def next(): Boolean = {
-            while (inner.next()) {
-              val b = inner.get()
-              val n = b.numRows()
-              val idxCol = b.column(rowIdxOrd)
-              // selection vector: surviving ordinals of this batch
-              // (one pointer walk — positions sorted, indexes increasing)
-              val sel = new Array[Int](n)
-              var k = 0
-              var r = 0
-              while (r < n) {
-                val idx = idxCol.getLong(r)
-                while (mi < mask.length && mask(mi) < idx) mi += 1
-                if (mi >= mask.length || mask(mi) != idx) { sel(k) = r; k += 1 }
-                r += 1
-              }
-              cur = projectBatch(b, if (k == n) null else sel, k)
-              return true
+          override def next(): Boolean = inner.next() && {
+            val b = inner.get()
+            val n = b.numRows()
+            val idxCol = b.column(rowIdxOrd)
+            // selection vector: surviving ordinals of this batch
+            // (one pointer walk — positions sorted, indexes increasing)
+            val sel = new Array[Int](n)
+            var k = 0
+            var r = 0
+            while (r < n) {
+              val idx = idxCol.getLong(r)
+              while (mi < mask.length && mask(mi) < idx) mi += 1
+              if (mi >= mask.length || mask(mi) != idx) { sel(k) = r; k += 1 }
+              r += 1
             }
-            false
+            cur = projectBatch(b, if (k == n) null else sel, k)
+            true
           }
           override def get(): ColumnarBatch = cur
           override def close(): Unit = inner.close()
@@ -2258,15 +2290,13 @@ object GraftAggReaderFactory extends PartitionReaderFactory {
 object GraftStatsAgg {
 
   /** None = cannot answer; Some((schema, row)) = the complete result. */
-  def answer(spark: SparkSession, tableDir: String, version: Long,
+  def answer(spark: SparkSession, snap: ManifestTable.Snapshot,
              tableSchema: StructType, aggregation: Aggregation,
              pushedFilters: Array[Filter]): Option[(StructType, InternalRow)] = {
     if (aggregation.groupByExpressions.nonEmpty || pushedFilters.nonEmpty)
       return None
-    val fs = new Path(tableDir).getFileSystem(
-      spark.sessionState.newHadoopConf())
-    val paths = ManifestTable.pathsOf(fs, tableDir, version)
-    val stats = ManifestTable.statsOf(fs, tableDir, version)
+    val paths = snap.paths
+    val stats = snap.stats
     if (paths.isEmpty || !paths.forall(stats.contains)) return None
     // Deletion vectors make every recorded PER-COLUMN stat a PHYSICAL
     // value — a mask can hide any share of a column's nulls, so
@@ -2281,7 +2311,7 @@ object GraftStatsAgg {
     // UNMASKED dir is still the exact logical extreme; only when every
     // attaining dir is masked (the extreme row itself may be deleted)
     // does the pushdown decline. A MoR table keeps its cheapest queries.
-    val dvMap = ManifestTable.dvOf(fs, tableDir, version)
+    val dvMap = snap.dv
     val masked = ManifestTable.dvDeletedRows(dvMap)
     val dirMasked = paths.map(dvMap.contains)
     val payloads = paths.map(stats)
@@ -2291,7 +2321,7 @@ object GraftStatsAgg {
     // the zone the stats strings were WRITTEN in (pinned by the first
     // ts-stats writer), not this session's — parsing in the wrong zone
     // returns extremes shifted by the zone difference
-    val zone = ManifestTable.statsZoneOf(spark, fs, tableDir, version)
+    val zone = ManifestTable.statsZoneOf(spark, snap.meta)
 
     def columnOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[StructField] = e match {

@@ -276,9 +276,9 @@ object ManifestTable {
     * literals in THIS zone — rendering in their own session zone
     * mis-prunes dirs the moment the two differ (cross-session-TZ
     * wrong-rows class). */
-  private[graft] def statsZoneOf(spark: SparkSession, fs: FileSystem,
-                                 tableDir: String, v: Long): java.time.ZoneId =
-    metaOf(fs, tableDir, v).get(StatsZoneKey).map(java.time.ZoneId.of)
+  private[graft] def statsZoneOf(spark: SparkSession,
+                                 meta: Map[String, String]): java.time.ZoneId =
+    meta.get(StatsZoneKey).map(java.time.ZoneId.of)
       .getOrElse(java.time.ZoneId.of(
         spark.sessionState.conf.sessionLocalTimeZone))
 
@@ -545,9 +545,9 @@ object ManifestTable {
     * the data sweep never touches it; GC reaps unreferenced names). */
   private[graft] val DvDirName = "_dv"
   /** A deletion-vector file's schema: the masked row's FULLY-QUALIFIED
-    * data file URI (exactly as `_metadata.file_path` renders it — files
-    * never move, so the URI is stable table metadata) and its row
-    * position within that file (`_metadata.row_index` semantics). */
+    * data file URI (as the scan's `_graft_file` column renders it —
+    * files never move, so the URI is stable table metadata) and its row
+    * position within that file (parquet row-index semantics). */
   private[graft] val DvSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("path",
@@ -583,8 +583,8 @@ object ManifestTable {
     * writers report for exactly the files it moves into `d=<i>`.
     * Second, stacked entries of one dir are pairwise position-disjoint,
     * because (a) both mask producers ([[deleteWhereMoR]]/
-    * [[morRewrite]]'s anti-join and the S43 delta task writers, fed by
-    * the delta scan) compute new positions against the BASE version's
+    * [[morRewrite]] and the S43 delta task writers, both fed by a
+    * masked scan) compute new positions against the BASE version's
     * LOGICAL rows — already-masked positions can never re-enter a
     * changeset — and (b) [[publishMorDelta]] aborts (no retry) when a
     * touched dir's dv advanced past the base, so no concurrent writer
@@ -880,53 +880,20 @@ object ManifestTable {
         t
       })
 
-  /** Mask `df` (rows of `paths`, read WITH parquet `_metadata`
-    * available) by the dv entries covering those paths: anti-join on
-    * (file URI, row position). The dv side is small by construction
-    * (selective deletes — large deletes take the copy-on-write path),
-    * so AQE broadcasts it from its file-size stats. */
-  private def maskFrame(spark: SparkSession, tableDir: String,
-                        df: DataFrame, dvDirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val dvDf = spark.read.schema(DvSchema)
-      .parquet(dvDirs.map(absPath(tableDir, _)): _*)
-      .select(col("path").as("__graft_dv_path"), col("pos").as("__graft_dv_pos"))
-    df.withColumn("__graft_file", col("_metadata.file_path"))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
-      .join(dvDf, col("__graft_file") === col("__graft_dv_path") &&
-        col("__graft_pos") === col("__graft_dv_pos"), "left_anti")
-      .drop("__graft_file", "__graft_pos")
-  }
-
-  /** Read `paths` of version `v` through the version's deletion
-    * vectors — THE logical-read kernel every DataFrame surface uses
+  /** Read `paths` of version `v` through the deletion vectors `dv` —
+    * the logical-read kernel every internal DataFrame surface uses
     * (plain read, time travel, range scan, compaction input, CoW
-    * rewrite input, change-feed sides). Splits the scan: dirs without
-    * dvs read plain (no join tax); dv'd dirs anti-join their masks. */
+    * rewrite input, change-feed sides, identity probes). The frame is
+    * the V2 scan over a pinned snapshot ([[GraftTable.read]]): masks
+    * apply inside the scan's partition readers, never as a join. The
+    * dirs need not be listed by `v`, and an empty `dv` reads them
+    * unmasked (ANALYZE's sketch pass, freshly landed image dirs, the
+    * change feed's appended dirs). */
   private[graft] def readMasked(spark: SparkSession, tableDir: String,
                                 v: Long, paths: Seq[String],
                                 dv: Map[String, String]): DataFrame =
-    readMaskedWith(spark, tableDir,
+    GraftTable.read(spark, tableDir,
       snapshotOf(fsOf(spark, tableDir), tableDir, v), paths, dv)
-
-  /** [[readMasked]] over an already-parsed snapshot (schema/colmap come
-    * from `snap`; `dv` stays a parameter because the change feed reads
-    * one version's paths through ANOTHER version's schema anchor). */
-  private def readMaskedWith(spark: SparkSession, tableDir: String,
-                             snap: Snapshot, paths: Seq[String],
-                             dv: Map[String, String]): DataFrame = {
-    val dirty = paths.filter(dv.contains)
-    if (dirty.isEmpty)
-      return readSnap(spark, snap, paths.map(p => absPath(tableDir, p)))
-    val clean = paths.filterNot(dv.contains)
-    val dvDirs = dirty.flatMap(p => dvEntries(dv(p)).map(_._1)).distinct
-    val masked = maskFrame(spark, tableDir,
-      readSnap(spark, snap, dirty.map(p => absPath(tableDir, p))),
-      dvDirs)
-    if (clean.isEmpty) masked
-    else readSnap(spark, snap,
-      clean.map(p => absPath(tableDir, p))).unionByName(masked)
-  }
 
   /** S42 — column-mapping channel (`colmap:<logical>\t<physical>` meta
     * entries): after a RENAME COLUMN, the column's LOGICAL name (what
@@ -1034,7 +1001,7 @@ object ManifestTable {
   /** `logical` with Spark's default-value and generation-expression
     * field metadata attached from the version's channels — the
     * decoration every read-schema surface applies (catalog loads, path
-    * loads, internal readSnap), so INSERT resolution, missing-column
+    * loads, internal [[GraftTable.read]]s), so INSERT resolution, missing-column
     * fill and DESCRIBE all see one contract. */
   private[graft] def withDefaults(logical: org.apache.spark.sql.types.StructType,
                                   meta: Map[String, String],
@@ -1098,45 +1065,14 @@ object ManifestTable {
         col(c).as(cmap.getOrElse(c, c))): _*)
     }
 
-  /** Read a SUBSET of version `v`'s dirs through the declared schema —
-    * the ANALYZE sketch pass's input (only dirs without a persisted
-    * `#ndv` sketch are read). */
-  private[sources] def readDirs(spark: SparkSession, tableDir: String,
-                                v: Long, rel: Seq[String]): DataFrame =
-    readWithDeclared(spark, tableDir, v, rel.map(absPath(tableDir, _)))
-
-  private def readWithDeclared(spark: SparkSession, tableDir: String,
-                               v: Long, paths: Seq[String]): DataFrame =
-    readSnap(spark,
-      snapshotOf(fsOf(spark, tableDir), tableDir, v), paths)
-
-  /** The parquet read through an already-parsed [[Snapshot]]'s schema
-    * and column mapping (`paths` are ABSOLUTE) — zero further manifest
-    * I/O. */
-  private def readSnap(spark: SparkSession, snap: Snapshot,
-                       paths: Seq[String]): DataFrame = {
-    snap.declared match {
-      case Some(logical0) =>
-        // S48: existence defaults fill columns absent from pre-ADD
-        // dirs (Spark's parquet readers honor the EXISTS_DEFAULT
-        // field metadata) — decorated here so EVERY internal read
-        // (time travel, CDC images, compaction/DML sources) serves
-        // the same constant the live scan does
-        val logical = withDefaults(logical0, snap.meta, snap.cmap)
-        val cmap = snap.cmap
-        if (cmap.isEmpty) spark.read.schema(logical).parquet(paths: _*)
-        else {
-          // request PHYSICAL names from parquet, alias back to logical
-          // (one Project — `_metadata` still resolves through it for
-          // the dv-masking and MoR surfaces, spec-pinned)
-          import org.apache.spark.sql.functions.col
-          spark.read.schema(toPhysical(logical, cmap)).parquet(paths: _*)
-            .select(logical.fieldNames.toIndexedSeq.map(l =>
-              col(cmap.getOrElse(l, l)).as(l)): _*)
-        }
-      case None => spark.read.parquet(paths: _*)
-    }
-  }
+  /** The logical schema of snapshot `snap`: the declared one, else the
+    * footer schema of its data files (a table committed by a pre-schema
+    * writer). The one schema lookup every surface uses — it never plans
+    * a masked read. */
+  private[graft] def schemaAt(spark: SparkSession, tableDir: String,
+                              snap: Snapshot): org.apache.spark.sql.types.StructType =
+    snap.declared.getOrElse(
+      spark.read.parquet(snap.paths.map(absPath(tableDir, _)): _*).schema)
 
   /** Current head version, or None for an uncommitted/absent table —
     * the snapshot-pinning entry point for external access layers (the
@@ -1178,7 +1114,7 @@ object ManifestTable {
     // one manifest parse serves paths, schema, column map and masks
     val snap = snapshotOf(fs, tableDir, v)
     require(snap.paths.nonEmpty, s"no committed manifest at $tableDir")
-    readMaskedWith(spark, tableDir, snap, snap.paths, snap.dv)
+    GraftTable.read(spark, tableDir, snap, snap.paths, snap.dv)
   }
 
   /** Time travel: snapshot read of a RETAINED committed version (S17).
@@ -1193,7 +1129,7 @@ object ManifestTable {
       s"version $v is not retained at $tableDir")
     val snap = snapshotOf(fs, tableDir, v)
     require(snap.paths.nonEmpty, s"version $v at $tableDir lists no data")
-    readMaskedWith(spark, tableDir, snap, snap.paths, snap.dv)
+    GraftTable.read(spark, tableDir, snap, snap.paths, snap.dv)
   }
 
   /** APPEND-table ingest (S19): commit `df` as one new immutable data
@@ -1268,7 +1204,6 @@ object ManifestTable {
     // identity columns are always stats-tracked: the per-dir max IS
     // the watermark-advance input (and point lookups on ids prune)
     val statsCols2 = (statsCols ++ idClaims.map(_.logical)).distinct
-    val ddl = cleanDdl(df.schema)
     val cid = "a-" + java.util.UUID.randomUUID().toString.take(8)
     val obs = org.apache.spark.sql.Observation()
     // S53 write-side lane: an opted-in table sketches its stats columns
@@ -1625,9 +1560,9 @@ object ManifestTable {
                                retainGenerations: Int,
                                meta: Map[String, String],
                                recordingStats: Boolean,
-                               boundChecks: Set[String] = Set.empty,
-                               identity: Seq[IdentityClaim] = Seq.empty,
-                               knownHead: Option[Long] = None): Long =
+                               boundChecks: Set[String],
+                               identity: Seq[IdentityClaim],
+                               knownHead: Option[Long]): Long =
     appendCommitLoopCore(df.sparkSession, df.schema, tableDir, newPaths,
       newStats, statsCols, retainGenerations, meta, recordingStats,
       boundChecks, identity, knownHead)
@@ -2084,7 +2019,7 @@ object ManifestTable {
   private def writeClusteredDirs(data: DataFrame, tableDir: String,
                                  cid: String, spec: Seq[String], k: Int,
                                  statsCols: Seq[String],
-                                 cmap: Map[String, String] = Map.empty,
+                                 cmap: Map[String, String],
                                  headHint: Option[Long] = None)
       : Map[String, String] = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min, spark_partition_id}
@@ -2416,27 +2351,24 @@ object ManifestTable {
     val fs = fsOf(spark, tableDir)
     val baseV = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
-    val all = pathsOf(fs, tableDir, baseV)
-    val baseStats = statsOf(fs, tableDir, baseV)
-    val tableSchema = declaredSchemaOf(spark, tableDir, baseV).getOrElse(
-      readWithDeclared(spark, tableDir, baseV,
-        all.map(p => absPath(tableDir, p))).schema)
+    val base = snapshotOf(fs, tableDir, baseV)
+    val tableSchema = schemaAt(spark, tableDir, base)
     // an unknown column is operator error, not a conservative case:
     // silently dropping it would leave NO bounds and turn the "scoped"
     // call into a full-table rewrite
     bounds.keys.foreach(c => require(tableSchema.fieldNames.contains(c),
       s"scoped compaction references unknown column '$c' at $tableDir " +
         s"(declared: ${tableSchema.fieldNames.mkString(", ")})"))
-    val inputs = prunePathsIn(all, baseStats, bounds, tableSchema)
-    val baseDv = dvOf(fs, tableDir, baseV)
+    val inputs = prunePathsIn(base.paths, base.stats, bounds, tableSchema)
+    val baseDv = base.dv
     val anyDv = inputs.exists(baseDv.contains)
     if (inputs.size <= 1 && !anyDv) return baseV
     val spec = clusterSpecOf(fs, tableDir, baseV).getOrElse(Seq(statsCols0.head))
     val statsCols = (statsCols0 ++ spec).distinct
     val cid = "cw-" + java.util.UUID.randomUUID().toString.take(8)
-    val data = readMasked(spark, tableDir, baseV, inputs, baseDv)
+    val data = GraftTable.read(spark, tableDir, base, inputs, baseDv)
     val outStats = writeClusteredDirs(data, tableDir, cid, spec, k, statsCols,
-      colMapOf(fs, tableDir, baseV))
+      base.cmap)
     val outBlooms = buildBloomSidecars(spark, tableDir,
       outStats.keys.toSeq.sorted, outStats)
     val inputSet = inputs.toSet
@@ -2543,9 +2475,9 @@ object ManifestTable {
     * rewrites its whole commit dir), record the matching rows' (file,
     * position) pairs as a DELETION VECTOR under `_dv/` and commit a
     * manifest whose `#dvec` channel masks them out of every logical
-    * read — data dirs untouched, I/O ∝ deleted rows. The scan applies
-    * the mask as a runtime anti-join (DataFrame surfaces) or a
-    * row-position filter (the V2 scan); `CALL system.compact` /
+    * read — data dirs untouched, I/O ∝ deleted rows. Every read
+    * surface applies the mask as the V2 scan's row-position filter;
+    * `CALL system.compact` /
     * [[compactAppend]] materializes masks away. This is the
     * position-delete / deletion-vector design every production format
     * converged on (Iceberg v2 position deletes, Delta deletion
@@ -2594,19 +2526,17 @@ object ManifestTable {
                          assignments: Seq[(String, org.apache.spark.sql.Column)],
                          bounds: Map[String, (String, String)],
                          retainGenerations: Int): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, element_at, lit, typedLit, when}
     val fs = fsOf(spark, tableDir)
     require(!fs.exists(new Path(tableDir, MergeInto.KeyMarker)),
       s"$tableDir is a bucketed merge table — its DML is the O(changeset) " +
         "merge kernel; deletion vectors apply to manifest append tables")
     val baseV = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
-    val basePaths = pathsOf(fs, tableDir, baseV)
-    if (basePaths.isEmpty) return baseV
-    val baseStats = statsOf(fs, tableDir, baseV)
-    val tableSchema = declaredSchemaOf(spark, tableDir, baseV).getOrElse(
-      readWithDeclared(spark, tableDir, baseV,
-        basePaths.map(p => absPath(tableDir, p))).schema)
+    val base = snapshotOf(fs, tableDir, baseV)
+    if (base.paths.isEmpty) return baseV
+    val baseStats = base.stats
+    val tableSchema = schemaAt(spark, tableDir, base)
     val byCol = assignments.toMap
     byCol.keys.foreach(c => require(tableSchema.fieldNames.contains(c),
       s"UPDATE assigns unknown column '$c' at $tableDir"))
@@ -2615,34 +2545,21 @@ object ManifestTable {
     // replaces) — the clustered writes' reserved-name rule applies
     require(!tableSchema.fieldNames.exists(_.startsWith("__graft_")),
       "merge-on-read DML reserves the '__graft_' column-name prefix")
-    val touched = prunePathsIn(basePaths, baseStats,
+    val touched = prunePathsIn(base.paths, baseStats,
       bounds.filter { case (c, _) => tableSchema.fieldNames.contains(c) },
       tableSchema)
     if (touched.isEmpty) return baseV // provable no-op
-    val baseDv = dvOf(fs, tableDir, baseV)
-    // one scan leg per touched dir, each tagged with its dir ordinal —
-    // exact dir attribution without path-string surgery (works for
-    // foreign/clone entries too); MoR targets selective predicates, so
-    // the touched list is short by construction
-    val perDir = touched.zipWithIndex.map { case (p, i) =>
-      readWithDeclared(spark, tableDir, baseV, Seq(absPath(tableDir, p)))
-        .withColumn("__graft_dv_d", lit(i))
-        .withColumn("__graft_file", col("_metadata.file_path"))
-        .withColumn("__graft_pos", col("_metadata.row_index"))
-    }.reduce(_.unionByName(_))
-    val dvDirs = touched.flatMap(p =>
-      baseDv.get(p).toSeq.flatMap(dvEntries(_).map(_._1))).distinct
-    val live =
-      if (dvDirs.isEmpty) perDir
-      else {
-        val dvDf = spark.read.schema(DvSchema)
-          .parquet(dvDirs.map(absPath(tableDir, _)): _*)
-          .select(col("path").as("__graft_dv_path"),
-            col("pos").as("__graft_dv_pos"))
-        perDir.join(dvDf,
-          col("__graft_file") === col("__graft_dv_path") &&
-            col("__graft_pos") === col("__graft_dv_pos"), "left_anti")
-      }
+    // the touched dirs read through the base masks (an update must not
+    // resurrect a masked row), each row tagged with its dir's ordinal
+    // in `touched` and its (file, pos) row id — the scan's metadata
+    // columns, whose file key is the one the mask readers probe
+    val scan = GraftTable.read(spark, tableDir, base, touched, base.dv)
+    val live = scan
+      .withColumn("__graft_dv_d", element_at(
+        typedLit(touched.zipWithIndex.toMap),
+        scan.metadataColumn(GraftRowLevel.DirCol)))
+      .withColumn("__graft_file", scan.metadataColumn(GraftRowLevel.FileCol))
+      .withColumn("__graft_pos", scan.metadataColumn(GraftRowLevel.PosCol))
     val matches = live.filter(coalesce(cond, lit(false)))
     val dvName = "dv-" + java.util.UUID.randomUUID().toString.take(8)
     val dvRel = s"$DvDirName/$dvName"
@@ -2750,16 +2667,15 @@ object ManifestTable {
     val oldImages =
       if (touched.isEmpty) None
       else {
-        // per-dir reads so `_metadata` resolves (it would not above a
-        // union); NO base-mask filtering needed — the delete keys came
-        // from a scan that already read through the standing masks, so
-        // the join can only ever match live rows (keys are unique per
-        // row, so the inner join preserves multiplicity)
-        val rows = touched.map(p =>
-          readWithDeclared(spark, tableDir, baseV, Seq(absPath(tableDir, p)))
-            .withColumn("__graft_file", col("_metadata.file_path"))
-            .withColumn("__graft_pos", col("_metadata.row_index")))
-          .reduce(_.unionByName(_))
+        // NO base-mask filtering needed — the delete keys came from a
+        // scan that already read through the standing masks, so the
+        // join can only ever match live rows (keys are unique per row,
+        // so the inner join preserves multiplicity); both sides carry
+        // the scan's own (file, pos) rendering
+        val scan = readMasked(spark, tableDir, baseV, touched, Map.empty)
+        val rows = scan
+          .withColumn("__graft_file", scan.metadataColumn(GraftRowLevel.FileCol))
+          .withColumn("__graft_pos", scan.metadataColumn(GraftRowLevel.PosCol))
         Some(rows.join(delKeys.select(col("path").as("__graft_dv_path"),
             col("pos").as("__graft_dv_pos"), col("upd").as("__graft_dv_upd")),
           col("__graft_file") === col("__graft_dv_path") &&
@@ -2888,16 +2804,13 @@ object ManifestTable {
     val fs = fsOf(spark, tableDir)
     val baseV = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
-    val basePaths = pathsOf(fs, tableDir, baseV)
-    if (basePaths.isEmpty && !alwaysRewrite) return baseV
-    val baseStats = statsOf(fs, tableDir, baseV)
-    val tableSchema = declaredSchemaOf(spark, tableDir, baseV).getOrElse {
-      require(basePaths.nonEmpty,
-        s"$tableDir is empty and declares no schema — nothing to rewrite")
-      readWithDeclared(spark, tableDir, baseV,
-        basePaths.map(p => absPath(tableDir, p))).schema
-    }
-    val touched = prunePathsIn(basePaths, baseStats,
+    val base = snapshotOf(fs, tableDir, baseV)
+    if (base.paths.isEmpty && !alwaysRewrite) return baseV
+    val baseStats = base.stats
+    require(base.paths.nonEmpty || base.schemaDdl.isDefined,
+      s"$tableDir is empty and declares no schema — nothing to rewrite")
+    val tableSchema = schemaAt(spark, tableDir, base)
+    val touched = prunePathsIn(base.paths, baseStats,
       bounds.filter { case (c, _) => tableSchema.fieldNames.contains(c) },
       tableSchema)
     if (touched.isEmpty && !alwaysRewrite) return baseV // provable no-op
@@ -2911,11 +2824,8 @@ object ManifestTable {
     val aggs = statsAggExprs(statsCols)
     // touched dirs read through the base masks: a CoW rewrite over a
     // dv'd dir must not resurrect rows a merge-on-read delete masked
-    val baseDv = dvOf(fs, tableDir, baseV)
-    val touchedDf =
-      if (touched.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-      else readMasked(spark, tableDir, baseV, touched, baseDv)
+    val baseDv = base.dv
+    val touchedDf = GraftTable.read(spark, tableDir, base, touched, baseDv)
     // declared CHECK constraints bind the rewrite output here (S30) —
     // one seam for DELETE/UPDATE/MERGE instead of per-caller wrapping —
     // and the bound keyset arms the publish-time conflict guard below
@@ -3039,12 +2949,10 @@ object ManifestTable {
     import org.apache.spark.sql.functions.{count, lit}
     def empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payloadSchema)
-    val older =
-      if (touchedSet.isEmpty) empty
-      // the old image is the LOGICAL rows — through the base masks, or
-      // a CoW rewrite over a dv'd dir would stage masked rows as deletes
-      else readMasked(spark, tableDir, baseV, touchedSet.toSeq.sorted,
-        dvOf(fs, tableDir, baseV))
+    // the old image is the LOGICAL rows — through the base masks, or
+    // a CoW rewrite over a dv'd dir would stage masked rows as deletes
+    val older = readMasked(spark, tableDir, baseV, touchedSet.toSeq.sorted,
+      dvOf(fs, tableDir, baseV))
     val newer = cid match {
       case Some(c) => spark.read.schema(payloadSchema).parquet(s"$tableDir/$c")
       case None => empty
@@ -3124,20 +3032,20 @@ object ManifestTable {
   }
 
   /** Data-skipping scan (S19): the live table filtered to `column`
-    * BETWEEN `lo` AND `hi`, opening ONLY the commit dirs whose
+    * BETWEEN `lo` AND `hi`. The predicate is the whole implementation:
+    * it pushes into the V2 scan, which opens ONLY the commit dirs whose
     * recorded [min,max] intersects the range — manifest-level pruning,
     * zero I/O for pruned dirs (at 100 TB with daily appends, a
     * one-week date scan touches 7 dirs out of years of them, before
     * parquet's own footer/row-group pruning takes over inside the
     * survivors). Paths with no recorded stats for `column` are always
     * read (conservative); a dir whose stats say "no non-null values"
-    * is pruned, since BETWEEN never matches null. `lo`/`hi` are
-    * strings in Spark's cast-to-string form for the column's type
-    * (numbers as rendered, dates `yyyy-MM-dd`, timestamps
-    * `yyyy-MM-dd HH:mm:ss[.SSSSSS]` — all of which compare correctly
-    * in their domain); the residual filter is applied to the surviving
-    * rows and pushed into the parquet scan, so pruning is purely an
-    * I/O optimization, never a correctness dependency. */
+    * is pruned through the pushed IS NOT NULL. `lo`/`hi` are strings
+    * in Spark's cast-to-string form for the column's type (numbers as
+    * rendered, dates `yyyy-MM-dd`, timestamps
+    * `yyyy-MM-dd HH:mm:ss[.SSSSSS]`); Spark re-applies the predicate
+    * above the scan, so pruning is purely an I/O optimization, never a
+    * correctness dependency. */
   def rangeScan(spark: SparkSession, tableDir: String, column: String,
                 lo: String, hi: String): DataFrame =
     rangeScan(spark, tableDir, Map(column -> (lo, hi)))
@@ -3154,30 +3062,16 @@ object ManifestTable {
     val fs = fsOf(spark, tableDir)
     val v = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
-    // one manifest parse serves paths, stats, schema, colmap and masks
     val snap = snapshotOf(fs, tableDir, v)
-    // type resolution is metadata-only when the manifest declares a
-    // schema (every append-committed table does): pruning must never
-    // OPEN a dir it is about to skip — a pruned dir may already be
-    // GC'd or lost, and the scan still has to plan and run.
-    val tableSchema = snap.declared.getOrElse(
-      readSnap(spark, snap,
-        snap.paths.map(p => absPath(tableDir, p))).schema)
-    val keep = prunePathsIn(snap.paths, snap.stats, bounds, tableSchema)
-    val dts = bounds.map { case (c, _) => c -> tableSchema(c).dataType }
-    val pred = bounds.map { case (c, (lo, hi)) =>
-      col(c) >= lit(lo).cast(dts(c)) && col(c) <= lit(hi).cast(dts(c))
-    }.reduce(_ && _)
-    if (keep.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], tableSchema)
-        .filter(pred)
-    else readMaskedWith(spark, tableDir, snap, keep, snap.dv)
-      .filter(pred)
+    val df = GraftTable.read(spark, tableDir, snap, snap.paths, snap.dv)
+    df.filter(bounds.map { case (c, (lo, hi)) =>
+      val dt = df.schema(c).dataType
+      col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
+    }.reduce(_ && _))
   }
 
   /** The paths of version `v` surviving conjunctive bounds pruning —
-    * the dir-selection kernel [[rangeScan]] and the V2 scan share
+    * the V2 scan's dir-selection kernel over one version's manifest
     * (pure metadata: manifest lines only, no data I/O). A path with no
     * stats for a bounded column always survives (conservative). */
   private[graft] def prunePaths(fs: FileSystem, tableDir: String, v: Long,
@@ -3189,7 +3083,7 @@ object ManifestTable {
       bounds, tableSchema)
 
   /** Pure form of [[prunePaths]] over an already-read manifest — the
-    * V2 scan and [[rangeScan]] hold (paths, stats) already; re-listing
+    * V2 scan and the rewrite kernels hold (paths, stats) already; re-listing
     * the manifest per pruning pass is a GET per plan step on an object
     * store. */
   private[graft] def prunePathsIn(paths: Seq[String],
@@ -3798,10 +3692,11 @@ object ManifestTable {
           // (bsnap supplies schema + colmap; physical file names are
           // shared, so parent-base dirs resolve under it) — a feed
           // across a branch-side ADD COLUMN compares rows on the union
-          // shape exactly as [[changes]] anchors on the newer version
-          def olderDf = readMaskedWith(spark, tableDir, bsnap, onlyFrom,
-            baseSnap.dv)
-          def newerDf = readMasked(spark, bdir, bHead, onlyTo, bsnap.dv)
+          // shape exactly as [[changes]] anchors on the newer version;
+          // the older scan is labelled with the base version it reads
+          def olderDf = GraftTable.read(spark, tableDir,
+            bsnap.copy(version = baseSnap.version), onlyFrom, baseSnap.dv)
+          def newerDf = GraftTable.read(spark, bdir, bsnap, onlyTo, bsnap.dv)
           val older = if (onlyFrom.isEmpty) newerDf.limit(0) else olderDf
           val newer = if (onlyTo.isEmpty) olderDf.limit(0) else newerDf
           val net = diffFeed(older, newer).cache()
@@ -4114,7 +4009,7 @@ object ManifestTable {
     // renamed: the path infix `/_branches/<name>/<top>/` becomes the
     // moved dir's name. String surgery on the stored value keeps the
     // original scheme rendering byte-identical, so the rewritten paths
-    // still raw-match `_metadata.file_path` at read time. Only dv dirs
+    // still match the scan's file keys at read time. Only dv dirs
     // attached to a branch-LOCAL data entry pay the (tiny — masks are
     // selective by protocol) rewrite job; masks of parent dirs rename.
     val dvSubsNeedingRewrite: Set[String] = bsnap.dv.toSeq.collect {
@@ -4402,12 +4297,8 @@ object ManifestTable {
     // column, exactly as readVersion would show it)
     val anchorV =
       if (schemaOf(fs, tableDir, toV).isDefined) toV else fromV
-    def readOr(paths: Seq[String], dv: Map[String, String],
-               schemaAnchor: Seq[String]): DataFrame =
-      if (paths.nonEmpty) readMasked(spark, tableDir, anchorV, paths, dv)
-      else readWithDeclared(spark, tableDir, anchorV,
-        schemaAnchor.map(p => absPath(tableDir, p))).limit(0)
-    diffFeed(readOr(onlyFrom, fromDv, onlyTo), readOr(onlyTo, toDv, onlyFrom))
+    diffFeed(readMasked(spark, tableDir, anchorV, onlyFrom, fromDv),
+      readMasked(spark, tableDir, anchorV, onlyTo, toDv))
   }
 
   /** The change feed's ZERO-SHUFFLE fast path: when every step of
@@ -4460,8 +4351,7 @@ object ManifestTable {
       if (added.isEmpty)
         readVersion(spark, tableDir, toV).limit(0)
           .withColumn("change_type", lit(""))
-      else readWithDeclared(spark, tableDir, anchorV,
-        added.map(p => absPath(tableDir, p)))
+      else readMasked(spark, tableDir, anchorV, added, Map.empty)
         .withColumn("change_type", lit("insert")))
   }
 
@@ -4539,10 +4429,10 @@ object ManifestTable {
 
   private def manifestBody(relPaths: Seq[String],
                            schemaDdl: Option[String],
-                           stats: Map[String, String] = Map.empty,
-                           meta: Map[String, String] = Map.empty,
-                           dv: Map[String, String] = Map.empty,
-                           blooms: Map[String, String] = Map.empty)
+                           stats: Map[String, String],
+                           meta: Map[String, String],
+                           dv: Map[String, String],
+                           blooms: Map[String, String])
       : Array[Byte] = {
     schemaDdl.foreach(d => require(!d.contains("\n"),
       s"schema DDL must be one line, got: $d"))

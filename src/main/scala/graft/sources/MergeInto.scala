@@ -830,8 +830,8 @@ object MergeInto {
       observedByBucket: Map[Int, String], touched: Array[Int],
       writtenPaths: Seq[String],
       ourSchema: org.apache.spark.sql.types.StructType,
-      extraMeta: Map[String, String] = Map.empty,
-      validateHead: Map[String, String] => Unit = _ => ()): Option[Long] = {
+      extraMeta: Map[String, String],
+      validateHead: Map[String, String] => Unit): Option[Long] = {
     var attempt = 0
     while (attempt < 50) {
       attempt += 1

@@ -520,7 +520,7 @@ object Sources {
     * delete, every insert one insert — so the per-type counts and key
     * checksums pin both the time-travel read and the diff. The diff
     * itself reads only dirs the two manifests don't share (immutable
-    * dirs cancel), which the spec asserts via inputFiles. */
+    * dirs cancel), which the spec asserts on the scanned files. */
   def s17_snapshot_diff(s: SparkSession, d: String): DataFrame = {
     val (dir, v1, v2) = mergeDemo(s, d)
     ManifestTable.changes(s, dir, v1, v2)
@@ -570,8 +570,8 @@ object Sources {
 
   /** S19: manifest-level data skipping — a date-range scan over the
     * append table opens ONLY the commit dirs whose recorded
-    * [min,max] intersects the range (one of seven here; inputFiles-
-    * asserted in the spec), then parquet pushes the residual filter
+    * [min,max] intersects the range (one of seven here; the spec
+    * asserts the scanned files), then parquet pushes the residual filter
     * inside the survivor. The oracle is a plain filter over orders:
     * pruning is an I/O optimization, never a correctness dependency,
     * so a wrong prune (a dir dropped that held matching rows) breaks

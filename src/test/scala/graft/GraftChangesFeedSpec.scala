@@ -56,7 +56,7 @@ class GraftChangesFeedSpec extends SparkTestBase {
     val after = ManifestTable.headVersion(spark, dir).get
     val feed = ManifestTable.changes(spark, dir, before, after)
     assert(feed.count() == 0L)
-    assert(feed.inputFiles.isEmpty,
+    assert(scannedFiles(feed).isEmpty,
       "a layout-only span must not open any data file")
     assert(!hasExchange(feed))
   }
@@ -81,9 +81,9 @@ class GraftChangesFeedSpec extends SparkTestBase {
     assert(!hasExchange(feed))
     // the compaction's output dirs are NOT in the feed's inputs — only
     // the two appended dirs are read
-    assert(feed.inputFiles
+    assert(scannedFiles(feed)
       .map(_.split("/").dropRight(1).last).distinct.length == 2,
-      feed.inputFiles.toSeq)
+      scannedFiles(feed))
   }
 
   // ---- write-side CDC materialization (TBLPROPERTIES cdc.materialize) ----
@@ -141,7 +141,8 @@ class GraftChangesFeedSpec extends SparkTestBase {
     assert(got == Seq((2, "B", "update_postimage"),
                       (2, "b", "update_preimage")),
       s"the UPDATE's halves must arrive PAIRED: $got")
-    assert(feed.inputFiles.forall(_.contains("/_cdc/")),
+    assert(scannedFiles(feed).nonEmpty &&
+      scannedFiles(feed).forall(_.contains("/_cdc/")),
       "pairing must ride the write-materialized route")
     // a MoR DELETE keeps the plain tag — only updates pair
     spark.sql("DELETE FROM gcdc.lake.m6 WHERE k = 3")
@@ -361,6 +362,42 @@ class GraftChangesFeedSpec extends SparkTestBase {
       "the evolved publish step must still serve STAGED")
   }
 
+  test("a diff feed across ADD COLUMN reads the masked older side through the newer anchor") {
+    val dir = freshTable("m12", ",'dml.mode'='merge-on-read'")
+    spark.sql("INSERT INTO gcdc.lake.m12 VALUES (1,'a'),(2,'b'),(3,'c')")
+    spark.sql("DELETE FROM gcdc.lake.m12 WHERE k = 2")
+    val masked = ManifestTable.headVersion(spark, dir).get
+    spark.sql("ALTER TABLE gcdc.lake.m12 ADD COLUMN n INT")
+    spark.sql("UPDATE gcdc.lake.m12 SET n = 7 WHERE k = 3")
+    val vN = ManifestTable.headVersion(spark, dir).get
+    // the older side's rows are the masked version's (k=2 stays
+    // deleted), shaped by the newer version's schema (n null-fills)
+    val got = ManifestTable.changes(spark, dir, masked, vN).collect()
+      .map(r => (r.getInt(0), r.getString(1),
+        if (r.isNullAt(2)) -1 else r.getInt(2), r.getString(3))).sorted.toSeq
+    assert(got == Seq((3, "c", -1, "delete"), (3, "c", 7, "insert")), got)
+  }
+
+  test("a publish's staged feed reads a MASKED parent base dir through the base masks") {
+    val dir = freshTable("m13",
+      ",'cdc.materialize'='true','dml.mode'='merge-on-read'")
+    spark.sql("INSERT INTO gcdc.lake.m13 VALUES (1,'a'),(2,'b'),(3,'c')")
+    spark.sql("DELETE FROM gcdc.lake.m13 WHERE k = 2")
+    ManifestTable.createBranch(spark, dir, "mb"): Unit
+    spark.sql("DELETE FROM gcdc.lake.`m13$branch$mb` WHERE k = 3")
+    val vP = ManifestTable.publishBranch(spark, dir, "mb")
+    val feed = ManifestTable.changes(spark, dir, vP - 1, vP)
+    val got = feed.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sorted.toSeq
+    // k=2 was masked at the base: the older side must not serve it
+    assert(got == Seq((3, "c", "delete")), got)
+    assert(scannedFiles(feed).nonEmpty &&
+      scannedFiles(feed).forall(_.contains("/_cdc/")),
+      "the publish step must serve its staged feed")
+    assert(ManifestTable.read(spark, dir).collect().map(_.getInt(0)).toSeq ==
+      Seq(1))
+  }
+
   test("materialized feed equals the read-time diff fallback exactly") {
     val dirOn = freshTable("m2", ",'cdc.materialize'='true'")
     val dirOff = freshTable("m3", "")
@@ -378,8 +415,9 @@ class GraftChangesFeedSpec extends SparkTestBase {
       .map(r => (r.getInt(0), r.getString(1), r.getString(2))).sorted.toSeq
     assert(rows(on) == rows(off), (rows(on), rows(off)))
     assert(rows(on) == Seq((2, "b", "delete"), (4, "d", "delete")))
-    assert(on.inputFiles.forall(_.contains("/_cdc/")), on.inputFiles.toSeq)
-    assert(off.inputFiles.exists(!_.contains("/_cdc/")),
+    assert(scannedFiles(on).nonEmpty &&
+      scannedFiles(on).forall(_.contains("/_cdc/")), scannedFiles(on))
+    assert(scannedFiles(off).exists(!_.contains("/_cdc/")),
       "the property-less table must take the diff route")
   }
 
@@ -390,9 +428,9 @@ class GraftChangesFeedSpec extends SparkTestBase {
     val vN = ManifestTable.headVersion(spark, dir).get
     val feed = ManifestTable.changes(spark, dir, vN - 1, vN)
     assert(feed.count() == 0L)
-    assert(feed.inputFiles.isEmpty,
+    assert(scannedFiles(feed).isEmpty,
       "an empty materialized step must not open any file: " +
-        feed.inputFiles.toSeq)
+        scannedFiles(feed))
   }
 
   test("vacuum reaps unreferenced staged CDC dirs, keeps referenced ones") {
@@ -415,7 +453,8 @@ class GraftChangesFeedSpec extends SparkTestBase {
     val vN = ManifestTable.headVersion(spark, dir).get
     val feed = ManifestTable.changes(spark, dir, vN - 1, vN)
     assert(feed.count() == 2L)
-    assert(feed.inputFiles.forall(_.contains("/_cdc/")), feed.inputFiles.toSeq)
+    assert(scannedFiles(feed).nonEmpty &&
+      scannedFiles(feed).forall(_.contains("/_cdc/")), scannedFiles(feed))
   }
 
   test("a DML step in the span falls back to the exact manifest diff") {

@@ -47,7 +47,7 @@ class GraftCloneSpec extends SparkTestBase {
     // stats carried: a pruned scan of the CLONE opens only one foreign dir
     val pruned = ManifestTable.rangeScan(spark, dst, "k", "10", "11")
     assert(pruned.count() == 2L)
-    assert(pruned.inputFiles.map(_.split("/").dropRight(1).last)
+    assert(scannedFiles(pruned).map(_.split("/").dropRight(1).last)
       .distinct.length == 1, "clone must prune by carried stats")
     // independence: a write to the clone never touches the source ...
     ManifestTable.append(Seq((20, "z")).toDF("k", "v"), dst,

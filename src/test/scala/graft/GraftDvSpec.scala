@@ -660,6 +660,54 @@ class GraftDvSpec extends SparkTestBase {
     dir: Unit
   }
 
+  test("internal masked reads plan the V2 scan: no anti-join, no dv file scanned") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val dir = fourDirTable("m19")
+    val v0 = ManifestTable.headVersion(spark, dir).get
+    spark.sql("DELETE FROM gdv.lake.m19 WHERE k IN (12, 31)")
+    val v1 = ManifestTable.headVersion(spark, dir).get
+    val expect = (0 until 20).map(b => b / 5 * 10 + b % 5)
+      .filterNot(Set(12, 31))
+    def frames: Seq[(String, DataFrame)] = Seq(
+      "read" -> ManifestTable.read(spark, dir),
+      "readVersion" -> ManifestTable.readVersion(spark, dir, v1),
+      "rangeScan" -> ManifestTable.rangeScan(spark, dir, "k", "10", "34"),
+      "changes" -> ManifestTable.changes(spark, dir, v0, v1))
+    val plans = new AdaptiveSparkPlanHelper {}
+    frames.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      assert(plans.collectWithSubqueries(plan) {
+        case b: BatchScanExec if b.scan.isInstanceOf[graft.sources.GraftScan] => b
+      }.nonEmpty, s"$name must plan the graft V2 scan:\n$plan")
+      assert(plans.collectWithSubqueries(plan) {
+        case j: BaseJoinExec if j.joinType == LeftAnti => j
+      }.isEmpty, s"$name must not mask through an anti-join:\n$plan")
+      val files = scannedFiles(df)
+      assert(files.nonEmpty && files.forall(!_.contains("/_dv/")),
+        s"$name must scan data files only: $files")
+    }
+    def rows(df: DataFrame) = df.collect().map(_.getInt(0)).sorted.toSeq
+    // the same rows with the masks loaded on the driver and, past the
+    // cap, by each reader from its partition's dv dirs
+    val cap = graft.ScaleKnobs.DvDriverPositionCap
+    Seq(cap, 0L).foreach { c =>
+      graft.ScaleKnobs.DvDriverPositionCap = c
+      try {
+        val Seq(read, readV, range, feed) = frames.map(_._2)
+        assert(rows(read) == expect && rows(readV) == expect, s"cap $c")
+        assert(rows(range) == expect.filter(k => k >= 10 && k <= 34),
+          s"cap $c")
+        assert(feed.collect().map(r => (r.getInt(0), r.getString(1),
+          r.getString(2))).sorted.toSeq ==
+          Seq((12, "v12", "delete"), (31, "v31", "delete")), s"cap $c")
+      } finally graft.ScaleKnobs.DvDriverPositionCap = cap
+    }
+  }
+
   test("direct-API MoR delete with SQL-null semantics and no-op paths") {
     val dir = fourDirTable("m9")
     // provable no-op: bounds outside every dir's range — version unchanged

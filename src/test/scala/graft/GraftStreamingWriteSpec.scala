@@ -57,7 +57,7 @@ class GraftStreamingWriteSpec extends SparkTestBase {
     // stats parity: a point scan prunes to the one epoch dir
     val pruned = ManifestTable.rangeScan(spark, dir, "k", "10", "10")
     assert(pruned.count() == 1L)
-    assert(pruned.inputFiles.map(_.split("/").dropRight(1).last)
+    assert(scannedFiles(pruned).map(_.split("/").dropRight(1).last)
       .distinct.length == 1, "streamed dirs must skip like appended ones")
 
     // CRASH-REPLAY: torch the last checkpoint commit ack, so the
@@ -196,7 +196,7 @@ class GraftStreamingWriteSpec extends SparkTestBase {
     // a point scan prunes to exactly ONE of the streamed dirs
     val pruned = ManifestTable.rangeScan(spark, dir, "k", "250", "250")
     assert(pruned.count() == 1L)
-    assert(pruned.inputFiles.map(_.split("/").dropRight(1).last)
+    assert(scannedFiles(pruned).map(_.split("/").dropRight(1).last)
       .distinct.length == 1, "point scan must open one range dir")
     // rows are SORTED within a dir (requiredOrdering honored)
     val raw = spark.read.parquet(s"$dir/${live.head}")
@@ -485,7 +485,7 @@ class GraftStreamingWriteSpec extends SparkTestBase {
     // the cluster column still prunes (stats landed per range dir)
     val pruned = ManifestTable.rangeScan(spark, dir, "k", "5", "5")
     assert(pruned.count() === 1L)
-    assert(pruned.inputFiles.map(_.split("/").dropRight(1).last)
+    assert(scannedFiles(pruned).map(_.split("/").dropRight(1).last)
       .distinct.length === 1, "range dirs must prune independently")
   }
 

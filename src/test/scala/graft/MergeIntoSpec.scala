@@ -134,13 +134,14 @@ class MergeIntoSpec extends SparkTestBase {
       s"unexpected feed: $rows")
     // cost bound: the diff must scan only the two dirs the manifests
     // don't share (old and new images of k=5's bucket) — an untouched
-    // bucket's dir appearing in inputFiles would mean the diff is
+    // bucket's dir among the scanned files would mean the diff is
     // O(table), not O(changed)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val shared = ManifestTable.pathsOf(fs, dir, v1).toSet
       .intersect(ManifestTable.pathsOf(fs, dir, v2).toSet)
-    val scanned = feed.inputFiles.toSet
+    val scanned = scannedFiles(feed).toSet
+    assert(scanned.nonEmpty, "the diff must scan the re-pointed dirs")
     shared.foreach { rel =>
       assert(!scanned.exists(_.contains(rel)),
         s"diff scanned unchanged dir $rel")
@@ -1009,7 +1010,7 @@ class MergeIntoSpec extends SparkTestBase {
     // (conservative), but NEVER b1's — manifest-level pruning, no I/O
     val hit = ManifestTable.rangeScan(spark, dir, "amt", "12", "15.5")
     assert(hit.as[MergeRow].collect().map(_.k).sorted.toSeq == (12L to 15L))
-    val scannedDirs = hit.inputFiles.map(f =>
+    val scannedDirs = scannedFiles(hit).map(f =>
       f.split("/").dropRight(1).last).toSet
     val prunedDir = ManifestTable.pathsOf(fs, dir, v3)
       .filter(stats.contains).filter(p =>
@@ -1042,7 +1043,7 @@ class MergeIntoSpec extends SparkTestBase {
     ManifestTable.append(nulls, dir, statsCols = Seq("v"))
     val scan = ManifestTable.rangeScan(spark, dir, "v", "a", "z")
     assert(scan.count() == 5L)
-    assert(scan.inputFiles.map(_.split("/").dropRight(1).last).toSet.size == 1,
+    assert(scannedFiles(scan).map(_.split("/").dropRight(1).last).toSet.size == 1,
       "the all-null dir must be pruned at the manifest, not just filtered")
     // two concurrent appends: optimistic rebase means BOTH batches land
     val dir2 = freshDir()
@@ -1226,11 +1227,11 @@ class MergeIntoSpec extends SparkTestBase {
       Map("k" -> ("1", "10"), "amt" -> ("1", "10")))
     assert(hit.as[MergeRow].collect().forall(_.v == "A"))
     assert(hit.count() == 10L)
-    assert(hit.inputFiles.map(_.split("/").dropRight(1).last).toSet.size == 1,
+    assert(scannedFiles(hit).map(_.split("/").dropRight(1).last).toSet.size == 1,
       "conjunctive pruning must open exactly one dir")
     // single-column form unchanged: amt alone keeps A and C
     val one = ManifestTable.rangeScan(spark, dir, "amt", "1", "10")
-    assert(one.inputFiles.map(_.split("/").dropRight(1).last).toSet.size == 2)
+    assert(scannedFiles(one).map(_.split("/").dropRight(1).last).toSet.size == 2)
     assert(one.count() == 20L)
   }
 
@@ -1292,14 +1293,14 @@ class MergeIntoSpec extends SparkTestBase {
       dir, statsCols = Seq("amt"))
     // pre-compaction, a narrow scan must open ALL THREE overlapping dirs
     val before = ManifestTable.rangeScan(spark, dir, "amt", "5", "7")
-    assert(before.inputFiles.map(dirOf).toSet.size == 3)
+    assert(scannedFiles(before).map(dirOf).toSet.size == 3)
     ManifestTable.compactAppend(spark, dir, statsCols = Seq("amt"), k = 3)
     assert(ManifestTable.read(spark, dir).count() == 30L, "compaction must not change rows")
     // post-compaction the same scan opens ONE range-sorted dir
     val after = ManifestTable.rangeScan(spark, dir, "amt", "5", "7")
     assert(after.as[MergeRow].collect().map(_.k).sorted.toSeq == Seq(5L, 6L, 7L))
-    assert(after.inputFiles.map(dirOf).toSet.size == 1,
-      s"disjoint sorted dirs must prune to one, got ${after.inputFiles.map(dirOf).toSet}")
+    assert(scannedFiles(after).map(dirOf).toSet.size == 1,
+      s"disjoint sorted dirs must prune to one, got ${scannedFiles(after).map(dirOf).toSet}")
     // the table stays appendable and newly appended stats participate
     ManifestTable.append(Seq(MergeRow(100L, "late", 100.0)).toDF(), dir,
       statsCols = Seq("amt"))

@@ -412,7 +412,7 @@ class ScaleDesignSpec extends SparkTestBase {
     assert(q.head.getLong(0) > 0L, "1997 scan returned no rows — fixture drift?")
     // manifest-level skipping: of the seven yearly append dirs, the
     // 1997 scan's plan references ONE — six dirs contribute zero I/O
-    val dirs = q.inputFiles.map(f => f.split("/").dropRight(1).last).toSet
+    val dirs = scannedFiles(q).map(f => f.split("/").dropRight(1).last).toSet
     assert(dirs.size == 1, s"1997 scan must touch one append dir, got $dirs")
     // and the residual predicate still reaches the surviving scan, so
     // row groups inside the kept dir prune on footer stats too

@@ -22,6 +22,25 @@ trait SparkTestBase extends AnyFunSuite {
 
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Every data file the executed plan of `df` scans: the files of each
+    * `FileSourceScanExec` and of each `BatchScanExec` input partition,
+    * subqueries and adaptive stages included. `Dataset.inputFiles` sees
+    * only file-source relations, so it is empty for a graft V2 read. */
+  def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq
+        case b: BatchScanExec => b.inputPartitions.flatMap {
+          case fp: FilePartition => fp.files.toSeq.map(_.toPath.toString)
+          case _ => Seq.empty
+        }
+      }.flatten.distinct
+  }
+
   /** Backdate a directory tree's mtimes (dir + every descendant) so a
     * planted orphan ages past the manifest GC's grace window — the GC
     * clocks orphan age from the NEWEST mtime in the tree, so aging only

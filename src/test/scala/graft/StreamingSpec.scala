@@ -394,7 +394,7 @@ class StreamingSpec extends SparkTestBase {
     val hit = graft.sources.ManifestTable.rangeScan(spark, table, "ts",
       "2024-01-01 10:00:00", "2024-01-01 10:30:00")
     assert(hit.as[Event].collect().map(_.event_id).sorted.toSeq == Seq(1L, 2L))
-    assert(hit.inputFiles.map(_.split("/").dropRight(1).last).toSet.size == 1,
+    assert(scannedFiles(hit).map(_.split("/").dropRight(1).last).toSet.size == 1,
       "the 11:00 micro-batch must be pruned at the manifest")
   }
 
