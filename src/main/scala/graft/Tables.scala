@@ -1,14 +1,19 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 
 /** Harness parquet corpus loaders (TESTDATA.md: TPC-H-ish star schema +
   * events/documents/embeddings). One vectorized parquet scan per table;
   * column pruning + predicate pushdown are left to Catalyst (SURVEY §4.1).
+  * Each read's schema comes from the table's parquet footer, read on the
+  * driver ([[GraftParquetSchema]]): the same schema Spark would infer,
+  * without the Spark job its inference starts, so building a query over
+  * the corpus runs no job. The footer is opened on every read.
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    GraftParquetSchema.read(spark, Seq(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = t(s, d, "nation")

@@ -1067,12 +1067,13 @@ object ManifestTable {
 
   /** The logical schema of snapshot `snap`: the declared one, else the
     * footer schema of its data files (a table committed by a pre-schema
-    * writer). The one schema lookup every surface uses — it never plans
-    * a masked read. */
+    * writer), read on the driver with Spark's file choice, so no job
+    * runs. The one schema lookup every surface uses — it never plans a
+    * masked read. */
   private[graft] def schemaAt(spark: SparkSession, tableDir: String,
                               snap: Snapshot): org.apache.spark.sql.types.StructType =
-    snap.declared.getOrElse(
-      spark.read.parquet(snap.paths.map(absPath(tableDir, _)): _*).schema)
+    snap.declared.getOrElse(org.apache.spark.sql.execution.datasources.parquet
+      .GraftParquetSchema.schemaOf(spark, snap.paths.map(absPath(tableDir, _))))
 
   /** Current head version, or None for an uncommitted/absent table —
     * the snapshot-pinning entry point for external access layers (the

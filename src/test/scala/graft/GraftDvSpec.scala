@@ -227,25 +227,6 @@ class GraftDvSpec extends SparkTestBase {
       "rows >= 30 unmatched by source must be masked out")
   }
 
-  /** Spark jobs `body` starts, counted by a listener over a drained
-    * bus (nothing before `body` leaks in, nothing of it is missed). */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    org.apache.spark.graft.ListenerBusDrain.drain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graft.ListenerBusDrain.drain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   test("SQL MoR DELETE runs no job past its write; UPDATE only lands its images") {
     val dir = fourDirTable("m13")
     // non-translatable conditions (k % 5): both ride the position delta

@@ -41,6 +41,25 @@ trait SparkTestBase extends AnyFunSuite {
       }.flatten.distinct
   }
 
+  /** Spark jobs `body` starts, counted by a listener over a drained
+    * bus (nothing before `body` leaks in, nothing of it is missed). */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
   /** Backdate a directory tree's mtimes (dir + every descendant) so a
     * planted orphan ages past the manifest GC's grace window — the GC
     * clocks orphan age from the NEWEST mtime in the tree, so aging only
