@@ -117,6 +117,24 @@ object TextVector {
     out.toSeq
   })
 
+  /** Count of the most frequent adjacent-token bigram of one doc (T24):
+    * the `(doc_id, bigram)` group-by max, computed per row. Keys are
+    * `t(i) + " " + t(i+1)`, the string `concat_ws(' ', ...)` builds, so
+    * empty tokens (double spaces) count as they do in the oracle. */
+  private val topBigramCount = udf((ts: Seq[String]) => {
+    val counts = scala.collection.mutable.HashMap.empty[String, Int]
+    var top = 0
+    var i = 0
+    while (i + 1 < ts.length) {
+      val k = ts(i) + " " + ts(i + 1)
+      val c = counts.getOrElse(k, 0) + 1
+      counts(k) = c
+      if (c > top) top = c
+      i += 1
+    }
+    top.toLong
+  })
+
   // Session-scoped persisted-frame sharing: see FrameMemo.scala (the
   // pattern started here as the t4 pair stage and is now shared with
   // the q15 revenue view in Tpch).
@@ -254,9 +272,10 @@ object TextVector {
   private def cosineN(a: Column, b: Column, na: Column, nb: Column): Column =
     graft.functions.VectorFunctions.dot_product(a, b) / (na * nb)
 
-  /** Adjacent-token bigrams of a token-array column (T2, T24) — one
-    * expression string so the two operators and their oracles can't
-    * drift. Takes the column name (the lambda needs a stable SQL ref). */
+  /** Adjacent-token bigrams of a token-array column. T2 is its only
+    * user (T24 counts bigrams per row in `topBigramCount`); T2's oracle
+    * still restates this expression. Takes the column name (the lambda
+    * needs a stable SQL ref). */
   private def bigrams(tName: String): Column =
     expr(s"transform(sequence(1, size($tName)-1), i -> concat_ws(' ', element_at($tName,i), element_at($tName,i+1)))")
 
@@ -985,8 +1004,8 @@ object TextVector {
     dedupClusters(s, d, driverLimit = 500000L)
 
   /** Body of T20 with the hybrid gate exposed so tests can force the
-    * distributed branch (`driverLimit < 0`: the gate is `nPairs <=
-    * driverLimit`, so 0 still routes an EMPTY pair set to the local
+    * distributed branch (`driverLimit < 0`: the gate is "at most
+    * driverLimit pairs", so 0 still routes an EMPTY pair set to the local
     * branch — only a negative limit excludes every size) and assert
     * both paths agree. */
   private[graft] def dedupClusters(s: SparkSession, d: String,
@@ -997,35 +1016,42 @@ object TextVector {
     // (it is the NEAR-DUP EDGE set, already shrunk by LSH + Jaccard —
     // not the corpus), a local union-find computes the identical
     // fixpoint in microseconds instead of paying one Spark job per
-    // Hash-Min superstep. Above the threshold the distributed loop
-    // below runs unchanged — the gate bounds driver memory by a
-    // constant, never by corpus size. Both paths produce the same
-    // labels (component-min), so the oracle does not care which ran.
-    val nPairs = pairs.count()
-    if (nPairs <= driverLimit) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.collect().foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val nodes = parent.keysIterator.toSet ++ parent.valuesIterator
-      val labeled = nodes.toSeq.map(id => (find(id), id))
-      import s.implicits._
-      return labeled.toDF("canonical_id", "id")
-        .groupBy("canonical_id")
-        .agg(count(lit(1)).as("cluster_size"), sum(col("id")).as("member_checksum"))
-        .orderBy("canonical_id")
+    // Hash-Min superstep. One bounded collect (at most driverLimit + 1
+    // pairs, clamped to the Int range; none for a negative limit) is
+    // both the gate and the input: the local branch runs only if at
+    // most driverLimit came back, so driver memory is bounded by a
+    // constant, never by corpus size, and it finishes on the driver as
+    // a local frame with no further job. Above the threshold the
+    // distributed loop below runs unchanged. Both paths produce the
+    // same labels (component-min), so the oracle does not care which ran.
+    val local =
+      if (driverLimit < 0) None
+      else Some(pairs.limit(math.min(driverLimit, Int.MaxValue - 1L).toInt + 1).collect())
+        .filter(_.length <= driverLimit)
+    local match {
+      case Some(rows) =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        rows.foreach { row =>
+          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        val nodes = parent.keysIterator.toSet ++ parent.valuesIterator
+        val clusters = nodes.toSeq.groupBy(find)
+          .map { case (c, ms) => (c, ms.size.toLong, ms.sum) }.toSeq.sortBy(_._1)
+        import s.implicits._
+        clusters.toDF("canonical_id", "cluster_size", "member_checksum")
+      case None =>
+        t20LabelsMemo(s, d).groupBy(col("label").as("canonical_id"))
+          .agg(count(lit(1)).as("cluster_size"), sum(col("id")).as("member_checksum"))
+          .orderBy("canonical_id")
     }
-    t20LabelsMemo(s, d).groupBy(col("label").as("canonical_id"))
-      .agg(count(lit(1)).as("cluster_size"), sum(col("id")).as("member_checksum"))
-      .orderBy("canonical_id")
   }
 
   /** Converged Hash-Min labels for the distributed T20 branch, memoized
@@ -1151,8 +1177,11 @@ object TextVector {
     * sit above the real corpus envelope (p95 dup 0.69 / top-bigram
     * 0.09, max 0.72 / 0.17 at sf0.01), so the planted degenerate docs
     * ("a b a b …", ids +2,000,000 for doc_id % 13 == 0) are guaranteed
-    * catches. Per-doc bigram counting is a (doc_id, bigram)-keyed agg —
-    * embarrassingly parallel, no cross-doc shuffle at any scale. */
+    * catches. Bigram counting is per row (`topBigramCount`, a compiled
+    * hash-map pass over the doc's tokens; `doc_id` is unique in
+    * real ∪ planted), so the plan is one scan of the token memo, one
+    * projection and the final range sort — no hash exchange, no join
+    * back to the docs, at any scale. */
   def t24_repetition_filter(s: SparkSession, d: String): DataFrame = {
     val real = tokDocs(s, d).select(col("doc_id"), col("text"), col("t"))
     // size >= 2 guard: a single-token source would make element_at(t, 2)
@@ -1165,16 +1194,11 @@ object TextVector {
           "array_repeat(concat_ws(' ', element_at(split(text, ' '), 1), element_at(split(text, ' '), 2)), 20)"))
           .as("text"))
       .select(col("doc_id"), toks(col("text")).as("t"))
-    val docs = real.select(col("doc_id"), col("t")).unionByName(planted)
+    real.select(col("doc_id"), col("t")).unionByName(planted)
       .withColumn("n_toks", size(col("t")))
       .withColumn("n_distinct", size(array_distinct(col("t"))))
-    val bigramStats = docs
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(bigrams("t")).as("bigram"))
-      .groupBy("doc_id", "bigram").agg(count(lit(1)).as("n"))
-      .groupBy("doc_id")
-      .agg(max(col("n")).as("top_bigram_n"), sum(col("n")).as("n_bigrams"))
-    docs.join(bigramStats, Seq("doc_id"), "left")
+      .withColumn("top_bigram_n", when(col("n_toks") >= 2, topBigramCount(col("t"))))
+      .withColumn("n_bigrams", when(col("n_toks") >= 2, (col("n_toks") - 1).cast("bigint")))
       .select(col("doc_id"), col("n_toks"),
         round(lit(1.0) - col("n_distinct") / col("n_toks"), 6).as("dup_token_frac"),
         coalesce(col("top_bigram_n"), lit(0L)).as("top_bigram_n"),
@@ -1266,6 +1290,10 @@ object TextVector {
     * ScaleDesignSpec can prove the bucketed layout joins the ingest
     * batch with zero exchange on the corpus side. */
   private[graft] def minhashIndex(s: SparkSession, d: String): DataFrame =
+    // pass a generator its UDF expression, not an attribute bound to one:
+    // over such an attribute InferFiltersFromGenerate pushes
+    // size(UDF(UDF(..))) > 0 AND isnotnull(UDF(UDF(..))) below the
+    // projection, and the minhash UDFs then run three times per doc
     shingled(documents(s, d).select(col("doc_id"), col("text")))
       .select(col("doc_id").as("i_id"),
         posexplode(minhashBandKeys(col("sh"))).as(Seq("band", "key")))

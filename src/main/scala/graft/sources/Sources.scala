@@ -2,6 +2,7 @@ package graft.sources
 
 import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
@@ -166,7 +167,7 @@ object Sources {
       .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
       .sortWithinPartitions("o_orderdate")
       .write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+    GraftParquetSchema.read(s, Seq(dir))
       .filter(col("o_orderdate") >= "1998-01-01" && col("o_orderdate") < "1999-01-01")
       .groupBy(month(col("o_orderdate")).as("m"))
       .agg(count(lit(1)).as("n"),
@@ -370,7 +371,7 @@ object Sources {
       .repartitionByRange(8, col("zv"))
       .sortWithinPartitions("zv")
       .write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+    GraftParquetSchema.read(s, Seq(dir))
       .filter(col("o_orderdate") >= "1997-01-01" && col("o_orderdate") < "1998-01-01" &&
         col("o_custkey") % 4 === 0)
       .groupBy(month(col("o_orderdate")).cast("int").as("m"))

@@ -15,4 +15,12 @@ class BoardInvariantsSpec extends SparkTestBase {
     assert(started.forall(_._2 == 0),
       s"jobs started at build time: ${started.filter(_._2 > 0)}")
   }
+
+  test("s11 and s13 read back the dir they wrote with no schema-inference job") {
+    // the layout write's own jobs: s11 3, s13 5; a read-back that
+    // inferred the written dir's schema would add one job to each
+    val s11 = jobsOf(SparkEntry.queries("s11_clustered_layout")(spark, sf))
+    val s13 = jobsOf(SparkEntry.queries("s13_zorder_layout")(spark, sf))
+    assert(s11 <= 3 && s13 <= 5, s"build jobs: s11 $s11, s13 $s13")
+  }
 }
