@@ -1652,29 +1652,30 @@ object TextVector {
     * membership SKETCH instead of the exact broadcast join. At 100 TB the
     * exact path ships the full benchmark shingle SET to every executor;
     * the Bloom filter is a constant-size bitmap (fpp-controlled) built in
-    * ONE aggregation pass and broadcast as a single row — the classic
-    * sketch trade, completing the family: A4 HyperLogLog (cardinality),
-    * T28 count-min (frequency), T33 Bloom (membership). The exact join
-    * stays in-plan here as the verification harness for the sketch's
-    * contract: per training doc, every exactly-contaminated shingle MUST
-    * bloom-hit (no false negatives — `bloom_consistent` folds the
-    * guarantee into an oracle-checkable boolean, the a4/t28 pattern),
-    * while false positives only ever ADD candidate hits (`n_bloom_hits ≥
-    * n_exact_hits`), which a production pipeline re-verifies exactly on
-    * the tiny flagged subset. */
+    * ONE aggregation pass — the classic sketch trade, completing the
+    * family: A4 HyperLogLog (cardinality), T28 count-min (frequency), T33
+    * Bloom (membership). Both halves are Spark's Catalyst expressions: the
+    * filter (xxhash64 of each shingle, 100k items at 1% fpp) is a scalar
+    * subquery that runs once, and the probe parses it once per task. The
+    * exact join stays in-plan as the verification harness for the
+    * sketch's contract: per training doc, every exactly-contaminated
+    * shingle MUST bloom-hit (no false negatives — `bloom_consistent`
+    * folds the guarantee into an oracle-checkable boolean, the a4/t28
+    * pattern), while false positives only ever ADD candidate hits, which
+    * a production pipeline re-verifies exactly on the tiny flagged subset. */
   def t33_bloom_decontaminate(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.GraftShims.{bloomFilterAgg, mightContain}
     val base = shingledNearDups(s, d)
     val bench = base.filter(col("doc_id") <= 20)
       .select(explode(col("sh")).as("shingle"))
-    val bf = bench.agg(
-      graft.functions.BloomFilterAgg(col("shingle"), 100000L, 0.01).as("bf"))
+    val bf = bench.agg(bloomFilterAgg(xxhash64(col("shingle")), 100000L,
+      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(100000L, 0.01)))
     val benchSet = bench.distinct().withColumn("exact_hit", lit(true))
     val train = base.filter(col("doc_id") > 20)
       .select(col("doc_id").as("train_id"), explode(col("sh")).as("shingle"))
-    train.crossJoin(broadcast(bf))
-      .join(broadcast(benchSet), Seq("shingle"), "left")
+    train.join(broadcast(benchSet), Seq("shingle"), "left")
       .withColumn("bloom_hit",
-        graft.functions.BloomFilterAgg.mightContain(col("bf"), col("shingle")))
+        mightContain(bf.scalar(), xxhash64(col("shingle"))))
       .groupBy("train_id")
       .agg(
         count(lit(1)).as("n_shingles"),

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Manifest-pointer table commit — the atomic-swap primitive behind the
   * S14 compaction job and the X9 upsert sink (SURVEY.md §2.1 S14, §2.10
@@ -712,18 +713,32 @@ object ManifestTable {
     * complement to min/max stats: on a high-cardinality column (id,
     * url, hash) whose values scatter across every dir, range stats
     * prune nothing while a per-dir membership sketch prunes everything
-    * that provably lacks the key. One small aggregate job per new dir
-    * (cost ∝ the batch, like the stats pass); dirs above
+    * that provably lacks the key. One grouped aggregate job over the
+    * batch's new dirs (cost ∝ the batch, like the stats pass); dirs above
     * [[graft.ScaleKnobs.BloomMaxItems]] recorded rows skip (sidecar
     * size is the constraint; such dirs are no longer point-lookup
     * shaped). Supported column types: string + integral — the types
     * whose cast-to-string rendering the probe side can reproduce
-    * exactly from a pushed literal. Returns relPath → payload. */
+    * exactly from a pushed literal. Returns relPath → payload.
+    *
+    * Each sidecar is Spark's `BloomFilterAggregate` over the rendering,
+    * sized as `BloomFilter.create(expected, fpp)` sizes a filter (which
+    * also refuses an fpp outside (0, 1)); it adds a string as `putBinary`
+    * of its UTF-8 bytes, which is `putString`, so the bytes are those of
+    * that filter after `putString` of each value — what `pruneByBloom`'s
+    * `mightContainString` probes. The aggregate answers null for an
+    * all-null column; `coalesce` writes the empty filter there instead.
+    * Spark caps the bit count at
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumBits`, which a dir
+    * of at most `BloomMaxItems` rows reaches only for `bloomFpp` below
+    * about 1e-14; the capped sidecar is still a valid, self-describing
+    * filter (size and hash count live in its header). */
   private[sources] def buildBloomSidecars(spark: SparkSession,
       tableDir: String, newPaths: Seq[String],
       newStats: Map[String, String],
       headHint: Option[Long] = None): Map[String, String] = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.GraftShims
+    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, regexp_replace}
     import org.apache.spark.sql.types._
     val fs = fsOf(spark, tableDir)
     val head = headHint.orElse(versions(fs, tableDir).lastOption)
@@ -769,27 +784,28 @@ object ManifestTable {
       fs.makeQualified(new Path(absPath(tableDir, p))).toString -> p).toMap
     val df = spark.read.schema(toPhysical(declared, cmap))
       .parquet(eligible.map(p => absPath(tableDir, p)): _*)
-      .withColumn("__graft_bdir", org.apache.spark.sql.functions
-        .regexp_replace(org.apache.spark.sql.functions.input_file_name(),
-          "/[^/]*$", ""))
-    val aggs = usable.map(c => graft.functions.BloomFilterAgg(
-      col(cmap.getOrElse(c, c)).cast("string"), expected, fpp).as(c))
+      .withColumn("__graft_bdir",
+        regexp_replace(input_file_name(), "/[^/]*$", ""))
+    val empty = new java.io.ByteArrayOutputStream()
+    BloomFilter.create(expected, fpp).writeTo(empty)
+    val numBits = BloomFilter.optimalNumOfBits(expected, fpp)
+    val aggs = usable.map(c => coalesce(GraftShims.bloomFilterAgg(
+      col(cmap.getOrElse(c, c)).cast("string"), expected, numBits),
+      lit(empty.toByteArray)).as(c))
     val grouped = df.groupBy(col("__graft_bdir"))
       .agg(aggs.head, aggs.tail: _*).collect()
     val idxName = "bl-" + java.util.UUID.randomUUID().toString.take(8)
     grouped.zipWithIndex.flatMap { case (r, i) =>
       relOf.get(fs.makeQualified(new Path(r.getString(0))).toString)
-        .flatMap { p =>
+        .map { p =>
           val pairs = usable.zipWithIndex.flatMap { case (c, j) =>
-            Option(r.get(j + 1)).map(_.asInstanceOf[Array[Byte]]).map { bytes =>
-              val phys = cmap.getOrElse(c, c)
-              val rel = s"$IdxDirName/$idxName/d$i-${encTok(phys)}.bloom"
-              val out = fs.create(new Path(tableDir, rel), true)
-              try out.write(bytes) finally out.close()
-              Seq(encTok(phys), rel)
-            }
-          }.flatten
-          if (pairs.isEmpty) None else Some(p -> pairs.mkString("\t"))
+            val phys = cmap.getOrElse(c, c)
+            val rel = s"$IdxDirName/$idxName/d$i-${encTok(phys)}.bloom"
+            val out = fs.create(new Path(tableDir, rel), true)
+            try out.write(r.getAs[Array[Byte]](j + 1)) finally out.close()
+            Seq(encTok(phys), rel)
+          }
+          p -> pairs.mkString("\t")
         }
     }.toMap
   }
@@ -816,8 +832,7 @@ object ManifestTable {
   private[graft] def pruneByBloom(fs: FileSystem, tableDir: String,
       paths: Seq[String], blooms: Map[String, String],
       points: Seq[(String, Set[String])],
-      cache: scala.collection.mutable.Map[String,
-        Option[org.apache.spark.util.sketch.BloomFilter]],
+      cache: scala.collection.mutable.Map[String, Option[BloomFilter]],
       budget: java.util.concurrent.atomic.AtomicInteger)
       : Seq[String] = {
     if (blooms.isEmpty || points.isEmpty) return paths
@@ -846,11 +861,10 @@ object ManifestTable {
     if (toLoad.nonEmpty) {
       budget.addAndGet(-toLoad.size): Unit
       val fetched = toLoad.toSeq.map(rel => rel -> metaIoPool.submit(
-        new java.util.concurrent.Callable[
-            Option[org.apache.spark.util.sketch.BloomFilter]] {
+        new java.util.concurrent.Callable[Option[BloomFilter]] {
           override def call() = try {
             val in = fs.open(new Path(absPath(tableDir, rel)))
-            try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(in))
+            try Some(BloomFilter.readFrom(in))
             finally in.close()
           } catch { case _: Exception => None }
         }))
@@ -1165,7 +1179,6 @@ object ManifestTable {
                                    retainGenerations: Int = 2,
                                    meta: Map[String, String] = Map.empty)
       : (Long, String) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val spark = df.sparkSession
     val fs = fsOf(spark, tableDir)
     val root = new Path(tableDir)
@@ -2023,7 +2036,7 @@ object ManifestTable {
                                  cmap: Map[String, String],
                                  headHint: Option[Long] = None)
       : Map[String, String] = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, spark_partition_id}
+    import org.apache.spark.sql.functions.{col, spark_partition_id}
     // "rb" becomes the partitionBy dir key and "__graft_*" carries the
     // Morton helpers — a user column with either name would be silently
     // consumed (withColumn replaces, leaf-dir reads null-fill), so
@@ -2091,7 +2104,6 @@ object ManifestTable {
   def compactAppend(spark: SparkSession, tableDir: String,
                     statsCols: Seq[String], k: Int = graft.ScaleKnobs.DefaultClusterDirs,
                     retainGenerations: Int = 2): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, spark_partition_id}
     require(statsCols.nonEmpty, "compactAppend needs at least the sort column")
     // a bucketed table's dirs are HASH buckets; a range/Morton rewrite
     // would break the b=N invariant every merge relies on (worse: its
@@ -2791,30 +2803,23 @@ object ManifestTable {
     * rewrites onto GraftRowLevelOps): carry every live dir the
     * stats prove `bounds`-free, run `rewrite` over the rest, publish
     * the result as one fresh dir with fresh stats under optimistic
-    * concurrency. `rewrite` must preserve the declared schema.
-    * `alwaysRewrite` = run `rewrite` even when no dir is touched
-    * (over an empty, declared-schema frame) — a rewrite that can ADD
-    * rows (MERGE's inserts) must still publish them. */
+    * concurrency. `rewrite` must preserve the declared schema. */
   private[graft] def rewriteWhere(spark: SparkSession, tableDir: String,
                                   bounds: Map[String, (String, String)],
-                                  retainGenerations: Int, cidPrefix: String,
-                                  alwaysRewrite: Boolean = false)(
+                                  retainGenerations: Int, cidPrefix: String)(
       rewrite: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
     val fs = fsOf(spark, tableDir)
     val baseV = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
     val base = snapshotOf(fs, tableDir, baseV)
-    if (base.paths.isEmpty && !alwaysRewrite) return baseV
+    if (base.paths.isEmpty) return baseV
     val baseStats = base.stats
-    require(base.paths.nonEmpty || base.schemaDdl.isDefined,
-      s"$tableDir is empty and declares no schema — nothing to rewrite")
     val tableSchema = schemaAt(spark, tableDir, base)
     val touched = prunePathsIn(base.paths, baseStats,
       bounds.filter { case (c, _) => tableSchema.fieldNames.contains(c) },
       tableSchema)
-    if (touched.isEmpty && !alwaysRewrite) return baseV // provable no-op
+    if (touched.isEmpty) return baseV // provable no-op
     // the rewritten dir re-records whichever columns the touched dirs
     // tracked, so data skipping survives the rewrite
     val statsCols = tableSchema.fieldNames.filter(c =>
@@ -2843,8 +2848,6 @@ object ManifestTable {
       else Some(statsPayloadFrom(keptRows, statsCols, m))
     if (keptRows == 0L) // the rewrite kept nothing — no dir to publish
       fs.delete(new Path(s"$tableDir/$cid"), true): Unit
-    if (touched.isEmpty && keptRows == 0L)
-      return baseV // nothing removed, nothing added — don't bump a version
     publishRewrite(spark, tableDir, touched.toSet,
       payload.map(_ => cid), payload, kept.schema, statsCols,
       retainGenerations, boundChecks,

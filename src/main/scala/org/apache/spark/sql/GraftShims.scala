@@ -11,6 +11,19 @@ object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Spark's Bloom filter kernel, which has no public function: the
+    * serialized `BloomFilter.create(expectedItems, numBits)` over a long,
+    * integral or string `item` (null if none is non-null), and its probe
+    * of a long `item`, whose `filter` is a literal or an uncorrelated
+    * scalar subquery. */
+  def bloomFilterAgg(item: Column, expectedItems: Long, numBits: Long): Column =
+    column(new catalyst.expressions.aggregate.BloomFilterAggregate(
+      expression(item), catalyst.expressions.Literal(expectedItems),
+      catalyst.expressions.Literal(numBits)).toAggregateExpression())
+  def mightContain(filter: Column, item: Column): Column =
+    column(catalyst.expressions.BloomFilterMightContain(
+      expression(filter), expression(item)))
+
   /** A V2 literal expression (`LiteralValue`'s companion is
     * private[sql]) — the morton distribution's baked domain bounds. */
   def v2LongLiteral(v: Long): connector.expressions.Expression =

@@ -8,9 +8,9 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleEx
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
-/** The per-row shape of t24's bigram statistics and the driver-side
-  * finish of t20's union-find branch: what each computes, and the jobs
-  * and exchanges each may cost. */
+/** The per-row shape of t24's bigram statistics, the driver-side
+  * finish of t20's union-find branch and t33's Catalyst Bloom probe:
+  * what each computes, and the jobs, exchanges and joins each may cost. */
 class CurationShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper
     with BeforeAndAfterAll {
   import spark.implicits._
@@ -121,5 +121,25 @@ class CurationShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper
     val rows = max.as[(Long, Long, Long)].collect()
     assert(rows.nonEmpty && rows.toSeq == dflt.as[(Long, Long, Long)].collect().toSeq)
     assert(rows.map(_._1).toSeq == rows.map(_._1).sorted.toSeq, "not sorted by canonical_id")
+  }
+
+  test("t33: Spark's Bloom probe over a scalar subquery; no UDF, no cross join, no build job") {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalaUDF}
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+    ops.TextVector.t33_bloom_decontaminate(spark, sf).collect()
+    var df: DataFrame = null
+    val build = jobsOf { df = ops.TextVector.t33_bloom_decontaminate(spark, sf) }
+    df.write.format("noop").mode("overwrite").save()
+    val plan = df.queryExecution.executedPlan
+    val exprs = collectWithSubqueries(plan) { case p => p.expressions }
+      .flatten.flatMap(_.collect { case e => e })
+    assert(exprs.exists(_.isInstanceOf[BloomFilterMightContain]), s"t33 plan:\n$plan")
+    assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), s"t33 plan:\n$plan")
+    val crossJoins = collectWithSubqueries(plan) {
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: CartesianProductExec => j
+    }
+    assert(crossJoins.isEmpty, s"t33 plan:\n$plan")
+    assert(build == 0, s"building t33 started $build jobs")
   }
 }

@@ -144,6 +144,62 @@ class GraftMetaSpec extends SparkTestBase {
     assert(!advice().contains("advice:bloom"), advice())
   }
 
+  test("a bloom sidecar is the util.sketch filter of the rendered values, all-null columns included") {
+    import org.apache.spark.util.sketch.BloomFilter
+    wh: Unit
+    val s = spark; import s.implicits._
+    spark.sql("DROP TABLE IF EXISTS gmeta.lake.bfmt")
+    spark.sql("CREATE TABLE gmeta.lake.bfmt (s STRING, i INT, n STRING) " +
+      "TBLPROPERTIES ('statsCols'='i', 'bloomCols'='s,i,n', " +
+      "'bloomFpp'='0.01', 'retainGenerations'='10')")
+    // two appends, each one dir of three files: 150 rows (sized to its
+    // count) and 30 rows (sized to the 64-item floor); non-ASCII, empty
+    // and null strings, negative ints
+    val batches = Seq(0 until 150, 150 until 180).map(_.map(k =>
+      (if (k % 11 == 0) null else if (k % 7 == 0) "" else s"naïve-日本-$k",
+        if (k % 13 == 0) null else Integer.valueOf(k * 37 - 2000),
+        null: String)))
+    batches.foreach(rows => rows.toDF("s", "i", "n").repartition(3)
+      .writeTo("gmeta.lake.bfmt").append())
+    val dir = s"$wh/lake/bfmt"
+    val head = ManifestTable.headVersion(spark, dir).get
+    val blooms = ManifestTable.bloomsOf(fs, dir, head)
+    assert(blooms.size == 2, blooms)
+    // the old aggregator's semantics, restated: a filter sized by the
+    // dir's row count (floor 64) at the table's fpp, then putString of
+    // each non-null value's cast-to-string rendering
+    def reference(n: Int, values: Seq[String]): Seq[Byte] = {
+      val bf = BloomFilter.create(math.max(64L, n.toLong), 0.01)
+      values.filter(_ != null).foreach(bf.putString)
+      val out = new java.io.ByteArrayOutputStream()
+      bf.writeTo(out)
+      out.toByteArray.toSeq
+    }
+    val byRows = batches.map(rows => rows.length -> rows).toMap
+    blooms.foreach { case (p, payload) =>
+      assert(fs.listStatus(new Path(dir, p)).count(_.getPath.getName.endsWith(".parquet")) > 1)
+      val rows = byRows(ManifestTable.rowsIn(ManifestTable.statsOf(fs, dir, head)(p)).get.toInt)
+      val want = Map(
+        "s" -> reference(rows.length, rows.map(_._1)),
+        "i" -> reference(rows.length, rows.map(r => Option(r._2).map(_.toString).orNull)),
+        "n" -> reference(rows.length, rows.map(_._3)))
+      val entries = ManifestTable.bloomEntries(payload)
+      assert(entries.keySet == want.keySet, entries)
+      entries.foreach { case (c, rel) =>
+        val in = fs.open(new Path(dir, rel))
+        val got = try in.readAllBytes().toSeq finally in.close()
+        assert(got == want(c), s"sidecar $rel of column $c in $p")
+      }
+    }
+    // an fpp outside (0, 1) is refused, not written as a broken filter
+    spark.sql("DROP TABLE IF EXISTS gmeta.lake.bfmt0")
+    spark.sql("CREATE TABLE gmeta.lake.bfmt0 (k INT) " +
+      "TBLPROPERTIES ('bloomCols'='k', 'bloomFpp'='0', 'retainGenerations'='10')")
+    val e = intercept[Exception](spark.sql("INSERT INTO gmeta.lake.bfmt0 VALUES (1),(2)"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("False positive probability")), e)
+  }
+
   test("CALL system.vacuum sweeps aged orphans, spares fresh ones") {
     val dir = seeded("v1")
     // a crashed writer's leavings: a data dir no manifest references

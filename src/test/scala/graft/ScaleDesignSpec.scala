@@ -168,7 +168,10 @@ class ScaleDesignSpec extends SparkTestBase {
     // a FRESH candidate plan (bypasses the memo cache, which is also
     // where the persist() now lives — the builder itself is cache-free);
     // sparkPlan is the pre-AQE physical plan: nothing executes, we only
-    // pin the join inputs' columns
+    // pin the join inputs' columns. Reset first: CacheManager would
+    // substitute a pair memo an earlier suite persisted for this
+    // plan-identical frame, leaving no band join to inspect
+    ops.TextVector.resetT4PairCache(spark, sf)
     val df = ops.TextVector.computeMinhashCandidatePairs(spark, sf)
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val physical = df.queryExecution.sparkPlan
