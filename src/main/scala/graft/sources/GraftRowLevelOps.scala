@@ -16,13 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /** Native row-level operations (S24–S26 via Spark's OWN DML rewrites):
-  * the two `RowLevelOperation` implementations behind
+  * the three `RowLevelOperation` implementations behind
   * [[GraftTable.newRowLevelOperationBuilder]], replacing the extension
   * seam's plan-intercepting rules with the analyzer-blessed path —
   * `RewriteDeleteFromTable` / `RewriteUpdateTable` /
   * `RewriteMergeIntoTable` now plan DELETE/UPDATE/MERGE themselves
   * (including subquery conditions, which the seam refused), and this
-  * file supplies the two physical strategies those rewrites choose
+  * file supplies the three physical strategies those rewrites choose
   * between:
   *
   *  - [[GraftGroupOperation]] — group-based copy-on-write at COMMIT-DIR
@@ -38,12 +38,16 @@ import org.apache.spark.util.SerializableConfiguration
   *    executor-written changeset keyed on the bucket key, applied at
   *    commit through [[MergeInto.applyBatch]] — O(changeset), never a
   *    group rewrite that would break the `b=N` layout invariant.
+  *  - [[GraftPositionDeltaOperation]] — `SupportsDelta` keyed on (file,
+  *    row position) for `dml.mode=merge-on-read` tables: deletes land
+  *    as deletion vectors, new images as one fresh dir.
   *
-  * Translatable DELETEs still short-circuit before either path:
-  * Spark's `OptimizeMetadataOnlyDeleteFromTable` routes them to
-  * [[GraftTable.deleteWhere]] (truncate fast path, stats-bounded CoW,
-  * bucketed merge-kernel delete), so the native adoption only ever
-  * CHANGES the plan for conditions the V1-Filter bridge cannot carry.
+  * Two DELETE shapes short-circuit: a truncate, and a V1-translatable
+  * predicate on a plain copy-on-write table, which Spark's
+  * `OptimizeMetadataOnlyDeleteFromTable` routes to
+  * [[GraftTable.deleteWhere]]'s stats-bounded copy-on-write. The direct
+  * `updateWhere`/`deleteWhereMoR`/`updateWhereMoR` API builds the same
+  * `UpdateTable`/`DeleteFromTable` plans and runs these writers too.
   */
 object GraftRowLevel {
 
@@ -216,9 +220,10 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
       GraftTaskWriters.publishNamed(fs, new Path(dir, stageRel),
         new Path(dir, cid), files.map(m => new Path(m.file).getName).toSeq)
       // the replacement dir re-records whatever columns the touched
-      // dirs tracked (mirrors rewriteWhere), and declared CHECK
-      // constraints bind the read-back in the same pass — an UPDATE'd
-      // row that violates a constraint fails here, before any commit
+      // dirs tracked (as ManifestTable.deleteWhere does), and declared
+      // CHECK constraints bind the read-back in the same pass — an
+      // UPDATE'd row that violates a constraint fails here, before any
+      // commit
       val headV = ManifestTable.versions(fs, dir).last
       val baseStats = ManifestTable.statsOf(fs, dir, headV)
       val statsCols = writeSchema.fieldNames.filter(c => touched.exists(p =>
@@ -332,7 +337,7 @@ class GraftDeltaOperation(table: GraftTable, cmd: Command, key: String)
 
   override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
-      override def build(): DeltaWrite = new GraftDeltaWrite(table, key, info)
+      override def build(): DeltaWrite = new GraftDeltaWrite(table, key, info, cmd)
     }
 }
 
@@ -346,7 +351,8 @@ private[sources] object GraftDeltaWrite {
   val ChangeCol = "_graft_change"
 }
 
-class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo)
+class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo,
+                      cmd: Command)
     extends DeltaWrite with DeltaBatchWrite {
 
   private val runId = java.util.UUID.randomUUID().toString.take(8)
@@ -389,6 +395,9 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo)
         throw new IllegalStateException(s"bucketed geometry vanished at $dir"))
       val cs0 = spark.read.schema(changesetSchema).parquet(s"$dir/$pubRel")
       val marker = col(GraftDeltaWrite.ChangeCol)
+      // a DELETE's changeset holds delete records only: no insert can
+      // duplicate a key, so it skips both insert probes below
+      val inserts = cmd != Command.DELETE
       // a keyed table holds ONE row per key, so an INSERT record for a
       // key the target already holds — reachable via MERGE's NOT
       // MATCHED under a compound ON predicate, or an UPDATE that moves
@@ -412,8 +421,10 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo)
       // (delete+insert) plus an unmatched INSERT of the same key in
       // one statement is the same ambiguity and used to slip through
       // the pure-insert anti-join (r19 review find).
-      val dupIns = cs0.filter(marker === 0).groupBy(col(key))
-        .count().filter(col("count") > 1).limit(5).collect()
+      val dupIns =
+        if (!inserts) Array.empty[org.apache.spark.sql.Row]
+        else cs0.filter(marker === 0).groupBy(col(key))
+          .count().filter(col("count") > 1).limit(5).collect()
       if (dupIns.nonEmpty)
         throw new IllegalStateException(
           s"MERGE carries duplicate insert records for source key(s) " +
@@ -425,7 +436,7 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo)
       // that lands between probe and commit forces a rebase, whose
       // retry re-probes and refuses instead of silently replacing the
       // winner's row.
-      def standingClashGuard(): Unit = {
+      def standingClashGuard(): Unit = if (inserts) {
         val clash = pureInserts
           .join(MergeInto.standingForKeys(spark, dir, pureInserts)
             .select(col(key)), Seq(key), "left_semi")
@@ -537,9 +548,9 @@ class GraftPositionDeltaOperation(table: GraftTable, cmd: Command)
   * re-reads the changeset to build masks: it moves exactly the
   * message-named dv files into `_dv/<name>/d=<i>`, lands insert
   * records into fresh data dirs, and publishes both through
-  * [[ManifestTable.publishMorDelta]] — the same commit (and the same
-  * conflict guards) the direct `deleteWhereMoR`/`updateWhereMoR` API
-  * uses. */
+  * [[ManifestTable.publishMorDelta]]. SQL DML on a merge-on-read
+  * table and the direct `deleteWhereMoR`/`updateWhereMoR` API both
+  * run here. */
 class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
                               cmd: Command = Command.MERGE)
     extends DeltaWrite with DeltaBatchWrite {

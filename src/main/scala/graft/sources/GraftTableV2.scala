@@ -307,8 +307,7 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
       : org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
     () => bucketedKey match {
       case Some(k) => new GraftDeltaOperation(this, info.command, k)
-      case None if tableProps.get("dml.mode")
-          .exists(_.equalsIgnoreCase("merge-on-read")) =>
+      case None if mergeOnRead =>
         new GraftPositionDeltaOperation(this, info.command)
       case None => new GraftGroupOperation(this, info.command)
     }
@@ -338,12 +337,21 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
     base
   }
 
+  private def mergeOnRead: Boolean =
+    tableProps.get("dml.mode").exists(_.equalsIgnoreCase("merge-on-read"))
+
+  /** Truncate on every table; a filtered DELETE only on a plain
+    * copy-on-write table whose filters [[GraftDeleteSupport]] can
+    * evaluate. Every other DELETE plans Spark's row-level rewrite onto
+    * the writers of [[newRowLevelOperationBuilder]]. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(GraftDeleteSupport.columnOf(_).isDefined)
+    filters.forall(_ == org.apache.spark.sql.sources.AlwaysTrue()) ||
+      (!mergeOnRead && bucketedKey.isEmpty &&
+        filters.forall(GraftDeleteSupport.columnOf(_).isDefined))
 
   /** SQL `DELETE FROM` (and `TRUNCATE TABLE` via [[SupportsDelete]]'s
-    * default, S24): no-WHERE deletes commit an empty path list —
-    * metadata only; predicated deletes run
+    * default, S24) that [[canDeleteWhere]] accepted: no-WHERE deletes
+    * commit an empty path list — metadata only; predicated deletes run
     * [[ManifestTable.deleteWhere]]'s dir-granular copy-on-write, with
     * the pushed filters folded to stats bounds (rendered in the PINNED
     * stats zone, like every other pruning surface) so untouched dirs
@@ -352,10 +360,8 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
     * pin — a delete is a write, and writes rebase. */
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val spark = SparkSession.active
-    val retain = tableProps.get("retainGenerations")
-      .flatMap(_.toIntOption).getOrElse(2)
-    if (filters.isEmpty ||
-        filters.forall(_ == org.apache.spark.sql.sources.AlwaysTrue())) {
+    val retain = GraftRowLevel.retainOf(this)
+    if (filters.forall(_ == org.apache.spark.sql.sources.AlwaysTrue())) {
       ManifestTable.truncateLive(spark, tableDir, retain): Unit
       return
     }
@@ -369,27 +375,10 @@ case class GraftTable(tableDir: String, pinnedV: Option[Long],
     val head = ManifestTable.headVersion(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(
         s"no committed graft table at $tableDir"))
-    if (MergeInto.bucketedGeometry(spark, tableDir).isDefined) {
-      // S31 bucketed layout: a CoW rewrite dir would break the b=N
-      // layout invariant, so DELETE routes through the merge kernel —
-      // matching rows become a delete-flagged source (one table scan
-      // with the predicate pushed to parquet; the rewrite itself stays
-      // O(touched buckets)). cond TRUE deletes; NULL/FALSE survive —
-      // exactly the filter.
-      MergeInto.merge(ManifestTable.read(spark, tableDir).filter(cond),
-        tableDir, deleteWhen = org.apache.spark.sql.functions.lit(true)): Unit
-    } else {
-      val zone = ManifestTable.statsZoneOf(spark,
-        ManifestTable.metaOf(fs, tableDir, head))
-      val bounds = ManifestSupport.boundsOf(filters.toIndexedSeq, zone)
-      // S41 — `dml.mode=merge-on-read` (TBLPROPERTIES): the delete
-      // stages a deletion vector instead of rewriting touched dirs —
-      // write cost ∝ deleted rows; compaction materializes later
-      if (tableProps.get("dml.mode").exists(_.equalsIgnoreCase("merge-on-read")))
-        ManifestTable.deleteWhereMoR(spark, tableDir, cond, bounds, retain): Unit
-      else
-        ManifestTable.deleteWhere(spark, tableDir, cond, bounds, retain): Unit
-    }
+    val zone = ManifestTable.statsZoneOf(spark,
+      ManifestTable.metaOf(fs, tableDir, head))
+    val bounds = ManifestSupport.boundsOf(filters.toIndexedSeq, zone)
+    ManifestTable.deleteWhere(spark, tableDir, cond, bounds, retain): Unit
   }
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {

@@ -577,21 +577,20 @@ object ManifestTable {
 
   /** Total position records across a version's dvs = the EXACT
     * masked-row count. Exactness rests on two protocol invariants
-    * every dv writer upholds. First, each entry's `@<rows>` is the
-    * exact record count of its `d=<i>` dataset: [[morRewrite]]
-    * observes it on the dv write itself, and the S43 SQL delta write
-    * (GraftPositionDeltaWrite) sums the per-file counts its task
-    * writers report for exactly the files it moves into `d=<i>`.
-    * Second, stacked entries of one dir are pairwise position-disjoint,
-    * because (a) both mask producers ([[deleteWhereMoR]]/
-    * [[morRewrite]] and the S43 delta task writers, both fed by a
-    * masked scan) compute new positions against the BASE version's
-    * LOGICAL rows — already-masked positions can never re-enter a
-    * changeset — and (b) [[publishMorDelta]] aborts (no retry) when a
-    * touched dir's dv advanced past the base, so no concurrent writer
-    * can stack a mask computed against other masks. S21's
-    * metadata-only COUNT(*) under masks and the V2 scan's reported
-    * statistics both lean on this arithmetic. */
+    * the dv writer upholds. First, each entry's `@<rows>` is the
+    * exact record count of its `d=<i>` dataset: the one mask producer,
+    * the S43 position-delta write (GraftPositionDeltaWrite, behind SQL
+    * DML and [[deleteWhereMoR]]/[[updateWhereMoR]] alike), sums the
+    * per-file counts its task writers report for exactly the files it
+    * moves into `d=<i>`. Second, stacked entries of one dir are
+    * pairwise position-disjoint, because (a) its task writers are fed
+    * by a masked scan, so they compute new positions against the BASE
+    * version's LOGICAL rows — already-masked positions can never
+    * re-enter a changeset — and (b) [[publishMorDelta]] aborts (no
+    * retry) when a touched dir's dv advanced past the base, so no
+    * concurrent writer can stack a mask computed against other masks.
+    * S21's metadata-only COUNT(*) under masks and the V2 scan's
+    * reported statistics both lean on this arithmetic. */
   private[graft] def dvDeletedRows(dv: Map[String, String]): Long =
     dv.valuesIterator.flatMap(dvEntries(_).map(_._2)).sum
 
@@ -1830,7 +1829,7 @@ object ManifestTable {
 
   /** The `prop:check.*` keys of `headMeta` must all have been bound to
     * the write whose commit is being attempted ([[appendCommitLoop]] /
-    * [[rewriteWhere]]): a constraint declared AFTER the write job was
+    * [[deleteWhere]]): a constraint declared AFTER the write job was
     * built never validated this write's rows, so the publish is
     * refused and the already-written (unpublished) dirs are cleaned
     * up. Constraint REMOVAL mid-write is fine — the batch was
@@ -2438,6 +2437,10 @@ object ManifestTable {
     * a touched dir VANISHING from the head (racing compaction/restore/
     * delete) aborts loudly instead of resurrecting rewritten rows.
     *
+    * SQL `DELETE FROM` with a V1-translatable predicate on a plain
+    * copy-on-write table runs here (`GraftTable.deleteWhere`); every
+    * other DML statement runs Spark's row-level rewrite.
+    *
     * Returns the committed version (the base version when no dir can
     * hold a matching row — a provable no-op commits nothing). */
   def deleteWhere(spark: SparkSession, tableDir: String,
@@ -2445,213 +2448,141 @@ object ManifestTable {
                   bounds: Map[String, (String, String)] = Map.empty,
                   retainGenerations: Int = 2): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rewriteWhere(spark, tableDir, bounds, retainGenerations, "d-")(
-      _.filter(not(coalesce(cond, lit(false))))) // keep FALSE and NULL rows
-  }
-
-  /** Row-level UPDATE (S25): rewrite the rows where `cond` is TRUE with
-    * `assignments` applied (each value cast to its column's declared
-    * type — SQL UPDATE's store-assignment cast), leaving FALSE/NULL
-    * rows byte-identical. Same dir-granular copy-on-write and
-    * concurrency story as [[deleteWhere]]: dirs outside the `bounds`
-    * envelope are carried untouched, only possibly-matching dirs are
-    * read and rewritten, racing appends rebase through [[commitIf]].
-    * O(touched dirs), not O(table) — at 100 TB an update predicated on
-    * a clustered column rewrites the slice, not the fact table. */
-  def updateWhere(spark: SparkSession, tableDir: String,
-                  cond: org.apache.spark.sql.Column,
-                  assignments: Seq[(String, org.apache.spark.sql.Column)],
-                  bounds: Map[String, (String, String)] = Map.empty,
-                  retainGenerations: Int = 2): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    val byCol = assignments.toMap
-    rewriteWhere(spark, tableDir, bounds, retainGenerations, "u-") { df =>
-      byCol.keys.foreach(c => require(df.schema.fieldNames.contains(c),
-        s"UPDATE assigns unknown column '$c' at $tableDir"))
-      val hit = coalesce(cond, lit(false))
-      // declared CHECK constraints bind the rewritten values through
-      // rewriteWhere's own seam (S30; untouched rows conform by the
-      // write/ALTER-time invariant)
-      df.select(df.schema.fields.toIndexedSeq.map { f =>
-        byCol.get(f.name) match {
-          case Some(v) =>
-            when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    }
-  }
-
-  /** S41 — MERGE-ON-READ row-level DELETE: instead of rewriting every
-    * touched dir (copy-on-write's write amplification: a 1-row DELETE
-    * rewrites its whole commit dir), record the matching rows' (file,
-    * position) pairs as a DELETION VECTOR under `_dv/` and commit a
-    * manifest whose `#dvec` channel masks them out of every logical
-    * read — data dirs untouched, I/O ∝ deleted rows. Every read
-    * surface applies the mask as the V2 scan's row-position filter;
-    * `CALL system.compact` /
-    * [[compactAppend]] materializes masks away. This is the
-    * position-delete / deletion-vector design every production format
-    * converged on (Iceberg v2 position deletes, Delta deletion
-    * vectors): at 100 TB, the difference between a DELETE costing the
-    * week it touches and costing the rows it touches.
-    *
-    * Time travel is exact (masks are per-version header state), the
-    * change feed is exact (a mask change marks the dir changed; the
-    * diff reads each side through its own masks), and concurrency is
-    * the engine's optimistic protocol — with one addition everywhere:
-    * a dv advancing on a dir some rewrite is replacing aborts that
-    * rewrite loudly (paths alone can't see mask-only changes).
-    *
-    * Stats stay PHYSICAL (upper bounds): pruning remains conservative-
-    * correct, metadata-only aggregates and LIMIT dir planning decline
-    * while masks exist. Returns the committed version (base when no
-    * row matches). */
-  def deleteWhereMoR(spark: SparkSession, tableDir: String,
-                     cond: org.apache.spark.sql.Column,
-                     bounds: Map[String, (String, String)] = Map.empty,
-                     retainGenerations: Int = 2): Long =
-    morRewrite(spark, tableDir, cond, Seq.empty, bounds, retainGenerations)
-
-  /** S41 — merge-on-read UPDATE: matching rows are masked out of their
-    * dirs (a deletion vector, as [[deleteWhereMoR]]) and their UPDATED
-    * images land as ONE fresh appended dir — write cost ∝ changed
-    * rows, not touched dirs (Iceberg's MoR update shape). Declared
-    * CHECK constraints bind the new images; non-matching rows are
-    * byte-untouched. */
-  def updateWhereMoR(spark: SparkSession, tableDir: String,
-                     cond: org.apache.spark.sql.Column,
-                     assignments: Seq[(String, org.apache.spark.sql.Column)],
-                     bounds: Map[String, (String, String)] = Map.empty,
-                     retainGenerations: Int = 2): Long = {
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    morRewrite(spark, tableDir, cond, assignments, bounds, retainGenerations)
-  }
-
-  /** The shared merge-on-read kernel: positions of the LIVE (already-
-    * masked rows excluded — an update must not resurrect) matching
-    * rows staged as `_dv/<name>/d=<i>` parquet, plus (UPDATE only) the
-    * updated images as a fresh data dir; one optimistic commit extends
-    * the touched dirs' dv payloads. */
-  private def morRewrite(spark: SparkSession, tableDir: String,
-                         cond: org.apache.spark.sql.Column,
-                         assignments: Seq[(String, org.apache.spark.sql.Column)],
-                         bounds: Map[String, (String, String)],
-                         retainGenerations: Int): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, count, element_at, lit, typedLit, when}
     val fs = fsOf(spark, tableDir)
-    require(!fs.exists(new Path(tableDir, MergeInto.KeyMarker)),
-      s"$tableDir is a bucketed merge table — its DML is the O(changeset) " +
-        "merge kernel; deletion vectors apply to manifest append tables")
     val baseV = versions(fs, tableDir).lastOption.getOrElse(
       throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
     val base = snapshotOf(fs, tableDir, baseV)
     if (base.paths.isEmpty) return baseV
     val baseStats = base.stats
     val tableSchema = schemaAt(spark, tableDir, base)
-    val byCol = assignments.toMap
-    byCol.keys.foreach(c => require(tableSchema.fieldNames.contains(c),
-      s"UPDATE assigns unknown column '$c' at $tableDir"))
-    // the kernel synthesizes __graft_-prefixed helper columns; a user
-    // column with the prefix would be silently consumed (withColumn
-    // replaces) — the clustered writes' reserved-name rule applies
-    require(!tableSchema.fieldNames.exists(_.startsWith("__graft_")),
-      "merge-on-read DML reserves the '__graft_' column-name prefix")
     val touched = prunePathsIn(base.paths, baseStats,
       bounds.filter { case (c, _) => tableSchema.fieldNames.contains(c) },
       tableSchema)
     if (touched.isEmpty) return baseV // provable no-op
-    // the touched dirs read through the base masks (an update must not
-    // resurrect a masked row), each row tagged with its dir's ordinal
-    // in `touched` and its (file, pos) row id — the scan's metadata
-    // columns, whose file key is the one the mask readers probe
-    val scan = GraftTable.read(spark, tableDir, base, touched, base.dv)
-    val live = scan
-      .withColumn("__graft_dv_d", element_at(
-        typedLit(touched.zipWithIndex.toMap),
-        scan.metadataColumn(GraftRowLevel.DirCol)))
-      .withColumn("__graft_file", scan.metadataColumn(GraftRowLevel.FileCol))
-      .withColumn("__graft_pos", scan.metadataColumn(GraftRowLevel.PosCol))
-    val matches = live.filter(coalesce(cond, lit(false)))
-    val dvName = "dv-" + java.util.UUID.randomUUID().toString.take(8)
-    val dvRel = s"$DvDirName/$dvName"
-    // per-dir position counts observed on the dv write itself — one
-    // count per touched ordinal, so nothing re-reads the files just
-    // written
-    val dvObs = org.apache.spark.sql.Observation()
-    val dvRows = matches.select(col("__graft_file").as("path"),
-        col("__graft_pos").as("pos"), col("__graft_dv_d").as("d"))
-    val dvCounts = touched.indices.map(i =>
-      count(when(col("d") === i, 1)).as(s"d$i"))
-    dvRows.observe(dvObs, dvCounts.head, dvCounts.tail: _*)
-      .write.partitionBy("d").parquet(s"$tableDir/$dvRel")
-    val observed = dvObs.get
-    val counts: Map[Int, Long] = touched.indices.map(i =>
-      i -> observed(s"d$i").asInstanceOf[Long]).toMap
-    if (counts.valuesIterator.sum == 0L) {
-      fs.delete(new Path(tableDir, dvRel), true)
-      return baseV // nothing matched
-    }
-    // UPDATE: the matching rows' updated images as one fresh dir, with
-    // the same stats/CHECK treatment as the CoW rewrite's output
+    // the rewritten dir re-records whichever columns the touched dirs
+    // tracked, so data skipping survives the rewrite
     val statsCols = tableSchema.fieldNames.filter(c =>
       touched.exists(p => baseStats.get(p).exists(statsFor(_, c).isDefined)))
       .toSeq
-    val dataCols = tableSchema.fields.toIndexedSeq.map { f =>
-      byCol.get(f.name) match {
-        case Some(v) => v.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }
-    var boundChecks: Set[String] = Set.empty
-    val cidAndPayload: Option[(String, Option[String])] =
-      if (assignments.isEmpty) None
-      else {
-        val cid = "mu-" + java.util.UUID.randomUUID().toString.take(8)
-        val (checked, bc) = ManifestSupport.bindDeclaredChecks(
-          matches.select(dataCols: _*), tableDir)
-        boundChecks = bc
-        val obs = org.apache.spark.sql.Observation()
-        val aggs = statsAggExprs(statsCols)
-        writePhysical(checked.observe(obs, aggs.head, aggs.tail: _*),
-          colMapOf(fs, tableDir, baseV))
-          .write.parquet(s"$tableDir/$cid")
-        val m = obs.get
-        val payload =
-          if (m("rows").asInstanceOf[Long] == 0L) None
-          else Some(statsPayloadFrom(m("rows").asInstanceOf[Long],
-            statsCols, m))
-        Some((cid, payload))
-      }
-    // write-side CDC materialization (opt-in, same property as CoW):
-    // the feed IS the matched rows — staged now, served as a plain
-    // scan later. An UPDATE's halves are PAIRED (Delta CDF's
-    // `update_preimage`/`update_postimage` tags): the write holds both
-    // images of each row, so a consumer can rebuild the update without
-    // re-keying the feed; a DELETE stays `delete`.
-    val stagedCdc: Option[String] =
-      if (!metaOf(fs, tableDir, baseV).get(CdcMaterializeKey)
-          .exists(_.equalsIgnoreCase("true"))) None
-      else {
-        val name = "c-" + java.util.UUID.randomUUID().toString.take(8)
-        val plainCols = tableSchema.fieldNames.toIndexedSeq.map(col)
-        val oldImages = matches.select(plainCols: _*)
-          .withColumn("change_type",
-            lit(if (assignments.isEmpty) "delete" else "update_preimage"))
-        val feed =
-          if (assignments.isEmpty) oldImages
-          else oldImages.unionByName(matches.select(dataCols: _*)
-            .withColumn("change_type", lit("update_postimage")))
-        feed.write.parquet(s"$tableDir/$CdcDirName/$name")
-        Some(name)
-      }
-    publishMorDelta(spark, tableDir, baseV, touched, dvRel, counts,
-      cidAndPayload.toSeq, tableSchema, statsCols, boundChecks, stagedCdc,
-      retainGenerations)
+    val cid = "d-" + java.util.UUID.randomUUID().toString.take(8)
+    val obs = org.apache.spark.sql.Observation()
+    val aggs = statsAggExprs(statsCols)
+    // touched dirs read through the base masks: a CoW rewrite over a
+    // dv'd dir must not resurrect rows a merge-on-read delete masked
+    val baseDv = base.dv
+    val touchedDf = GraftTable.read(spark, tableDir, base, touched, baseDv)
+    // declared CHECK constraints bind the rewrite output here (S30),
+    // and the bound keyset arms the publish-time conflict guard; the
+    // filter keeps FALSE and NULL rows
+    val (rewritten, boundChecks) = ManifestSupport.bindDeclaredChecks(
+      touchedDf.filter(not(coalesce(cond, lit(false)))), tableDir,
+      recomputeGenerated = true)
+    val kept = rewritten.observe(obs, aggs.head, aggs.tail: _*)
+    writePhysical(kept, colMapOf(fs, tableDir, baseV))
+      .write.parquet(s"$tableDir/$cid")
+    val m = obs.get
+    val keptRows = m("rows").asInstanceOf[Long]
+    val payload =
+      if (keptRows == 0L) None
+      else Some(statsPayloadFrom(keptRows, statsCols, m))
+    if (keptRows == 0L) // the rewrite kept nothing — no dir to publish
+      fs.delete(new Path(s"$tableDir/$cid"), true): Unit
+    publishRewrite(spark, tableDir, touched.toSet,
+      payload.map(_ => cid), payload, kept.schema, statsCols,
+      retainGenerations, boundChecks,
+      dvExpected = baseDv.view.filterKeys(touched.toSet).toMap)
   }
 
-  /** Write-side CDC staging for the SQL MoR delta write (opt-in via
+  /** Row-level UPDATE (S25): rewrite the rows where `cond` is TRUE with
+    * `assignments` applied (each value cast to its column's declared
+    * type — SQL UPDATE's store-assignment cast), leaving FALSE/NULL
+    * rows byte-identical. Runs SQL UPDATE's copy-on-write rewrite
+    * whatever the table's `dml.mode`: only the commit dirs that hold a
+    * match are read (through their masks) and replaced, and racing
+    * appends rebase. `bounds` is unused: the scan already prunes dirs
+    * by `cond`. Returns the head version after the statement. */
+  def updateWhere(spark: SparkSession, tableDir: String,
+                  cond: org.apache.spark.sql.Column,
+                  assignments: Seq[(String, org.apache.spark.sql.Column)],
+                  bounds: Map[String, (String, String)] = Map.empty,
+                  retainGenerations: Int = 2): Long =
+    rowLevelDml(spark, tableDir, "copy-on-write", retainGenerations, cond,
+      Some(assignments))
+
+  /** S41 — MERGE-ON-READ row-level DELETE: instead of rewriting every
+    * touched dir, the matching rows' (file, position) pairs land as a
+    * DELETION VECTOR under `_dv/` and the commit's `#dvec` channel
+    * masks them out of every read — data dirs untouched, I/O ∝ deleted
+    * rows (Iceberg v2 position deletes, Delta deletion vectors).
+    * Runs SQL DELETE's position-delta write whatever the table's
+    * `dml.mode` ([[publishMorDelta]] commits). `bounds` is unused: the
+    * scan already prunes by `cond`. Returns the head version after the
+    * statement (unchanged when no row matched). */
+  def deleteWhereMoR(spark: SparkSession, tableDir: String,
+                     cond: org.apache.spark.sql.Column,
+                     bounds: Map[String, (String, String)] = Map.empty,
+                     retainGenerations: Int = 2): Long =
+    rowLevelDml(spark, tableDir, "merge-on-read", retainGenerations, cond,
+      None)
+
+  /** S41 — merge-on-read UPDATE: matching rows are masked out of their
+    * dirs (as [[deleteWhereMoR]]) and their updated images land as one
+    * fresh dir — write cost ∝ changed rows (Iceberg's MoR update
+    * shape). Declared CHECK constraints bind the new images; other
+    * rows are byte-untouched. */
+  def updateWhereMoR(spark: SparkSession, tableDir: String,
+                     cond: org.apache.spark.sql.Column,
+                     assignments: Seq[(String, org.apache.spark.sql.Column)],
+                     bounds: Map[String, (String, String)] = Map.empty,
+                     retainGenerations: Int = 2): Long =
+    rowLevelDml(spark, tableDir, "merge-on-read", retainGenerations, cond,
+      Some(assignments))
+
+  /** The direct DML API as SQL DML: a `DeleteFromTable` (no
+    * `assignments`) or `UpdateTable` over the path's relation, whose
+    * table carries `dml.mode = mode` and the caller's retention, run
+    * through Spark's row-level rewrite onto the writers of
+    * [[GraftTable.newRowLevelOperationBuilder]]. */
+  private def rowLevelDml(spark: SparkSession, tableDir: String, mode: String,
+      retainGenerations: Int, cond: org.apache.spark.sql.Column,
+      assignments: Option[Seq[(String, org.apache.spark.sql.Column)]]): Long = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteFromTable, Project, UpdateTable}
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val fs = fsOf(spark, tableDir)
+    require(mode != "merge-on-read" ||
+      !fs.exists(new Path(tableDir, MergeInto.KeyMarker)),
+      s"$tableDir is a bucketed merge table — its DML is the O(changeset) " +
+        "merge kernel; deletion vectors apply to manifest append tables")
+    assignments.foreach(a =>
+      require(a.nonEmpty, "UPDATE needs at least one assignment"))
+    val rel = spark.read.format("graft").load(tableDir).queryExecution.analyzed
+      .asInstanceOf[DataSourceV2Relation]
+    val t = rel.table.asInstanceOf[GraftTable]
+    require(t.pinnedV.isDefined, s"no committed manifest at $tableDir")
+    val target = org.apache.spark.sql.GraftShims.dataFrame(spark,
+      rel.copy(table = t.copy(tableProps = t.tableProps ++ Map(
+        "dml.mode" -> mode, "retainGenerations" -> retainGenerations.toString))))
+    val table = target.queryExecution.analyzed
+    // a Column resolved against the relation's own output attributes
+    def resolved(c: org.apache.spark.sql.Column) =
+      target.select(c.as("c")).queryExecution.analyzed
+        .asInstanceOf[Project].projectList.head.asInstanceOf[Alias].child
+    val plan = assignments match {
+      case None => DeleteFromTable(table, resolved(cond))
+      case Some(as) =>
+        val attrs = table.output.map(a => a.name -> a).toMap
+        UpdateTable(table, as.map { case (name, v) =>
+          require(attrs.contains(name),
+            s"UPDATE assigns unknown column '$name' at $tableDir")
+          Assignment(attrs(name), resolved(v.cast(attrs(name).dataType)))
+        }, Some(resolved(cond)))
+    }
+    org.apache.spark.sql.GraftShims.dataFrame(spark, plan): Unit
+    versions(fs, tableDir).last
+  }
+
+  /** Write-side CDC staging for the MoR position-delta write (opt-in via
     * `cdc.materialize`, same property as every other DML surface): old
     * images are reconstructed by semi-joining the touched dirs (read
     * through the BASE masks — already-deleted rows can never re-enter
@@ -2707,9 +2638,10 @@ object ManifestTable {
       }
   }
 
-  /** The merge-on-read PUBLISH half, shared by [[morRewrite]] (the
-    * direct `deleteWhereMoR`/`updateWhereMoR` API) and the SQL delta
-    * write (GraftPositionDeltaWrite): extend the touched dirs' dv
+  /** The merge-on-read PUBLISH half of the position-delta write
+    * (GraftPositionDeltaWrite), which serves SQL DELETE/UPDATE/MERGE on
+    * a merge-on-read table and the direct [[deleteWhereMoR]]/
+    * [[updateWhereMoR]] API: extend the touched dirs' dv
     * payloads with the freshly-staged `dvRel` position dirs
     * (ordinal-aligned with `touched`), add the fresh-images dir when
     * one exists, and commit under optimistic concurrency with the
@@ -2798,68 +2730,12 @@ object ManifestTable {
     -1L // unreachable
   }
 
-  /** The shared copy-on-write kernel of [[deleteWhere]]/[[updateWhere]]
-    * (the direct API surface; SQL DML rides Spark's native row-level
-    * rewrites onto GraftRowLevelOps): carry every live dir the
-    * stats prove `bounds`-free, run `rewrite` over the rest, publish
-    * the result as one fresh dir with fresh stats under optimistic
-    * concurrency. `rewrite` must preserve the declared schema. */
-  private[graft] def rewriteWhere(spark: SparkSession, tableDir: String,
-                                  bounds: Map[String, (String, String)],
-                                  retainGenerations: Int, cidPrefix: String)(
-      rewrite: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : Long = {
-    val fs = fsOf(spark, tableDir)
-    val baseV = versions(fs, tableDir).lastOption.getOrElse(
-      throw new IllegalArgumentException(s"no committed manifest at $tableDir"))
-    val base = snapshotOf(fs, tableDir, baseV)
-    if (base.paths.isEmpty) return baseV
-    val baseStats = base.stats
-    val tableSchema = schemaAt(spark, tableDir, base)
-    val touched = prunePathsIn(base.paths, baseStats,
-      bounds.filter { case (c, _) => tableSchema.fieldNames.contains(c) },
-      tableSchema)
-    if (touched.isEmpty) return baseV // provable no-op
-    // the rewritten dir re-records whichever columns the touched dirs
-    // tracked, so data skipping survives the rewrite
-    val statsCols = tableSchema.fieldNames.filter(c =>
-      touched.exists(p => baseStats.get(p).exists(statsFor(_, c).isDefined)))
-      .toSeq
-    val cid = cidPrefix + java.util.UUID.randomUUID().toString.take(8)
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = statsAggExprs(statsCols)
-    // touched dirs read through the base masks: a CoW rewrite over a
-    // dv'd dir must not resurrect rows a merge-on-read delete masked
-    val baseDv = base.dv
-    val touchedDf = GraftTable.read(spark, tableDir, base, touched, baseDv)
-    // declared CHECK constraints bind the rewrite output here (S30) —
-    // one seam for DELETE/UPDATE/MERGE instead of per-caller wrapping —
-    // and the bound keyset arms the publish-time conflict guard below
-    val (rewritten, boundChecks) =
-      ManifestSupport.bindDeclaredChecks(rewrite(touchedDf), tableDir,
-        recomputeGenerated = true)
-    val kept = rewritten.observe(obs, aggs.head, aggs.tail: _*)
-    writePhysical(kept, colMapOf(fs, tableDir, baseV))
-      .write.parquet(s"$tableDir/$cid")
-    val m = obs.get
-    val keptRows = m("rows").asInstanceOf[Long]
-    val payload =
-      if (keptRows == 0L) None
-      else Some(statsPayloadFrom(keptRows, statsCols, m))
-    if (keptRows == 0L) // the rewrite kept nothing — no dir to publish
-      fs.delete(new Path(s"$tableDir/$cid"), true): Unit
-    publishRewrite(spark, tableDir, touched.toSet,
-      payload.map(_ => cid), payload, kept.schema, statsCols,
-      retainGenerations, boundChecks,
-      dvExpected = baseDv.view.filterKeys(touched.toSet).toMap)
-  }
-
   /** The publish half of a dir-granular copy-on-write rewrite: carry
     * every head dir outside `touchedSet`, add `cid` (when a payload
     * exists), validate that no racing writer rewrote a touched dir
     * (loud abort — the standing rows this rewrite anti-joined are
     * stale), re-check the ALTER-vs-write constraint guard, and commit
-    * under optimistic concurrency. Shared by [[rewriteWhere]] and the
+    * under optimistic concurrency. Shared by [[deleteWhere]] and the
     * native row-level-operation write (GraftRowLevelOps), so both DML
     * surfaces carry identical conflict semantics. */
   private[sources] def publishRewrite(spark: SparkSession, tableDir: String,

@@ -752,8 +752,8 @@ object Sources {
     * `dml.mode=merge-on-read` table: CREATE + INSERT of orders (→ v2),
     * then one SQL `DELETE FROM` of the high-priority 1997+ slice
     * (→ v3) that commits a DELETION VECTOR — a metadata-only commit
-    * masking the rows out; zero data dirs rewritten
-    * ([[ManifestTable.deleteWhereMoR]]). */
+    * masking the rows out; zero data dirs rewritten (the
+    * position-delta write, `GraftPositionDeltaWrite`). */
   private val dvDeleteDemo = new graft.FixtureMemo((s, d) => {
     val cat = catalogDemo(s, d)
       orders(s, d)

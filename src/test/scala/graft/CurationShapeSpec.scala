@@ -93,8 +93,7 @@ class CurationShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper
 
   test("t24: the executed plan has no hash exchange and no broadcast") {
     val df = ops.TextVector.t24_repetition_filter(spark, sf)
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan
+    val plan = executedPlanOf(df.write.format("noop").mode("overwrite").save())
     val hashed = collectWithSubqueries(plan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
     }
@@ -129,8 +128,7 @@ class CurationShapeSpec extends SparkTestBase with AdaptiveSparkPlanHelper
     ops.TextVector.t33_bloom_decontaminate(spark, sf).collect()
     var df: DataFrame = null
     val build = jobsOf { df = ops.TextVector.t33_bloom_decontaminate(spark, sf) }
-    df.write.format("noop").mode("overwrite").save()
-    val plan = df.queryExecution.executedPlan
+    val plan = executedPlanOf(df.write.format("noop").mode("overwrite").save())
     val exprs = collectWithSubqueries(plan) { case p => p.expressions }
       .flatten.flatMap(_.collect { case e => e })
     assert(exprs.exists(_.isInstanceOf[BloomFilterMightContain]), s"t33 plan:\n$plan")

@@ -60,6 +60,33 @@ trait SparkTestBase extends AnyFunSuite {
     jobs.get
   }
 
+  /** The executed physical plan of the statement `body` runs (a write,
+    * a DML statement), captured by a `QueryExecutionListener` over a
+    * drained bus. A DataFrame write runs its own QueryExecution, so the
+    * frame's `queryExecution.executedPlan` is an initial adaptive plan
+    * that never ran. Executions nested in the statement (a commit's
+    * internal reads and writes) end before it, so the last one to end
+    * is the statement's own. */
+  def executedPlanOf(body: => Any): org.apache.spark.sql.execution.SparkPlan = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val sc = spark.sparkContext
+    org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    val last = new java.util.concurrent.atomic.AtomicReference[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = last.set(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graft.ListenerBusDrain.drain(sc)
+    } finally spark.listenerManager.unregister(listener)
+    assert(last.get != null, "no query execution ended")
+    last.get
+  }
+
   /** Backdate a directory tree's mtimes (dir + every descendant) so a
     * planted orphan ages past the manifest GC's grace window — the GC
     * clocks orphan age from the NEWEST mtime in the tree, so aging only
