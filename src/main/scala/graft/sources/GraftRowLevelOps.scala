@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, when}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,9 +30,11 @@ import org.apache.spark.util.SerializableConfiguration
   *    `_graft_dir` metadata column; Spark's runtime group filtering
   *    narrows the rewrite to exactly the dirs holding matches (the
   *    same dir pruning the extension kernels did, now expressed
-  *    through `SupportsRuntimeFiltering` on the scan), and the write
-  *    publishes through [[ManifestTable.publishRewrite]] — identical
-  *    conflict semantics to the old seam.
+  *    through `SupportsRuntimeFiltering` on the scan). The write runs
+  *    the streaming task-writer kernel — contracts bound and stats
+  *    computed in the task writers, folded from the commit messages —
+  *    and publishes through [[ManifestTable.publishRewrite]] with no
+  *    read-back of the dir it wrote.
   *  - [[GraftDeltaOperation]] — `SupportsDelta` for S31 bucketed
   *    layouts: per-row DELETE/UPDATE/INSERT records land as an
   *    executor-written changeset keyed on the bucket key, applied at
@@ -127,8 +129,9 @@ class GraftGroupOperation(table: GraftTable, cmd: Command)
     extends RowLevelOperation {
 
   /** Dirs the operation's scan ended up reading — the groups the write
-    * replaces. Written once on the driver at scan planning, read once
-    * on the driver at write commit (planning happens-before commit). */
+    * replaces. Written once on the driver at scan planning, read on
+    * the driver when the write builds its writer factory and at commit
+    * (planning happens-before both). */
   @volatile private var affectedDirs: Set[String] = Set.empty
 
   private[sources] def recordAffected(planned: Seq[String]): Unit =
@@ -167,9 +170,14 @@ class GraftGroupOperation(table: GraftTable, cmd: Command)
   private[sources] def affected: Set[String] = affectedDirs
 }
 
-/** The CoW write: executor task writers stage replacement rows, commit
-  * publishes them over the affected dirs. Straggler-safe like X15 —
-  * only commit-message-named files move into the publish dir. */
+/** The CoW write on the streaming task-writer kernel: task writers
+  * stage the replacement rows, binding the contracts with the DML
+  * write-back semantics and min/maxing the tracked columns inline;
+  * commit folds the stats from the messages and publishes over the
+  * affected dirs, starting no query of its own (a tracked column the
+  * writers cannot min/max, e.g. binary, takes the shared read-back).
+  * Straggler-safe like X15 — only commit-message-named files move into
+  * the publish dir. */
 class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
                       writeSchema: StructType)
     extends Write with BatchWrite {
@@ -177,39 +185,61 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
   private val runId = java.util.UUID.randomUUID().toString.take(8)
   private val stageRel = s"rl-$runId/stage"
   private val cid = s"c-rl-$runId"
+  private val dir = table.tableDir
 
   private def spark: SparkSession = SparkSession.active
-  private def fs = new Path(table.tableDir)
+  private def fs = new Path(dir)
     .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** S42 — logical→physical mapping: task writers stage parquet with
-    * PHYSICAL names (rows are positional, so only the schema handed to
-    * the writer changes); the read-back aliases back to logical. */
-  private lazy val cmap: Map[String, String] = table.pinnedV
-    .map(v => ManifestTable.colMapOf(fs, table.tableDir, v))
-    .getOrElse(Map.empty)
+  /** The version the operation's scan reads. */
+  private val baseV: Long = table.pinnedV.getOrElse(
+    throw new IllegalArgumentException(s"no committed graft table at $dir"))
+
+  /** S42 — task writers stage parquet with PHYSICAL names. */
+  private val cmap: Map[String, String] = ManifestTable.colMapOf(fs, dir, baseV)
+
+  private val zone = spark.sessionState.conf.sessionLocalTimeZone
+
+  /** Contracts bound at write construction, and the declared keys the
+    * publish guard checks the head against. A DELETE carries its rows
+    * byte-identical, so it recomputes no generated value. */
+  private val (contracts, boundChecks) = {
+    val (c, _, keys) = GraftRowContracts.forTable(spark, writeSchema,
+      ManifestTable.metaOf(fs, dir, baseV), cmap, dml = true)
+    (if (op.command() == Command.DELETE) c.copy(gens = Seq.empty) else c, keys)
+  }
+
+  /** The columns the touched dirs track, re-recorded for the
+    * replacement dir; resolved once the scan has planned the dirs. */
+  private lazy val statsCols: Seq[String] = {
+    val baseStats = ManifestTable.statsOf(fs, dir, baseV)
+    writeSchema.fieldNames.filter(c => op.affected.exists(p =>
+      baseStats.get(p).exists(ManifestTable.statsFor(_, c).isDefined))).toSeq
+  }
+
+  private lazy val inlineSpec: Option[Seq[StatsColSpec]] =
+    GraftTaskWriters.inlineStatsSpec(writeSchema, statsCols)
 
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    GraftBatchWriterFactory(s"${table.tableDir}/$stageRel",
+    GraftBatchWriterFactory(s"$dir/$stageRel",
       GraftTaskWriters.writeConf(spark,
-        ManifestTable.toPhysical(writeSchema, cmap)))
+        ManifestTable.toPhysical(writeSchema, cmap)),
+      inlineSpec.getOrElse(Seq.empty), zone,
+      Some(contracts).filterNot(_.isEmpty))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val dir = table.tableDir
     val files = messages.collect { case m: GraftTaskCommit if m.rows > 0 => m }
-    val rows = files.map(_.rows).sum
     val touched = op.affected
     // the dv state the operation's scan READ THROUGH (the pinned
     // version's) — publishRewrite aborts if a racing merge-on-read
     // delete advanced a touched dir's mask since
-    val dvExpected = table.pinnedV.map(v =>
-      ManifestTable.dvOf(fs, dir, v).view.filterKeys(touched).toMap)
-      .getOrElse(Map.empty[String, String])
+    val dvExpected = ManifestTable.dvOf(fs, dir, baseV).view
+      .filterKeys(touched).toMap
     try {
-      if (rows == 0L) {
+      if (files.isEmpty) {
         // every row of every affected dir was deleted — pure removal
         if (touched.nonEmpty)
           ManifestTable.publishRewrite(spark, dir, touched, None, None,
@@ -219,59 +249,9 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
       }
       GraftTaskWriters.publishNamed(fs, new Path(dir, stageRel),
         new Path(dir, cid), files.map(m => new Path(m.file).getName).toSeq)
-      // the replacement dir re-records whatever columns the touched
-      // dirs tracked (as ManifestTable.deleteWhere does), and declared
-      // CHECK constraints bind the read-back in the same pass — an
-      // UPDATE'd row that violates a constraint fails here, before any
-      // commit
-      val headV = ManifestTable.versions(fs, dir).last
-      val baseStats = ManifestTable.statsOf(fs, dir, headV)
-      val statsCols = writeSchema.fieldNames.filter(c => touched.exists(p =>
-        baseStats.get(p).exists(ManifestTable.statsFor(_, c).isDefined)))
-        .toSeq
-      // one definition of "read the staged dir back through the
-      // physical names, aliased to logical" — the restage path below
-      // re-reads through the SAME rule (r20 review find: the block
-      // was copy-pasted and could drift)
-      def readBack(): org.apache.spark.sql.DataFrame = {
-        val raw = spark.read
-          .schema(ManifestTable.toPhysical(writeSchema, cmap))
-          .parquet(s"$dir/$cid")
-        if (cmap.isEmpty) raw
-        else raw.select(writeSchema.fieldNames.toIndexedSeq.map(l =>
-          col(cmap.getOrElse(l, l)).as(l)): _*)
-      }
-      val staged = readBack()
-      val (checked0, boundChecks) =
-        ManifestSupport.bindDeclaredChecks(staged, dir,
-          recomputeGenerated = true)
-      // S50: the task writers staged these rows BEFORE the generation
-      // step could run (the rewrite plan is Spark's own) — when the
-      // table declares generated columns, materialize the RECOMPUTED
-      // read-back as the replacement dir, so an UPDATE of a source
-      // column refreshes the generated value in what actually lands.
-      // One extra pass over the replacement dir only, and only on
-      // generated tables' UPDATE/MERGE — a DELETE carries rows
-      // byte-identical, so recomputation cannot change a value and the
-      // restage would be a pure double-write.
-      val checked =
-        if (op.command() == org.apache.spark.sql.connector.write
-              .RowLevelOperation.Command.DELETE ||
-            !ManifestTable.metaOf(fs, dir, headV).keys
-            .exists(_.startsWith(ManifestTable.GenColPrefix))) checked0
-        else {
-          val cid2 = cid + "-g"
-          ManifestTable.writePhysical(checked0, cmap)
-            .write.parquet(s"$dir/$cid2")
-          fs.delete(new Path(dir, cid), true)
-          require(fs.rename(new Path(dir, cid2), new Path(dir, cid)),
-            s"generated-column restage swap failed at $dir/$cid")
-          readBack()
-        }
-      val aggs = ManifestTable.statsAggExprs(statsCols)
-      val m = checked.agg(aggs.head, aggs.tail: _*).head()
-      val payload = ManifestTable.statsPayloadFrom(m.getAs[Long]("rows"),
-        statsCols, lane => m.getAs[Any](lane))
+      val payload = inlineSpec.map(GraftTaskWriters.foldStats(_, zone, files.toSeq))
+        .getOrElse(GraftTaskWriters.readBackStats(spark, fs, dir, writeSchema,
+          cmap, Seq(cid), statsCols)(cid))
       ManifestTable.publishRewrite(spark, dir, touched, Some(cid),
         Some(payload), writeSchema, statsCols,
         GraftRowLevel.retainOf(table), boundChecks,
@@ -282,11 +262,8 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    fs.delete(new Path(table.tableDir, s"rl-$runId"), true): Unit
-    fs.delete(new Path(table.tableDir, cid), true): Unit
-    // the generated-column restage's intermediate (a CHECK raise_error
-    // mid-restage aborts between its write and the swap) — r20 find
-    fs.delete(new Path(table.tableDir, cid + "-g"), true): Unit
+    fs.delete(new Path(dir, s"rl-$runId"), true): Unit
+    fs.delete(new Path(dir, cid), true): Unit
   }
 }
 
@@ -294,14 +271,17 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
   * parquet file per task, opened lazily, straggler-reconciled at
   * commit by the named-file move. */
 case class GraftBatchWriterFactory(stageDir: String,
-                                   conf: SerializableConfiguration)
+                                   conf: SerializableConfiguration,
+                                   statsSpec: Seq[StatsColSpec],
+                                   zone: String,
+                                   contracts: Option[GraftRowContracts])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
     new GraftTaskWriter(
       s"$stageDir/part-$partitionId-$taskId-" +
         java.util.UUID.randomUUID().toString.take(8) + ".snappy.parquet",
-      conf.value, partitionId = partitionId)
+      conf.value, statsSpec, zone, partitionId, contracts)
 }
 
 /** `SupportsDelta` for bucketed (S31) tables: Spark hands the write
@@ -409,22 +389,19 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo,
       // upsert-by-key contract instead: plain INSERT INTO, and
       // INSERT-ONLY merges — Spark plans those as an APPEND via a
       // left-anti join, which routes through the upsert kernel.)
-      val pureInserts = cs0.filter(marker === 0).select(col(key))
-        .join(cs0.filter(marker === 1).select(col(key)).distinct(),
-          Seq(key), "left_anti")
-      // the same key appearing in TWO insert records of one changeset
-      // would pass the standing-key check below and then silently
-      // collapse to one arbitrary winner in applyBatch's
-      // one-winner-per-key reduction — that is data loss of a source
-      // row, so it fails as loudly as the standing-key clash. Counted
-      // over ALL insert records, not just delete-free ones: an UPDATE
-      // (delete+insert) plus an unmatched INSERT of the same key in
-      // one statement is the same ambiguity and used to slip through
-      // the pure-insert anti-join (r19 review find).
+      // ONE per-key aggregate of insert and delete records serves both
+      // probes. Two insert records of one key would collapse to one
+      // arbitrary winner in applyBatch (a lost source row), so they fail
+      // as loudly — counted over ALL inserts, as an UPDATE plus an
+      // unmatched INSERT of one key is the same ambiguity (r19 find).
+      val perKey = cs0.groupBy(col(key)).agg(
+        count(when(marker === 0, 1)).as("ins"),
+        count(when(marker === 1, 1)).as("del"))
+      val pureInserts = perKey.filter(col("ins") > 0 && col("del") === 0)
+        .select(col(key))
       val dupIns =
         if (!inserts) Array.empty[org.apache.spark.sql.Row]
-        else cs0.filter(marker === 0).groupBy(col(key))
-          .count().filter(col("count") > 1).limit(5).collect()
+        else perKey.filter(col("ins") > 1).limit(5).collect()
       if (dupIns.nonEmpty)
         throw new IllegalStateException(
           s"MERGE carries duplicate insert records for source key(s) " +
@@ -435,18 +412,19 @@ class GraftDeltaWrite(table: GraftTable, key: String, info: LogicalWriteInfo,
       // per-attempt head validation — a racing insert of the same key
       // that lands between probe and commit forces a rebase, whose
       // retry re-probes and refuses instead of silently replacing the
-      // winner's row.
+      // winner's row. No standing bucket touched → no join to run.
       def standingClashGuard(): Unit = if (inserts) {
-        val clash = pureInserts
-          .join(MergeInto.standingForKeys(spark, dir, pureInserts)
-            .select(col(key)), Seq(key), "left_semi")
-          .limit(5).collect()
-        if (clash.nonEmpty)
-          throw new IllegalStateException(
-            s"MERGE INSERT would duplicate standing key(s) " +
-              s"${clash.map(_.get(0)).mkString(", ")} in keyed table $dir " +
-              "(one row per key by construction); route replacements " +
-              "through WHEN MATCHED or widen the ON condition")
+        MergeInto.standingForKeys(spark, dir, pureInserts).foreach { st =>
+          val clash = pureInserts
+            .join(st.select(col(key)), Seq(key), "left_semi")
+            .limit(5).collect()
+          if (clash.nonEmpty)
+            throw new IllegalStateException(
+              s"MERGE INSERT would duplicate standing key(s) " +
+                s"${clash.map(_.get(0)).mkString(", ")} in keyed table $dir " +
+                "(one row per key by construction); route replacements " +
+                "through WHEN MATCHED or widen the ON condition")
+        }
       }
       standingClashGuard()
       // declared CHECK constraints bind the changeset before it merges:

@@ -41,7 +41,8 @@ import org.apache.spark.util.SerializableConfiguration
   * case) and ships them in its commit message, so the epoch commit
   * records skipping stats with ZERO extra jobs; non-atomic tracked
   * columns fall back to one footer-served aggregate over the
-  * just-written files. Nothing refuses the native path anymore (r19):
+  * just-written files; the copy-on-write rewrite ([[GraftGroupWrite]])
+  * shares this kernel. Nothing refuses the native path anymore (r19):
   * declared CHECK constraints, generated columns and identity minting
   * bind INTO the task writers as schema-bound expressions (r18), and
   * a BUCKETED layout publishes its epochs through the merge kernel at
@@ -148,13 +149,8 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
         files.toSeq.map(m => new Path(m.file).getName))
       fs.delete(new Path(tableDir, rel), true): Unit
       try {
-        val staged0 = spark.read
-          .schema(ManifestTable.toPhysical(writeSchema, cmap))
-          .parquet(s"$tableDir/$pubRel")
-        val staged =
-          if (cmap.isEmpty) staged0
-          else staged0.select(writeSchema.fieldNames.toIndexedSeq.map(l =>
-            col(cmap.getOrElse(l, l)).as(l)): _*)
+        val staged = GraftTaskWriters.readStaged(spark, tableDir, writeSchema,
+          cmap, Seq(pubRel))
         val ties =
           if (upsertTies.isEmpty) Nil
           else upsertTies.map(c => col(c).desc) ++
@@ -209,35 +205,7 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
     // warm) files; on the read-back fallback the sketch lanes ride the
     // SAME single grouped pass as min/max/nulls — never a second scan.
     val ndvCols = ManifestTable.writeNdvCols(headMetaNow, statsCols)
-    // one grouped read-back over all published dirs, keyed by dir —
-    // the helper both fallback paths share. `_metadata.file_path` can
-    // render URL-ENCODED where makeQualified does not (paths with
-    // spaces), so the rel lookup tolerates both renderings.
-    def groupedReadBack(aggs: Seq[org.apache.spark.sql.Column])
-        : Map[String, org.apache.spark.sql.Row] = {
-      import org.apache.spark.sql.functions.{col, expr}
-      GraftTaskWriters.epochReadBacks.incrementAndGet(): Unit
-      val dirKey = expr(
-        "regexp_replace(_metadata.file_path, '/[^/]*$', '')")
-      val rb0 = spark.read
-        .schema(ManifestTable.toPhysical(writeSchema, cmap))
-        .parquet(fileDirs.map(fd => s"$tableDir/${fd._1}"): _*)
-      val rb =
-        if (cmap.isEmpty) rb0
-        else rb0.select(writeSchema.fieldNames.toIndexedSeq.map(l =>
-          col(cmap.getOrElse(l, l)).as(l)): _*)
-      val qualToRel = fileDirs.map { case (pubRel, _) =>
-        fs.makeQualified(new Path(tableDir, pubRel)).toString -> pubRel
-      }.toMap
-      def relOf(qual: String): Option[String] =
-        qualToRel.get(new Path(qual).toString).orElse(
-          scala.util.Try(qualToRel.get(new Path(
-            new java.net.URI(qual)).toString)).toOption.flatten)
-      rb.withColumn("__graft_rb_dir", dirKey)
-        .groupBy("__graft_rb_dir").agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .flatMap(r => relOf(r.getString(0)).map(_ -> r)).toMap
-    }
+    val pubRels = fileDirs.map(_._1)
     val stats: Map[String, String] =
       if (statsCols.isEmpty) Map.empty
       else inlineSpec match {
@@ -269,20 +237,11 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
           val sketched =
             if (ndvCols.isEmpty || ndvFromTasks.isDefined)
               Map.empty[String, org.apache.spark.sql.Row]
-            else groupedReadBack(ManifestTable.ndvSketchAggExprs(ndvCols))
+            else GraftTaskWriters.groupedReadBack(spark, fs, tableDir,
+              writeSchema, cmap, pubRels,
+              ManifestTable.ndvSketchAggExprs(ndvCols))
           fileDirs.map { case (pubRel, ms) =>
-            val cells = specs.map { sp =>
-              val per = ms.flatMap(_.stats.filter(_.col == sp.name))
-              (sp.name,
-                GraftTaskWriters.mergeStat(sp.dt, zone,
-                  per.map(_.min), least = true),
-                GraftTaskWriters.mergeStat(sp.dt, zone,
-                  per.map(_.max), least = false))
-            }
-            val nulls = specs.map(sp => sp.name ->
-              ms.flatMap(_.stats.filter(_.col == sp.name)).map(_.nulls).sum)
-            val base = GraftTaskWriters.statsLine(ms.map(_.rows).sum, cells,
-              nulls)
+            val base = GraftTaskWriters.foldStats(specs, zone, ms)
             pubRel -> ndvFromTasks.flatMap(_.get(pubRel))
               .map(sk => ManifestTable.withNdvSketches(base, sk))
               .orElse(sketched.get(pubRel)
@@ -296,19 +255,8 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
           // pass serves min/max/nulls AND (when opted in) the NDV
           // sketches for every published dir — never per-dir jobs,
           // never a second scan
-          val rows = groupedReadBack(ManifestTable.statsAggExprs(statsCols)
-            ++ ManifestTable.ndvSketchAggExprs(ndvCols))
-          fileDirs.flatMap { case (pubRel, _) =>
-            rows.get(pubRel).map { r =>
-              val base = ManifestTable.statsPayloadFrom(
-                r.getAs[Long]("rows"), statsCols,
-                lane => r.getAs[Any](lane))
-              pubRel -> (if (ndvCols.isEmpty) base
-                         else ManifestTable.withNdvSketches(base,
-                           ManifestTable.ndvSketchCells(ndvCols,
-                             lane => r.getAs[Any](lane))))
-            }
-          }.toMap
+          GraftTaskWriters.readBackStats(spark, fs, tableDir, writeSchema,
+            cmap, pubRels, statsCols, ndvCols)
       }
     ManifestTable.appendCommitLoopCore(spark, writeSchema, tableDir,
       fileDirs.map(_._1), stats, statsCols, retain,
@@ -338,35 +286,92 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
 }
 
 /** X15 — the table's write contracts BOUND to the write schema, shipped
-  * to the executor task writers and applied per row: the streaming
-  * sink has no driver-side plan to fold guards into, so the bound
+  * to the executor task writers and applied per row: a task-writer
+  * write has no driver-side plan to fold guards into, so the bound
   * Catalyst expressions ARE the batch path's guards, minus the plan.
   * Application order mirrors the batch choke point: identity MINT
   * first (a generated expression or check may read the id), then
   * generated fill/validate, then CHECK predicates — a violating row
-  * throws, the task aborts, and the epoch dies BEFORE its manifest
+  * throws, the task aborts, and the write dies BEFORE its manifest
   * commit (nothing lands). Minting replicates the batch kernel's
   * arithmetic exactly — `wm + step * (1 + (partition << 33) + n)`,
   * `monotonically_increasing_id`'s layout — so ids stay unique and
-  * gap-tolerant with zero cross-task coordination. */
+  * gap-tolerant with zero cross-task coordination.
+  *
+  * `dml` = a copy-on-write DML write-back: a generated column is
+  * RECOMPUTED, not validated, and a NULL identity is refused, not
+  * minted. */
 case class GraftRowContracts(
     fieldTypes: Seq[DataType],
     checks: Seq[(String, org.apache.spark.sql.catalyst.expressions.Expression)],
     gens: Seq[(String, Int, org.apache.spark.sql.catalyst.expressions.Expression)],
-    idents: Seq[(String, Int, Long, Long, Boolean)])
+    idents: Seq[(String, Int, Long, Long, Boolean)],
+    dml: Boolean = false)
     extends Serializable {
   def isEmpty: Boolean = checks.isEmpty && gens.isEmpty && idents.isEmpty
 }
 
 object GraftRowContracts {
 
+  /** The table's contracts at `meta` bound to `schema` — the one
+    * builder of the streaming epoch and the copy-on-write rewrite.
+    * Returns the contracts, the identity claims a minting write commits
+    * against, and the declared check keys bound (the publish guard's
+    * `boundChecks`: it refuses a constraint declared after this). */
+  private[sources] def forTable(spark: SparkSession, schema: StructType,
+                                meta: Map[String, String],
+                                cmap: Map[String, String],
+                                adHoc: Seq[(String, String)] = Seq.empty,
+                                dml: Boolean = false)
+      : (GraftRowContracts, Seq[ManifestTable.IdentityClaim], Set[String]) = {
+    val physToLogical = cmap.map(_.swap)
+    def ordinalOf(logical: String): Int =
+      schema.fieldNames.indexWhere(_.equalsIgnoreCase(logical))
+    val checkPrefix = GraftCatalog.PropPrefix + "check."
+    val declaredChecks = meta.toSeq.collect {
+      case (k, sql) if k.startsWith(checkPrefix) => k -> sql
+    }.sortBy(_._1)
+    val checkExprs = (declaredChecks.map { case (k, sql) =>
+      k.stripPrefix(checkPrefix) -> sql } ++ adHoc).map { case (nm, sql) =>
+      nm -> bind(spark, schema, sql) }
+    val genExprs = meta.toSeq.collect {
+      case (k, sql) if k.startsWith(ManifestTable.GenColPrefix) =>
+        k.stripPrefix(ManifestTable.GenColPrefix) -> sql
+    }.sortBy(_._1).flatMap { case (phys, sql) =>
+      val logical = physToLogical.getOrElse(phys, phys)
+      val ord = ordinalOf(logical)
+      if (ord < 0) None
+      else Some((logical, ord, bind(spark, schema, sql,
+        Some(schema.fields(ord).dataType))))
+    }
+    val idClaims = ManifestTable.identitySpecs(meta).toSeq
+      .sortBy(_._1).flatMap { case (phys, spec) =>
+        val logical = physToLogical.getOrElse(phys, phys)
+        val ord = ordinalOf(logical)
+        if (ord < 0) None
+        else {
+          require(dml || schema.fields(ord).dataType == LongType,
+            s"identity column '$logical' must be BIGINT on the " +
+              "streaming write (per-partition mint offsets span 2^33)")
+          val wm = meta.get(ManifestTable.IdentityWmPrefix + phys)
+            .flatMap(_.toLongOption).getOrElse(spec.base)
+          Some(ManifestTable.IdentityClaim(phys, logical, spec, wm))
+        }
+      }
+    val idents = idClaims.map { cl =>
+      (cl.logical, ordinalOf(cl.logical), cl.baseWm, cl.spec.step,
+        cl.spec.allowExplicit) }
+    (GraftRowContracts(schema.fields.map(_.dataType).toSeq, checkExprs,
+      genExprs, idents, dml), idClaims, declaredChecks.map(_._1).toSet)
+  }
+
   /** Parse `sql` against `schema`'s columns and bind it by ordinal —
     * analyzer-resolved (functions, implicit casts, time zones), then
     * `BindReferences` so the executors evaluate it straight off the
     * task rows. `castTo` wraps the declared type around a generation
     * expression (the batch path's `.cast(dt)`). */
-  private[sources] def bind(spark: SparkSession, schema: StructType,
-                            sql: String, castTo: Option[DataType] = None)
+  private def bind(spark: SparkSession, schema: StructType,
+                   sql: String, castTo: Option[DataType] = None)
       : org.apache.spark.sql.catalyst.expressions.Expression = {
     import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BindReferences, Cast}
     import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
@@ -414,10 +419,8 @@ case class GraftTaskCommit(file: String, rows: Long,
   * and the native row-level-operation writes, GraftRowLevelOps). */
 private[graft] object GraftTaskWriters {
 
-  /** JVM-wide count of epoch READ-BACK jobs (the grouped aggregate a
-    * streaming commit runs when task-side stats/sketches cannot serve)
-    * — a spec asserts the inline path with NDV opted in runs ZERO of
-    * these per epoch (r20). */
+  /** JVM-wide count of [[groupedReadBack]] jobs — a spec asserts the
+    * streaming inline path with NDV opted in runs ZERO per epoch. */
   private[graft] val epochReadBacks =
     new java.util.concurrent.atomic.AtomicLong
 
@@ -467,21 +470,12 @@ private[graft] object GraftTaskWriters {
     if (specs.length == statsCols.length) Some(specs) else None
   }
 
-  /** One dir's `#stats` payload: rowcount + per-column (name, min,
-    * max) triples (`%N` = all-null) + the `#nulls` lane. Delegates to
-    * the one encoder every stats producer (append, clustered write,
-    * streaming epoch, task-inline) shares. */
-  def statsLine(rows: Long,
-                cells: Seq[(String, Option[String], Option[String])],
-                nulls: Seq[(String, Long)] = Seq.empty): String =
-    ManifestTable.statsPayloadCells(rows, cells, nulls)
-
   /** Fold per-task extreme STRINGS into the epoch extreme by comparing
     * in the column's NATIVE type (string order would mis-rank
     * numerics): each candidate round-trips through Spark's own
     * string→type cast — exact for every inline-able atomic type. */
-  def mergeStat(dt: DataType, zone: String, vals: Seq[Option[String]],
-                least: Boolean): Option[String] = {
+  private def mergeStat(dt: DataType, zone: String, vals: Seq[Option[String]],
+                        least: Boolean): Option[String] = {
     val present = vals.flatten
     if (present.isEmpty) None
     else {
@@ -492,6 +486,75 @@ private[graft] object GraftTaskWriters {
       Some((if (least) parsed.minBy(_._2)(ord) else parsed.maxBy(_._2)(ord))._1)
     }
   }
+
+  /** One dir's stats payload folded from its tasks' commit messages:
+    * native-order extremes of their min/max cells, summed NULL counts.
+    * Pure metadata — no job. */
+  def foldStats(specs: Seq[StatsColSpec], zone: String,
+                ms: Seq[GraftTaskCommit]): String = {
+    def cellsOf(sp: StatsColSpec) = ms.flatMap(_.stats.filter(_.col == sp.name))
+    ManifestTable.statsPayloadCells(ms.map(_.rows).sum,
+      specs.map { sp =>
+        (sp.name, mergeStat(sp.dt, zone, cellsOf(sp).map(_.min), least = true),
+          mergeStat(sp.dt, zone, cellsOf(sp).map(_.max), least = false))
+      },
+      specs.map(sp => sp.name -> cellsOf(sp).map(_.nulls).sum))
+  }
+
+  /** The just-published dirs `rels` of `tableDir` read back through
+    * the physical names, aliased to logical (S42). */
+  def readStaged(spark: SparkSession, tableDir: String, schema: StructType,
+                 cmap: Map[String, String], rels: Seq[String])
+      : org.apache.spark.sql.DataFrame = {
+    val raw = spark.read.schema(ManifestTable.toPhysical(schema, cmap))
+      .parquet(rels.map(r => s"$tableDir/$r"): _*)
+    if (cmap.isEmpty) raw
+    else raw.select(schema.fieldNames.toIndexedSeq.map(l =>
+      org.apache.spark.sql.functions.col(cmap.getOrElse(l, l)).as(l)): _*)
+  }
+
+  /** One grouped read-back over `rels` (as [[readStaged]]), keyed by
+    * dir: the fallback when the task messages cannot serve a lane.
+    * `_metadata.file_path` can render URL-ENCODED where makeQualified
+    * does not (paths with spaces), so the rel lookup tolerates both. */
+  def groupedReadBack(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                      tableDir: String, schema: StructType,
+                      cmap: Map[String, String], rels: Seq[String],
+                      aggs: Seq[org.apache.spark.sql.Column])
+      : Map[String, org.apache.spark.sql.Row] = {
+    epochReadBacks.incrementAndGet(): Unit
+    val dirKey = org.apache.spark.sql.functions.expr(
+      "regexp_replace(_metadata.file_path, '/[^/]*$', '')")
+    val qualToRel = rels.map(r =>
+      fs.makeQualified(new Path(tableDir, r)).toString -> r).toMap
+    def relOf(qual: String): Option[String] =
+      qualToRel.get(new Path(qual).toString).orElse(
+        scala.util.Try(qualToRel.get(new Path(
+          new java.net.URI(qual)).toString)).toOption.flatten)
+    readStaged(spark, tableDir, schema, cmap, rels)
+      .withColumn("__graft_rb_dir", dirKey)
+      .groupBy("__graft_rb_dir").agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .flatMap(r => relOf(r.getString(0)).map(_ -> r)).toMap
+  }
+
+  /** Stats payloads of `rels` from ONE [[groupedReadBack]], for a
+    * tracked column [[inlineStatsSpec]] refuses (e.g. binary); the
+    * opted-in NDV sketches of `ndvCols` ride the same pass. */
+  def readBackStats(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+                    tableDir: String, schema: StructType,
+                    cmap: Map[String, String], rels: Seq[String],
+                    statsCols: Seq[String],
+                    ndvCols: Seq[String] = Seq.empty): Map[String, String] =
+    groupedReadBack(spark, fs, tableDir, schema, cmap, rels,
+      ManifestTable.statsAggExprs(statsCols) ++
+        ManifestTable.ndvSketchAggExprs(ndvCols)).map { case (rel, r) =>
+      val base = ManifestTable.statsPayloadFrom(r.getAs[Long]("rows"),
+        statsCols, lane => r.getAs[Any](lane))
+      rel -> (if (ndvCols.isEmpty) base
+              else ManifestTable.withNdvSketches(base,
+                ManifestTable.ndvSketchCells(ndvCols, lane => r.getAs[Any](lane))))
+    }
 
   /** Move exactly the commit-message-named files from `stageDir` into
     * a fresh `pubDir` — the hard-killed-attempt orphan defense: only
@@ -580,11 +643,14 @@ class GraftTaskWriter(path: String, conf: Configuration,
     var j = 0
     c.idents.foreach { case (logical, ord, baseWm, step, allowExplicit) =>
       if (record.isNullAt(ord)) {
+        if (c.dml)
+          throw new IllegalArgumentException(
+            ManifestSupport.nullIdentityRefusal(logical))
         ensureMutable()
         mutable.update(ord, baseWm + step *
           (1L + (math.max(partitionId, 0).toLong << 33) + mintCounts(j)))
         mintCounts(j) += 1
-      } else if (!allowExplicit)
+      } else if (!allowExplicit && !c.dml)
         throw new IllegalArgumentException(
           s"identity column '$logical' is GENERATED ALWAYS — explicit " +
             "values are refused on the streaming write (declare BY " +
@@ -593,7 +659,10 @@ class GraftTaskWriter(path: String, conf: Configuration,
     }
     c.gens.zip(genOrds).foreach { case ((logical, ord, e), ord2) =>
       val computed = e.eval(row)
-      if (row.isNullAt(ord)) {
+      if (c.dml) {
+        ensureMutable()
+        mutable.update(ord, if (computed == null) null else copied(computed))
+      } else if (row.isNullAt(ord)) {
         if (computed != null) { ensureMutable(); mutable.update(ord, copied(computed)) }
       } else {
         val cur = row.get(ord, c.fieldTypes(ord))
@@ -607,8 +676,8 @@ class GraftTaskWriter(path: String, conf: Configuration,
       val verdict = p.eval(row)
       if (verdict != null && !verdict.asInstanceOf[Boolean])
         throw new IllegalArgumentException(
-          s"CHECK constraint '$nm' violated by a streamed row — the " +
-            "epoch aborts before its manifest commit")
+          s"CHECK constraint '$nm' violated by a written row — the " +
+            "write aborts before its manifest commit")
     }
     row
   }

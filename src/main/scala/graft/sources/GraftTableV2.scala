@@ -696,55 +696,13 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
           (ManifestTable.metaOf(fs, tableDir, v),
             ManifestTable.colMapOf(fs, tableDir, v))
         }.getOrElse((Map.empty[String, String], Map.empty[String, String]))
-      val physToLogical = cmap.map(_.swap)
-      def ordinalOf(logical: String): Int =
-        info.schema.fieldNames.indexWhere(_.equalsIgnoreCase(logical))
-      // S30 — CHECK constraints, declared (persisted meta channel) and
-      // ad-hoc (`check.<name>` write options), bound to the write
-      // schema; the bound-key set feeds the ALTER-mid-stream guard
-      val checkPrefix = GraftCatalog.PropPrefix + "check."
-      val declaredChecks = headMeta.toSeq.collect {
-        case (k, sql) if k.startsWith(checkPrefix) => k -> sql
-      }.sortBy(_._1)
-      val checkExprs = (declaredChecks.map { case (k, sql) =>
-        k.stripPrefix(checkPrefix) -> sql } ++ checks).map { case (nm, sql) =>
-        nm -> GraftRowContracts.bind(spark, info.schema, sql) }
-      // S50 — generated columns: fill-or-validate per row, the batch
-      // choke point's semantics with the declared type cast
-      val genExprs = headMeta.toSeq.collect {
-        case (k, sql) if k.startsWith(ManifestTable.GenColPrefix) =>
-          k.stripPrefix(ManifestTable.GenColPrefix) -> sql
-      }.sortBy(_._1).flatMap { case (phys, sql) =>
-        val logical = physToLogical.getOrElse(phys, phys)
-        val ord = ordinalOf(logical)
-        if (ord < 0) None
-        else Some((logical, ord, GraftRowContracts.bind(spark, info.schema,
-          sql, Some(info.schema.fields(ord).dataType))))
-      }
-      // S51 — identity: each epoch claims the head watermark at write
-      // construction (one StreamingWrite per micro-batch); the commit
-      // loop refuses if a concurrent allocation moved it
-      val idClaims = ManifestTable.identitySpecs(headMeta).toSeq
-        .sortBy(_._1).flatMap { case (phys, spec) =>
-          val logical = physToLogical.getOrElse(phys, phys)
-          val ord = ordinalOf(logical)
-          if (ord < 0) None
-          else {
-            require(info.schema.fields(ord).dataType ==
-              org.apache.spark.sql.types.LongType,
-              s"identity column '$logical' must be BIGINT on the " +
-                "streaming write (per-partition mint offsets span 2^33)")
-            val wm = headMeta.get(ManifestTable.IdentityWmPrefix + phys)
-              .flatMap(_.toLongOption).getOrElse(spec.base)
-            Some(ManifestTable.IdentityClaim(phys, logical, spec, wm))
-          }
-        }
-      val idents = idClaims.map { cl =>
-        (cl.logical, ordinalOf(cl.logical), cl.baseWm, cl.spec.step,
-          cl.spec.allowExplicit) }
-      val contracts = GraftRowContracts(
-        info.schema.fields.map(_.dataType).toSeq, checkExprs, genExprs,
-        idents)
+      // CHECKs (declared + ad-hoc), generated columns and identity
+      // minting bound to the write schema; the bound-key set feeds the
+      // ALTER-mid-stream guard, and each epoch claims the head identity
+      // watermark here (one StreamingWrite per micro-batch)
+      val (contracts, idClaims, declaredKeys) =
+        GraftRowContracts.forTable(spark, info.schema, headMeta, cmap,
+          adHoc = checks)
       // the merge kernel's commit path advances no identity watermark —
       // and the engine's bucketed batch routes (the same kernel) never
       // mint either, so this is a loud gate on an unsupported combo,
@@ -772,7 +730,7 @@ class GraftWriteBuilder(tableDir: String, statsCols: Seq[String],
       new GraftStreamingWrite(tableDir, info.schema, info.queryId,
         epochStatsCols, retain,
         cluster, cmap, Some(contracts).filterNot(_.isEmpty), idClaims,
-        declaredChecks.map(_._1).toSet, bucketedGeom, upsertTies,
+        declaredKeys, bucketedGeom, upsertTies,
         // r20 — stats.ndv=write resolved off the same head snapshot:
         // the task writers sketch inline, the epoch commit unions
         ndvWrite =

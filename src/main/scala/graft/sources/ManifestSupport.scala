@@ -117,17 +117,11 @@ object ManifestSupport {
   }
 
   /** The table's PERSISTED constraints (`prop:check.<name>` in `#meta`,
-    * the catalog's declared data contracts) applied to `data` — the
-    * streaming sinks run this so an older-API writer cannot sidestep a
-    * contract the catalog declared. */
-  private[graft] def withDeclaredChecks(data: DataFrame,
-                                          dir: String): DataFrame =
-    bindDeclaredChecks(data, dir)._1
-
-  /** [[withDeclaredChecks]] plus the full PROP KEYS it bound, read at
-    * THIS moment — [[ManifestTable]]'s commit loops compare the head's
-    * declared keys against this set at publish time and refuse when a
-    * constraint appeared after the write job was built (the
+    * the catalog's declared data contracts) applied to `data`, plus the
+    * full PROP KEYS bound, read at THIS moment — [[ManifestTable]]'s
+    * commit loops compare the head's declared keys against this set at
+    * publish time and refuse when a constraint appeared after the
+    * write job was built (the
     * ALTER-vs-write metadata race; Delta fails the same interleave
     * with MetadataChangedException).
     *
@@ -187,15 +181,18 @@ object ManifestSupport {
       else {
         val exempt = exemptWhen.map(expr).getOrElse(lit(false))
         df.filter(when(!exempt && col(logical).isNull,
-          raise_error(lit(
-            s"identity column '$logical' arrived NULL on a DML " +
-              "write-back — MERGE-inserted rows into identity tables " +
-              "get no minted ids on this path; route inserts through " +
-              "INSERT/append (which mints against the watermark)")))
+          raise_error(lit(nullIdentityRefusal(logical))))
           .otherwise(lit(true)))
       }
     }
   }
+
+  /** Shared with the copy-on-write task writers' refusal. */
+  private[graft] def nullIdentityRefusal(logical: String): String =
+    s"identity column '$logical' arrived NULL on a DML " +
+      "write-back — MERGE-inserted rows into identity tables " +
+      "get no minted ids on this path; route inserts through " +
+      "INSERT/append (which mints against the watermark)"
 
   /** S50 — GENERATED ALWAYS AS enforcement at the same choke point the
     * CHECK constraints bind (every write API passes here): a NULL in a

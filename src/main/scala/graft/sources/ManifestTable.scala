@@ -503,7 +503,7 @@ object ManifestTable {
     * total rows, then per column min / max (cast-to-string) and the
     * NON-NULL count (`cnt:` — the `#nulls` lane's input). One pass,
     * map-side combined, shared by every stats-writing commit path. */
-  private[sources] def statsAggExprs(statsCols: Seq[String])
+  private[graft] def statsAggExprs(statsCols: Seq[String])
       : Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min}
     count(lit(1)).as("rows") +: statsCols.flatMap(c => Seq(
@@ -529,8 +529,8 @@ object ManifestTable {
 
   /** Encode one dir's stats payload from the observed [[statsAggExprs]]
     * lane values. */
-  private[sources] def statsPayloadFrom(rows: Long, statsCols: Seq[String],
-                                        lane: String => Any): String =
+  private[graft] def statsPayloadFrom(rows: Long, statsCols: Seq[String],
+                                      lane: String => Any): String =
     statsPayloadCells(rows,
       statsCols.map(c => (c, Option(lane(s"min:$c")).map(_.toString),
         Option(lane(s"max:$c")).map(_.toString))),

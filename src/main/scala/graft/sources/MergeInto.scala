@@ -99,13 +99,14 @@ object MergeInto {
   /** Standing rows of the buckets `keys`' values hash into, read
     * through the live declared schema — the bounded target slice a
     * key-equality MERGE needs to evaluate matched clauses against:
-    * O(touched buckets), never O(table). Empty frame (declared
-    * schema) when the committed table holds none of the probed keys;
-    * a table with pinned geometry but ZERO commits throws (there is no
-    * declared schema to shape the empty frame with) — callers run
+    * O(touched buckets), never O(table). None when no live bucket is
+    * touched: a join against an empty side lets AQE finish before the
+    * other side's stage is submitted, which then runs after the caller
+    * moved on. A table with pinned geometry but ZERO commits throws
+    * (there is no declared schema) — callers run
     * after the first commit by construction. */
   private[graft] def standingForKeys(spark: SparkSession, tableDir: String,
-                                     keys: DataFrame): DataFrame = {
+                                     keys: DataFrame): Option[DataFrame] = {
     val (key, n) = bucketedGeometry(spark, tableDir).getOrElse(
       throw new IllegalArgumentException(s"not a merge table: $tableDir"))
     val fs = fsOf(spark, tableDir)
@@ -126,12 +127,10 @@ object MergeInto {
     val touched = keys
       .select(pmod(hash(col(key).cast(keyType)), lit(n)).as("b"))
       .distinct().collect().map(_.getInt(0)).filter(liveByBucket.contains)
-    if (touched.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema)
+    if (touched.isEmpty) None
+    else Some(spark.read.schema(schema)
       .parquet(touched.toIndexedSeq
-        .map(b => ManifestTable.absPath(tableDir, liveByBucket(b))): _*)
+        .map(b => ManifestTable.absPath(tableDir, liveByBucket(b))): _*))
   }
 
   private def readMarker(spark: SparkSession, dir: String,

@@ -374,20 +374,18 @@ object Streams {
     if (committed.exists(_ >= batchId)) None // replayed batch: already in
     else if (b.isEmpty) None
     else {
-      // the table's declared contracts and cluster spec bind the
-      // streaming writer like every other API (S27/S30 parity): a
-      // violating micro-batch fails BEFORE its manifest commit — the
-      // checkpoint doesn't advance, so the stream surfaces the error
-      // instead of quietly thinning
-      val guarded = graft.sources.ManifestSupport
-        .withDeclaredChecks(b, tableDir)
+      // the table's declared contracts (bound inside both append
+      // kernels) and cluster spec bind the streaming writer like every
+      // other API (S27/S30 parity): a violating micro-batch fails BEFORE
+      // its manifest commit — the checkpoint doesn't advance, so the
+      // stream surfaces the error instead of quietly thinning
       val spec = headV.flatMap(v =>
         graft.sources.ManifestTable.clusterSpecOf(fs, tableDir, v))
       Some(spec match {
         case Some(cols) => graft.sources.ManifestTable.appendClustered(
-          guarded, tableDir, (statsCols ++ cols).distinct,
+          b, tableDir, (statsCols ++ cols).distinct,
           meta = Map(key -> batchId.toString))
-        case None => graft.sources.ManifestTable.append(guarded, tableDir,
+        case None => graft.sources.ManifestTable.append(b, tableDir,
           statsCols, meta = Map(key -> batchId.toString))
       })
     }
