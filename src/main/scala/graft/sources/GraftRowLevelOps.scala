@@ -249,9 +249,8 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
       }
       GraftTaskWriters.publishNamed(fs, new Path(dir, stageRel),
         new Path(dir, cid), files.map(m => new Path(m.file).getName).toSeq)
-      val payload = inlineSpec.map(GraftTaskWriters.foldStats(_, zone, files.toSeq))
-        .getOrElse(GraftTaskWriters.readBackStats(spark, fs, dir, writeSchema,
-          cmap, Seq(cid), statsCols)(cid))
+      val payload = GraftTaskWriters.dirStats(spark, fs, dir, writeSchema, cmap,
+        Seq(cid -> files.toSeq), statsCols, Seq.empty, zone)(cid)
       ManifestTable.publishRewrite(spark, dir, touched, Some(cid),
         Some(payload), writeSchema, statsCols,
         GraftRowLevel.retainOf(table), boundChecks,
@@ -269,19 +268,21 @@ class GraftGroupWrite(table: GraftTable, op: GraftGroupOperation,
 
 /** Batch flavor of the X15 task-writer factory: one uniquely-named
   * parquet file per task, opened lazily, straggler-reconciled at
-  * commit by the named-file move. */
+  * commit by the named-file move. The zero-padded partition number
+  * keeps a dir's file listing in partition order. */
 case class GraftBatchWriterFactory(stageDir: String,
                                    conf: SerializableConfiguration,
                                    statsSpec: Seq[StatsColSpec],
                                    zone: String,
-                                   contracts: Option[GraftRowContracts])
+                                   contracts: Option[GraftRowContracts],
+                                   ndvSpec: Seq[StatsColSpec] = Seq.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int,
                             taskId: Long): DataWriter[InternalRow] =
     new GraftTaskWriter(
-      s"$stageDir/part-$partitionId-$taskId-" +
+      f"$stageDir/part-$partitionId%05d-$taskId-" +
         java.util.UUID.randomUUID().toString.take(8) + ".snappy.parquet",
-      conf.value, statsSpec, zone, partitionId, contracts)
+      conf.value, statsSpec, zone, partitionId, contracts, ndvSpec)
 }
 
 /** `SupportsDelta` for bucketed (S31) tables: Spark hands the write
@@ -660,6 +661,9 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
       // identity columns join the tracked set: the per-dir max IS the
       // watermark-advance input publishMorDelta reads
       val statsCols2 = (statsCols ++ idClaims.map(_.logical)).distinct
+      val cmap = ManifestTable.colMapOf(fs, dir, baseV)
+      // one images dir through the task-writer kernel, its stats folded
+      // from the task messages; no dir when no image row survives
       def landImages(df0: org.apache.spark.sql.DataFrame)
           : Option[(String, Option[String])] = {
         val (checked, bc) =
@@ -668,17 +672,8 @@ class GraftPositionDeltaWrite(table: GraftTable, info: LogicalWriteInfo,
         boundChecks ++= bc
         val c = "pd-" + java.util.UUID.randomUUID().toString.take(8)
         stagedRels += c
-        val obs = org.apache.spark.sql.Observation()
-        val aggs = ManifestTable.statsAggExprs(statsCols2)
-        ManifestTable.writePhysical(
-          checked.observe(obs, aggs.head, aggs.tail: _*),
-          ManifestTable.colMapOf(fs, dir, baseV))
-          .write.parquet(s"$dir/$c")
-        val m = obs.get
-        val n = m("rows").asInstanceOf[Long]
-        if (n == 0L) { fs.delete(new Path(dir, c), true): Unit; None }
-        else Some((c,
-          Some(ManifestTable.statsPayloadFrom(n, statsCols2, m))))
+        GraftTaskWriters.writeDirs(checked, dir, cmap, statsCols2)(_ => c)
+          .get(c).map(payload => (c, Some(payload)))
       }
       val cidFresh =
         if (kindCounts(0) == 0L) None

@@ -197,67 +197,16 @@ class GraftStreamingWrite(tableDir: String, writeSchema: StructType,
         ms.map(m => new Path(m.file).getName))
     }
     fs.delete(new Path(tableDir, rel), true): Unit
-    // S53 write-side lane on the STREAMING path too (r19): an opted-in
-    // table (`stats.ndv=write`) sketches each published dir so
-    // streamed dirs never wait for the next ANALYZE to become
-    // zero-read. On the zero-job inline-stats path that costs ONE
-    // grouped read-back over the epoch's freshly-written (page-cache
-    // warm) files; on the read-back fallback the sketch lanes ride the
-    // SAME single grouped pass as min/max/nulls — never a second scan.
-    val ndvCols = ManifestTable.writeNdvCols(headMetaNow, statsCols)
-    val pubRels = fileDirs.map(_._1)
+    // zero-job stats: min/max/nulls and the opted-in S53 sketches
+    // (`stats.ndv=write`) ride the commit messages; a message missing
+    // the sketch lane (the prop flipped mid-stream — this write was
+    // built before it) or a non-atomic tracked column takes the one
+    // grouped read-back
     val stats: Map[String, String] =
       if (statsCols.isEmpty) Map.empty
-      else inlineSpec match {
-        case Some(specs) =>
-          // zero-job path: every tracked column's min/max was computed
-          // IN the task writers and rides the commit messages. r20 —
-          // the opted-in NDV lane rides the SAME messages: per-task
-          // sketch state unions driver-side (pure metadata), so the
-          // epoch stays ZERO-JOB with NDV on. A message missing the
-          // lane (the prop flipped mid-stream — this write was built
-          // before it) falls back to the one grouped read-back.
-          val ndvFromTasks: Option[Map[String, Seq[(String, Array[Byte])]]] =
-            if (ndvCols.isEmpty) None
-            else if (files.forall(m => ndvCols.forall(c =>
-              m.ndv.exists(_._1.equalsIgnoreCase(c)))))
-              Some(fileDirs.map { case (pubRel, ms) =>
-                pubRel -> ndvCols.map { c =>
-                  val u = new org.apache.datasketches.hll.Union(
-                    graft.ScaleKnobs.NdvSketchLgK)
-                  ms.foreach(_.ndv.find(_._1.equalsIgnoreCase(c))
-                    .foreach { case (_, bytes) =>
-                      u.update(org.apache.datasketches.hll.HllSketch
-                        .heapify(bytes))
-                    })
-                  c -> u.getResult.toUpdatableByteArray
-                }
-              }.toMap)
-            else None
-          val sketched =
-            if (ndvCols.isEmpty || ndvFromTasks.isDefined)
-              Map.empty[String, org.apache.spark.sql.Row]
-            else GraftTaskWriters.groupedReadBack(spark, fs, tableDir,
-              writeSchema, cmap, pubRels,
-              ManifestTable.ndvSketchAggExprs(ndvCols))
-          fileDirs.map { case (pubRel, ms) =>
-            val base = GraftTaskWriters.foldStats(specs, zone, ms)
-            pubRel -> ndvFromTasks.flatMap(_.get(pubRel))
-              .map(sk => ManifestTable.withNdvSketches(base, sk))
-              .orElse(sketched.get(pubRel)
-                .map(r => ManifestTable.withNdvSketches(base,
-                  ManifestTable.ndvSketchCells(ndvCols,
-                    lane => r.getAs[Any](lane)))))
-              .getOrElse(base)
-          }.toMap
-        case None =>
-          // a non-atomic tracked column: ONE grouped, footer-friendly
-          // pass serves min/max/nulls AND (when opted in) the NDV
-          // sketches for every published dir — never per-dir jobs,
-          // never a second scan
-          GraftTaskWriters.readBackStats(spark, fs, tableDir, writeSchema,
-            cmap, pubRels, statsCols, ndvCols)
-      }
+      else GraftTaskWriters.dirStats(spark, fs, tableDir, writeSchema, cmap,
+        fileDirs, statsCols, ManifestTable.writeNdvCols(headMetaNow, statsCols),
+        zone)
     ManifestTable.appendCommitLoopCore(spark, writeSchema, tableDir,
       fileDirs.map(_._1), stats, statsCols, retain,
       meta = Map(txnKey -> epochId.toString),
@@ -415,8 +364,12 @@ case class GraftTaskCommit(file: String, rows: Long,
                            ndv: Seq[(String, Array[Byte])] = Seq.empty)
     extends WriterCommitMessage
 
-/** Shared executor-task parquet-writer plumbing (X15 streaming writes
-  * and the native row-level-operation writes, GraftRowLevelOps). */
+/** Shared executor-task parquet-writer plumbing, the one writer and
+  * stats kernel of every engine-owned dir write: X15 streaming epochs,
+  * the native row-level-operation writes (GraftRowLevelOps) and, through
+  * [[writeDirs]], appends, clustered appends, compactions,
+  * `ManifestTable.deleteWhere` and merge-on-read image landing. Dir
+  * stats are folded from the task commit messages ([[dirStats]]). */
 private[graft] object GraftTaskWriters {
 
   /** JVM-wide count of [[groupedReadBack]] jobs — a spec asserts the
@@ -499,6 +452,100 @@ private[graft] object GraftTaskWriters {
           mergeStat(sp.dt, zone, cellsOf(sp).map(_.max), least = false))
       },
       specs.map(sp => sp.name -> cellsOf(sp).map(_.nulls).sum))
+  }
+
+  /** One dir's S53 sketches of `ndvCols` unioned from its tasks'
+    * per-task `HllSketch` state — an HLL union loses nothing against
+    * one sketch of the whole dir. None when a message lacks a lane
+    * (its writer was built before the table opted in). */
+  def unionNdv(ndvCols: Seq[String], ms: Seq[GraftTaskCommit])
+      : Option[Seq[(String, Array[Byte])]] =
+    if (!ms.forall(m => ndvCols.forall(c => m.ndv.exists(_._1.equalsIgnoreCase(c)))))
+      None
+    else Some(ndvCols.map { c =>
+      val u = new org.apache.datasketches.hll.Union(graft.ScaleKnobs.NdvSketchLgK)
+      ms.foreach(_.ndv.find(_._1.equalsIgnoreCase(c)).foreach { case (_, bytes) =>
+        u.update(org.apache.datasketches.hll.HllSketch.heapify(bytes))
+      })
+      c -> u.getResult.toUpdatableByteArray
+    })
+
+  /** The `#stats` payloads of freshly published `dirs` (each with the
+    * messages of the tasks whose files it holds): min/max/nulls by
+    * [[foldStats]] and the opted-in sketches of `ndvCols` by
+    * [[unionNdv]], with no job. A tracked column [[inlineStatsSpec]]
+    * refuses (binary) takes [[readBackStats]]; a message missing a
+    * sketch lane takes one [[groupedReadBack]] for the sketches. */
+  def dirStats(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+               tableDir: String, schema: StructType,
+               cmap: Map[String, String],
+               dirs: Seq[(String, Seq[GraftTaskCommit])],
+               statsCols: Seq[String], ndvCols: Seq[String],
+               zone: String): Map[String, String] =
+    inlineStatsSpec(schema, statsCols) match {
+      case None =>
+        readBackStats(spark, fs, tableDir, schema, cmap, dirs.map(_._1),
+          statsCols, ndvCols)
+      case Some(specs) =>
+        val fromTasks = dirs.map { case (d, ms) => d -> unionNdv(ndvCols, ms) }.toMap
+        val sketched =
+          if (ndvCols.isEmpty || fromTasks.values.forall(_.isDefined))
+            Map.empty[String, org.apache.spark.sql.Row]
+          else groupedReadBack(spark, fs, tableDir, schema, cmap,
+            dirs.map(_._1), ManifestTable.ndvSketchAggExprs(ndvCols))
+        dirs.map { case (d, ms) =>
+          val base = foldStats(specs, zone, ms)
+          d -> (if (ndvCols.isEmpty) base
+                else fromTasks(d)
+                  .orElse(sketched.get(d).map(r =>
+                    ManifestTable.ndvSketchCells(ndvCols, lane => r.getAs[Any](lane))))
+                  .map(ManifestTable.withNdvSketches(base, _))
+                  .getOrElse(base))
+        }.toMap
+    }
+
+  /** Write `df` into fresh dirs of `tableDir` through the batch task
+    * writers and return each dir's `#stats` payload ([[dirStats]]):
+    * one SQL execution running one job over `df`'s partitions, one
+    * [[GraftTaskWriter]] per partition staged under a `wr-` dir (a
+    * failed task aborts, deleting its file), then exactly the
+    * commit-message-named files move into `dirOf(partition)`. A
+    * partition with no rows writes no file, so a zero-row `df` lands
+    * no dir and returns an empty map. Parquet stores `cmap`'s physical
+    * names; stats keys stay logical. */
+  def writeDirs(df: org.apache.spark.sql.DataFrame, tableDir: String,
+                cmap: Map[String, String], statsCols: Seq[String],
+                ndvCols: Seq[String] = Seq.empty)(
+                dirOf: Int => String): Map[String, String] = {
+    val spark = df.sparkSession
+    val fs = new Path(tableDir).getFileSystem(spark.sessionState.newHadoopConf())
+    val schema = df.schema
+    val zone = spark.sessionState.conf.sessionLocalTimeZone
+    val specs = inlineStatsSpec(schema, statsCols).getOrElse(Seq.empty)
+    val stage = new Path(tableDir, "wr-" + java.util.UUID.randomUUID().toString.take(8))
+    val factory = GraftBatchWriterFactory(stage.toString,
+      writeConf(spark, ManifestTable.toPhysical(schema, cmap)), specs, zone, None,
+      ndvSpec = specs.filter(sp => ndvCols.exists(_.equalsIgnoreCase(sp.name))))
+    try {
+      val qe = df.queryExecution
+      val messages = org.apache.spark.sql.execution.SQLExecution
+        .withNewExecutionId(qe, Some("graft write")) {
+          spark.sparkContext.runJob(qe.toRdd,
+            (ctx: org.apache.spark.TaskContext, rows: Iterator[InternalRow]) => {
+              val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+              try {
+                rows.foreach(w.write)
+                w.commit().asInstanceOf[GraftTaskCommit]
+              } catch { case t: Throwable => w.abort(); throw t }
+            })
+        }
+      val dirs = messages.toSeq.filter(_.rows > 0).groupBy(m => dirOf(m.partitionId))
+        .toSeq.sortBy(_._1).map { case (d, ms) => d -> ms.sortBy(_.partitionId) }
+      dirs.foreach { case (d, ms) =>
+        publishNamed(fs, stage, new Path(tableDir, d), ms.map(m => new Path(m.file).getName))
+      }
+      dirStats(spark, fs, tableDir, schema, cmap, dirs, statsCols, ndvCols, zone)
+    } finally fs.delete(stage, true): Unit
   }
 
   /** The just-published dirs `rels` of `tableDir` read back through

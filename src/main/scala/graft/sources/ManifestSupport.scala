@@ -305,9 +305,7 @@ object ManifestSupport {
           (statsCols ++ cols).distinct, retainGenerations = retainGenerations,
           specOverride = Some(cols))
       case _ =>
-        val (v0, cid) = ManifestTable.appendWithCid(data, dir, statsCols,
-          retainGenerations)
-        (v0, Seq(cid))
+        ManifestTable.appendWithCids(data, dir, statsCols, retainGenerations)
     }
     val stats = ManifestTable.statsOf(fs, dir, v)
     val cidSet = cids.toSet

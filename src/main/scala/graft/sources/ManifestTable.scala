@@ -1067,17 +1067,6 @@ object ManifestTable {
     else org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       f.copy(name = cmap.getOrElse(f.name, f.name))))
 
-  /** `df`'s columns renamed logical→physical — the write-side half of
-    * column mapping (parquet files ALWAYS store physical names). */
-  private[graft] def writePhysical(df: DataFrame,
-                                   cmap: Map[String, String]): DataFrame =
-    if (cmap.isEmpty) df
-    else {
-      import org.apache.spark.sql.functions.col
-      df.select(df.columns.toIndexedSeq.map(c =>
-        col(c).as(cmap.getOrElse(c, c))): _*)
-    }
-
   /** The logical schema of snapshot `snap`: the declared one, else the
     * footer schema of its data files (a table committed by a pre-schema
     * writer), read on the driver with Spark's file choice, so no job
@@ -1125,9 +1114,12 @@ object ManifestTable {
     val v = versions(fs, tableDir).lastOption
       .getOrElse(throw new IllegalArgumentException(
         s"no committed manifest at $tableDir"))
-    // one manifest parse serves paths, schema, column map and masks
+    // one manifest parse serves paths, schema, column map and masks; a
+    // dir-less version with a declared schema (a zero-row first append,
+    // an all-masked compaction) reads as an empty table
     val snap = snapshotOf(fs, tableDir, v)
-    require(snap.paths.nonEmpty, s"no committed manifest at $tableDir")
+    require(snap.paths.nonEmpty || snap.declared.isDefined,
+      s"no committed manifest at $tableDir")
     GraftTable.read(spark, tableDir, snap, snap.paths, snap.dv)
   }
 
@@ -1142,17 +1134,20 @@ object ManifestTable {
     require(versions(fs, tableDir).contains(v),
       s"version $v is not retained at $tableDir")
     val snap = snapshotOf(fs, tableDir, v)
-    require(snap.paths.nonEmpty, s"version $v at $tableDir lists no data")
+    require(snap.paths.nonEmpty || snap.declared.isDefined,
+      s"version $v at $tableDir lists no data")
     GraftTable.read(spark, tableDir, snap, snap.paths, snap.dv)
   }
 
   /** APPEND-table ingest (S19): commit `df` as one new immutable data
     * dir added to the live path list — the daily-ingest fact-table
     * shape (Delta append / Iceberg fast-append). Column statistics for
-    * `statsCols` are observed DURING the write job (`Dataset.observe`
-    * — no second pass over the data) and recorded as `#stats` manifest
-    * header lines, so a later [[rangeScan]] prunes whole commit dirs
-    * against min/max before a single parquet footer is opened. Because
+    * `statsCols` are computed by the task writers that write the dir
+    * ([[GraftTaskWriters.writeDirs]] — no second pass over the data)
+    * and recorded as `#stats` manifest header lines, so a later
+    * [[rangeScan]] prunes whole commit dirs against min/max before a
+    * single parquet footer is opened. A zero-row batch lands no dir:
+    * its commit records only the version, schema and meta. Because
     * ingest batches are naturally correlated with time-like columns
     * (each day's append spans one day), the per-dir ranges are narrow
     * and the pruning is real — the same reason Delta's file stats work.
@@ -1165,19 +1160,20 @@ object ManifestTable {
              statsCols: Seq[String] = Seq.empty,
              retainGenerations: Int = 2,
              meta: Map[String, String] = Map.empty): Long =
-    appendWithCid(df, tableDir, statsCols, retainGenerations, meta)._1
+    appendWithCids(df, tableDir, statsCols, retainGenerations, meta)._1
 
-  /** [[append]], also exposing the commit-dir name it created — the
-    * overwrite path commits exactly `[cid]` as the new table, so it
-    * must know WHICH dir the append landed (deriving it by diffing
-    * against "the largest retained version below v" breaks when
-    * retainGenerations=1 GC'd that version: the diff then returns ALL
-    * head paths and overwrite silently degrades to append). */
-  private[graft] def appendWithCid(df: DataFrame, tableDir: String,
-                                   statsCols: Seq[String] = Seq.empty,
-                                   retainGenerations: Int = 2,
-                                   meta: Map[String, String] = Map.empty)
-      : (Long, String) = {
+  /** [[append]], also exposing the commit dirs it created (none for a
+    * zero-row batch) — the overwrite path commits exactly those as the
+    * new table, so it must know WHICH dirs the append landed (deriving
+    * them by diffing against "the largest retained version below v"
+    * breaks when retainGenerations=1 GC'd that version: the diff then
+    * returns ALL head paths and overwrite silently degrades to
+    * append). */
+  private[graft] def appendWithCids(df: DataFrame, tableDir: String,
+                                    statsCols: Seq[String] = Seq.empty,
+                                    retainGenerations: Int = 2,
+                                    meta: Map[String, String] = Map.empty)
+      : (Long, Seq[String]) = {
     val spark = df.sparkSession
     val fs = fsOf(spark, tableDir)
     val root = new Path(tableDir)
@@ -1218,35 +1214,23 @@ object ManifestTable {
     // the watermark-advance input (and point lookups on ids prune)
     val statsCols2 = (statsCols ++ idClaims.map(_.logical)).distinct
     val cid = "a-" + java.util.UUID.randomUUID().toString.take(8)
-    val obs = org.apache.spark.sql.Observation()
     // S53 write-side lane: an opted-in table sketches its stats columns
-    // IN the same observation pass — later approx ANALYZEs go zero-read
+    // in the same task writers — later approx ANALYZEs go zero-read
     val ndvCols = headV0.map(v =>
       writeNdvCols(metaOf(fs, tableDir, v), statsCols2))
       .getOrElse(Seq.empty)
-    val aggs = statsAggExprs(statsCols2) ++ ndvSketchAggExprs(ndvCols)
-    val observed =
-      if (statsCols2.isEmpty) checked
-      else checked.observe(obs, aggs.head, aggs.tail: _*)
-    // parquet stores PHYSICAL names (column mapping, S42); stats above
-    // observe the logical frame, so payload keys stay logical
+    // parquet stores PHYSICAL names (column mapping, S42); stats keys
+    // stay logical
     val cmap = headV0
       .map(colMapOf(fs, tableDir, _)).getOrElse(Map.empty)
-    writePhysical(observed, cmap).write.parquet(s"$tableDir/$cid")
-    val payload =
-      if (statsCols2.isEmpty) None
-      else {
-        val m = obs.get
-        val base = statsPayloadFrom(m("rows").asInstanceOf[Number].longValue,
-          statsCols2, m)
-        Some(
-          if (ndvCols.isEmpty) base
-          else withNdvSketches(base, ndvSketchCells(ndvCols, m)))
-      }
-    (appendCommitLoop(df, tableDir, Seq(cid), payload.map(cid -> _).toMap,
+    val written = GraftTaskWriters.writeDirs(checked, tableDir, cmap,
+      statsCols2, ndvCols)(_ => cid)
+    val cids = written.keys.toSeq
+    (appendCommitLoop(df, tableDir, cids,
+      if (statsCols2.isEmpty) Map.empty else written,
       statsCols2, retainGenerations, meta,
-      recordingStats = payload.isDefined, boundChecks = boundChecks,
-      identity = idClaims, knownHead = headV0), cid)
+      recordingStats = statsCols2.nonEmpty, boundChecks = boundChecks,
+      identity = idClaims, knownHead = headV0), cids)
   }
 
   /** S51 — one identity column's minting claim: which watermark the
@@ -1562,7 +1546,7 @@ object ManifestTable {
     }
   }.toMap
 
-  /** The optimistic append-publish loop [[appendWithCid]] and
+  /** The optimistic append-publish loop [[appendWithCids]] and
     * [[appendClustered]] share: validate the fixed-schema contract
     * against the head, pin the stats zone, and commit
     * `prior ++ newPaths` with `priorStats ++ newStats`. */
@@ -1727,7 +1711,7 @@ object ManifestTable {
     * (Delta's optimized-write / clustered-ingest move). The spec is
     * the table's DECLARED `clusterBy` when one is set, else
     * `statsCols.head`. Costs one extra shuffle of the batch (the range
-    * partition) and a footer-served stats aggregate — at 100 TB that
+    * partition); the stats come from the task writers — at 100 TB that
     * is the cheap end of the trade: every later selective read prunes
     * against day-one layout instead of waiting for maintenance.
     * Schema contract and optimistic concurrency identical to
@@ -1742,7 +1726,7 @@ object ManifestTable {
 
   /** [[appendClustered]], also exposing the committed dirs — the
     * clustered OVERWRITE path re-commits exactly those dirs as the new
-    * table (same rationale as [[appendWithCid]]). */
+    * table (same rationale as [[appendWithCids]]). */
   private[graft] def appendClusteredWithCids(df: DataFrame, tableDir: String,
                       statsCols: Seq[String], k: Int = graft.ScaleKnobs.DefaultClusterDirs,
                       retainGenerations: Int = 2,
@@ -1756,16 +1740,6 @@ object ManifestTable {
     val fs = fsOf(spark, tableDir)
     val root = new Path(tableDir)
     if (!fs.exists(root)) fs.mkdirs(root)
-    // empty batch → plain append path (which handles zero rows): the
-    // partitionBy("rb") write of zero rows would yield a dir with no
-    // parquet files, and the stats re-read then cannot infer a schema —
-    // `INSERT INTO clustered_t SELECT ... WHERE false` must no-op like
-    // any other insert, not crash (r11 ADVICE)
-    if (df.isEmpty) {
-      val (v, cid) = appendWithCid(df, tableDir, statsCols,
-        retainGenerations, meta)
-      return (v, Seq(cid))
-    }
     require(!fs.exists(new Path(tableDir, MergeInto.KeyMarker)),
       s"$tableDir is a bucketed merge table — writes go through " +
         "MergeInto.merge (or the catalog's INSERT/MERGE, which route there)")
@@ -1788,6 +1762,8 @@ object ManifestTable {
         headHint = headV0)
     val statsCols2 = (statsCols ++ idClaims.map(_.logical)).distinct
     val cid = "ci-" + java.util.UUID.randomUUID().toString.take(8)
+    // a zero-row batch (`INSERT INTO clustered_t SELECT ... WHERE
+    // false`) lands no dir and commits like any other empty insert
     val outStats = writeClusteredDirs(checked, tableDir, cid, spec, k, statsCols2,
       headV0.map(colMapOf(fs, tableDir, _)).getOrElse(Map.empty),
       headHint = headV0)
@@ -2006,45 +1982,28 @@ object ManifestTable {
     (joined, parts.reduce(_.bitwiseOR(_)))
   }
 
-  /** Append-table compaction (S19 maintenance): rewrite the live
-    * table's accreted small commit dirs as `k` RANGE-SORTED dirs on
-    * `statsCols.head`, each dir a narrow disjoint slice with fresh
-    * `#stats` — compaction doesn't just cap the dir count (years of
-    * daily appends = thousands of manifest paths), it IMPROVES
-    * skipping: overlapping ingest batches become disjoint sorted
-    * ranges, so a [[rangeScan]] after compaction opens ~1 of `k` dirs
-    * where before it opened every batch that straddled the range
-    * (S11's range-clustering, applied at the manifest layer). Stats
-    * for the output dirs come from one grouped aggregate over the
-    * freshly-written files (the rewrite already paid a full pass; the
-    * stats read is footer-friendly and one job). Publishes through
-    * [[commitIf]] against racing APPENDS: on conflict the new head's
-    * extra dirs are carried through untouched — (head − inputs) +
-    * outputs — so no append is lost; an input dir VANISHING from the
-    * head (racing compaction/restore) aborts loudly instead of
-    * resurrecting rewritten rows. */
   /** The clustered multi-dir write both [[compactAppend]] and
     * [[appendClustered]] share: lay `data` out as ≤`k` range-sorted
-    * (single-column spec) or Morton-interleaved (multi-column) dirs
-    * under `tableDir/cid/rb=N`, and return the per-dir `#stats`
-    * payloads (one grouped, footer-served aggregate over the files
-    * just written). */
+    * (single-column spec) or Morton-interleaved (multi-column) dirs —
+    * range partition N is written by one task writer straight into
+    * `tableDir/cid/rb=N` — and return the per-dir `#stats` payloads the
+    * task writers computed. A fully masked input (every row deleted
+    * merge-on-read) writes no file and returns no dir, so the
+    * compaction commits a dir-less (empty-table) manifest, the correct
+    * materialization of an all-masked table (concurrency-fuzz find). */
   private def writeClusteredDirs(data: DataFrame, tableDir: String,
                                  cid: String, spec: Seq[String], k: Int,
                                  statsCols: Seq[String],
                                  cmap: Map[String, String],
                                  headHint: Option[Long] = None)
       : Map[String, String] = {
-    import org.apache.spark.sql.functions.{col, spark_partition_id}
-    // "rb" becomes the partitionBy dir key and "__graft_*" carries the
-    // Morton helpers — a user column with either name would be silently
-    // consumed (withColumn replaces, leaf-dir reads null-fill), so
+    import org.apache.spark.sql.functions.col
+    // "__graft_*" carries the Morton helpers — a user column with that
+    // prefix would be silently consumed (withColumn replaces), so
     // reject loudly (the reserved-name rule the merge kernel applies
     // to "b"/"rn"); reachable from EVERY write to a clusterBy table
-    require(!data.columns.contains("rb") &&
-        !data.columns.exists(_.startsWith("__graft_")),
-      "clustered writes reserve the column name 'rb' and the " +
-        "'__graft_' prefix")
+    require(!data.columns.exists(_.startsWith("__graft_")),
+      "clustered writes reserve the '__graft_' column prefix")
     val clustered = spec match {
       case Seq(single) =>
         data.repartitionByRange(k, col(single)).sortWithinPartitions(col(single))
@@ -2055,51 +2014,33 @@ object ManifestTable {
           .sortWithinPartitions(col("__graft_zv"))
           .select(data.columns.toIndexedSeq.map(col): _*) // shed z helpers
     }
-    writePhysical(clustered, cmap)
-      .withColumn("rb", spark_partition_id()) // narrow — no second shuffle
-      .write.partitionBy("rb").parquet(s"$tableDir/$cid")
-    // fresh stats per output dir: one grouped aggregate over the files
-    // just written (rb is a directory-encoded partition column, so the
-    // group-by is scan-cheap and min/max are footer-served); the files
-    // store physical names — alias back so payload keys stay logical.
-    // EXPLICIT read schema: a fully-masked input (every row deleted
-    // merge-on-read) writes ZERO files, and schema inference over the
-    // empty cid dir would throw — with the schema given, the read-back
-    // is an empty frame, the stats map is empty, and the compaction
-    // commits a dir-less (empty-table) manifest, which is the correct
-    // materialization of an all-masked table (concurrency-fuzz find).
-    // S53 write-side lane on the clustered routes too — the read-back
-    // aggregate is already per-dir, so the sketch is one more lane
+    // S53 write-side lane on the clustered routes too
     val ndvCols = headHint
       .orElse(versions(fsOf(data.sparkSession, tableDir), tableDir)
         .lastOption)
       .map(v => writeNdvCols(
         metaOf(fsOf(data.sparkSession, tableDir), tableDir, v), statsCols))
       .getOrElse(Seq.empty)
-    val aggs = statsAggExprs(statsCols) ++ ndvSketchAggExprs(ndvCols)
-    val readBackSchema = org.apache.spark.sql.types.StructType(
-      toPhysical(data.schema, cmap).fields :+
-        org.apache.spark.sql.types.StructField("rb",
-          org.apache.spark.sql.types.IntegerType))
-    val readBack0 = data.sparkSession.read.schema(readBackSchema)
-      .parquet(s"$tableDir/$cid")
-    val readBack =
-      if (cmap.isEmpty) readBack0
-      else readBack0.select((data.columns.toIndexedSeq.map(l =>
-        col(cmap.getOrElse(l, l)).as(l)) :+ col("rb")): _*)
-    readBack
-      .groupBy(col("rb")).agg(aggs.head, aggs.tail: _*).collect()
-      .map { r =>
-        val base = statsPayloadFrom(r.getAs[Long]("rows"), statsCols,
-          lane => r.getAs[Any](lane))
-        val payload =
-          if (ndvCols.isEmpty) base
-          else withNdvSketches(base,
-            ndvSketchCells(ndvCols, lane => r.getAs[Any](lane)))
-        s"$cid/rb=${r.getAs[Number]("rb").intValue}" -> payload
-      }.toMap
+    GraftTaskWriters.writeDirs(clustered, tableDir, cmap, statsCols, ndvCols)(
+      n => s"$cid/rb=$n")
   }
 
+  /** Append-table compaction (S19 maintenance): rewrite the live
+    * table's accreted small commit dirs as `k` RANGE-SORTED dirs on
+    * `statsCols.head`, each dir a narrow disjoint slice with fresh
+    * `#stats` — compaction doesn't just cap the dir count (years of
+    * daily appends = thousands of manifest paths), it IMPROVES
+    * skipping: overlapping ingest batches become disjoint sorted
+    * ranges, so a [[rangeScan]] after compaction opens ~1 of `k` dirs
+    * where before it opened every batch that straddled the range
+    * (S11's range-clustering, applied at the manifest layer). Stats
+    * for the output dirs come from the task writers that write them
+    * ([[writeClusteredDirs]]). Publishes through [[commitIf]] against
+    * racing APPENDS: on conflict the new head's
+    * extra dirs are carried through untouched — (head − inputs) +
+    * outputs — so no append is lost; an input dir VANISHING from the
+    * head (racing compaction/restore) aborts loudly instead of
+    * resurrecting rewritten rows. */
   def compactAppend(spark: SparkSession, tableDir: String,
                     statsCols: Seq[String], k: Int = graft.ScaleKnobs.DefaultClusterDirs,
                     retainGenerations: Int = 2): Long = {
@@ -2465,8 +2406,6 @@ object ManifestTable {
       touched.exists(p => baseStats.get(p).exists(statsFor(_, c).isDefined)))
       .toSeq
     val cid = "d-" + java.util.UUID.randomUUID().toString.take(8)
-    val obs = org.apache.spark.sql.Observation()
-    val aggs = statsAggExprs(statsCols)
     // touched dirs read through the base masks: a CoW rewrite over a
     // dv'd dir must not resurrect rows a merge-on-read delete masked
     val baseDv = base.dv
@@ -2474,19 +2413,12 @@ object ManifestTable {
     // declared CHECK constraints bind the rewrite output here (S30),
     // and the bound keyset arms the publish-time conflict guard; the
     // filter keeps FALSE and NULL rows
-    val (rewritten, boundChecks) = ManifestSupport.bindDeclaredChecks(
+    val (kept, boundChecks) = ManifestSupport.bindDeclaredChecks(
       touchedDf.filter(not(coalesce(cond, lit(false)))), tableDir,
       recomputeGenerated = true)
-    val kept = rewritten.observe(obs, aggs.head, aggs.tail: _*)
-    writePhysical(kept, colMapOf(fs, tableDir, baseV))
-      .write.parquet(s"$tableDir/$cid")
-    val m = obs.get
-    val keptRows = m("rows").asInstanceOf[Long]
-    val payload =
-      if (keptRows == 0L) None
-      else Some(statsPayloadFrom(keptRows, statsCols, m))
-    if (keptRows == 0L) // the rewrite kept nothing — no dir to publish
-      fs.delete(new Path(s"$tableDir/$cid"), true): Unit
+    // the rewrite keeping nothing lands no dir to publish
+    val payload = GraftTaskWriters.writeDirs(kept, tableDir, base.cmap,
+      statsCols)(_ => cid).get(cid)
     publishRewrite(spark, tableDir, touched.toSet,
       payload.map(_ => cid), payload, kept.schema, statsCols,
       retainGenerations, boundChecks,

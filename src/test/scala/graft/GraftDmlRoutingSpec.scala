@@ -21,8 +21,10 @@ import graft.sources.ManifestTable
   * key-delta write. The direct DML API runs those writers too, and
   * keeps its retention override and store cast. The copy-on-write
   * row-level write computes its stats and binds its contracts in the
-  * task writers, so its commit reads nothing back; a bucketed commit
-  * leaves no stage running after it. */
+  * task writers, so its commit reads nothing back; so do appends,
+  * clustered appends, compactions and merge-on-read image landing,
+  * whose dirs record the stats an aggregate over them computes. A
+  * bucketed commit leaves no stage running after it. */
 class GraftDmlRoutingSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private lazy val wh: String = {
@@ -185,20 +187,45 @@ class GraftDmlRoutingSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       stats.get(p).exists(ManifestTable.statsFor(_, "k").isDefined)), stats)
   }
 
+  /** The dirs `dir`'s head lists beyond `before`, each asserted to
+    * record exactly the payload `statsAggExprs` computes over its
+    * files. */
+  private def lemmaHolds(dir: String, before: Set[String], cols: Seq[String],
+                         route: String): Seq[String] = {
+    val head = ManifestTable.headVersion(spark, dir).get
+    val fresh = ManifestTable.pathsOf(fs, dir, head).filterNot(before)
+    assert(fresh.nonEmpty, route)
+    val stats = ManifestTable.statsOf(fs, dir, head)
+    val aggs = ManifestTable.statsAggExprs(cols)
+    fresh.foreach { p =>
+      val m = spark.read.parquet(ManifestTable.absPath(dir, p))
+        .agg(aggs.head, aggs.tail: _*).head()
+      val expected = ManifestTable.statsPayloadFrom(m.getAs[Long]("rows"),
+        cols, lane => m.getAs[Any](lane))
+      assert(stats(p) == expected, s"$route: $p")
+    }
+    fresh
+  }
+
   test("a copy-on-write UPDATE records the stats the read-back aggregate computes, under a non-UTC zone") {
     wh: Unit
     val zone0 = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     try Seq(false, true).foreach { binary =>
-      val name = if (binary) "lemma_bin" else "lemma"
+      val sfx = if (binary) "_bin" else ""
+      val name = s"lemma$sfx"
       val cols = Seq("i", "b", "d", "f", "dt", "s", "x", "ts", "tn", "n") ++
         (if (binary) Seq("bin") else Nil)
-      spark.sql(s"DROP TABLE IF EXISTS gdml.lake.$name")
-      spark.sql(s"""CREATE TABLE gdml.lake.$name (i INT, b BIGINT,
-        d DECIMAL(10,2), f BOOLEAN, dt DATE, s STRING, x DOUBLE,
-        ts TIMESTAMP, tn TIMESTAMP_NTZ, n INT
-        ${if (binary) ", bin BINARY" else ""})
-        TBLPROPERTIES ('statsCols'='${cols.mkString(",")}')""")
+      def create(t: String, props: String = ""): String = {
+        spark.sql(s"DROP TABLE IF EXISTS gdml.lake.$t")
+        spark.sql(s"""CREATE TABLE gdml.lake.$t (i INT, b BIGINT,
+          d DECIMAL(10,2), f BOOLEAN, dt DATE, s STRING, x DOUBLE,
+          ts TIMESTAMP, tn TIMESTAMP_NTZ, n INT
+          ${if (binary) ", bin BINARY" else ""})
+          TBLPROPERTIES ('statsCols'='${cols.mkString(",")}'$props)""")
+        s"$wh/lake/$t"
+      }
+      val dir = create(name)
       val bin = (h: String) => if (binary) s", X'$h'" else ""
       spark.sql(s"""INSERT INTO gdml.lake.$name VALUES
         (1, 10, 1.50, true, DATE'2024-03-10', 'b', CAST('NaN' AS DOUBLE),
@@ -211,24 +238,116 @@ class GraftDmlRoutingSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         (4, 3000000000, 99.99, true, DATE'2000-02-29', 'a', 1.5,
          TIMESTAMP'1969-12-31 23:59:59.5', TIMESTAMP_NTZ'2100-01-01 00:00:00',
          NULL${bin("7F")})""")
-      val dir = s"$wh/lake/$name"
+      // a path-API append whose dir folds two tasks. -0.0 and 0.0 tie in
+      // Spark's ordering and each side keeps the first it sees, so the
+      // two stay in one task (rows 2 and 3) and the fold meets no tie
+      val pathDir = s"$wh/lemma_path$sfx"
+      ManifestTable.append(spark.table(s"gdml.lake.$name").repartitionByRange(2,
+        when(col("i").isin(2, 3), 0).otherwise(1)), pathDir, statsCols = cols): Unit
+      val appended = lemmaHolds(pathDir, Set.empty, cols, s"append binary=$binary")
+      assert(appended.size == 1 && fs.listStatus(new Path(pathDir, appended.head))
+        .count(_.getPath.getName.endsWith(".parquet")) == 2, appended)
+      // a clustered INSERT: one range bucket per task, one dir per bucket
+      val clDir = create(s"lemma_cl$sfx", ", 'clusterBy'='i'")
+      spark.sql(s"INSERT INTO gdml.lake.lemma_cl$sfx SELECT * FROM gdml.lake.$name")
+      assert(lemmaHolds(clDir, Set.empty, cols, s"clustered binary=$binary")
+        .forall(_.contains("/rb=")))
+      // a merge-on-read UPDATE's image dir
+      val morDir = create(s"lemma_mor$sfx", ", 'dml.mode'='merge-on-read'")
+      spark.sql(s"INSERT INTO gdml.lake.lemma_mor$sfx SELECT * FROM gdml.lake.$name")
+      val morBefore = ManifestTable.livePaths(fs, morDir).toSet
+      spark.sql(s"UPDATE gdml.lake.lemma_mor$sfx SET s = 'y' WHERE i = 2")
+      assert(lemmaHolds(morDir, morBefore, cols, s"mor binary=$binary").size == 1)
+      // the copy-on-write UPDATE: one dir rewritten by one task, -0.0
+      // kept where it was first seen on both sides; timestamps render
+      // in the session zone on both paths
       val before = ManifestTable.livePaths(fs, dir).toSet
-      // one dir rewritten by one task: -0.0 and 0.0 tie in Spark's
-      // ordering, and the task writer and min/max both keep the first
-      // seen; timestamps render in the session zone on both paths
       spark.sql(s"UPDATE gdml.lake.$name SET s = 'z', x = -0.0 WHERE i = 4")
-      val head = ManifestTable.headVersion(spark, dir).get
-      val fresh = ManifestTable.pathsOf(fs, dir, head).filterNot(before)
+      val fresh = lemmaHolds(dir, before, cols, s"update binary=$binary")
       assert(fresh.size == 1, fresh)
+      val head = ManifestTable.headVersion(spark, dir).get
       val recorded = ManifestTable.statsOf(fs, dir, head)(fresh.head)
-      val aggs = ManifestTable.statsAggExprs(cols)
-      val m = spark.read.parquet(ManifestTable.absPath(dir, fresh.head))
-        .agg(aggs.head, aggs.tail: _*).head()
-      val expected = ManifestTable.statsPayloadFrom(m.getAs[Long]("rows"),
-        cols, lane => m.getAs[Any](lane))
-      assert(recorded == expected, s"binary=$binary")
       assert(ManifestTable.statsFor(recorded, "n").contains((4L, None, None)))
+      // CALL compact: each rb= dir is one range bucket
+      val compacted = ManifestTable.livePaths(fs, dir).toSet
+      spark.sql(s"CALL gdml.system.compact(table => 'lake.$name', k => 4)")
+      assert(lemmaHolds(dir, compacted, cols, s"compact binary=$binary")
+        .forall(_.contains("/rb=")))
     } finally spark.conf.set("spark.sql.session.timeZone", zone0)
+  }
+
+  test("appends and compaction write through the task writers and read no dir back") {
+    wh: Unit
+    spark.sql("DROP TABLE IF EXISTS gdml.lake.kern")
+    spark.sql("CREATE TABLE gdml.lake.kern (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsCols'='k')")
+    spark.sql("DROP TABLE IF EXISTS gdml.lake.kern_cl")
+    spark.sql("CREATE TABLE gdml.lake.kern_cl (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsCols'='k', 'clusterBy'='k')")
+    val dir = s"$wh/lake/kern"
+    def freshCids(d: String, before: Set[String]): Set[String] =
+      ManifestTable.livePaths(fs, d).filterNot(before)
+        .map(_.split("/", 2).head).toSet
+    def readsNone(read: Seq[String], cids: Set[String], what: String): Unit =
+      assert(!read.exists(p => cids.exists(c => p.contains(s"/$c"))),
+        s"$what read its fresh dirs back: $read")
+    (0 until 4).foreach { i =>
+      val before = ManifestTable.livePaths(fs, dir).toSet
+      val (jobs, _, read) = counted("INSERT INTO gdml.lake.kern " +
+        s"SELECT id, concat('v', id) FROM range(${i * 500}, ${(i + 1) * 500})")
+      assert(jobs == 1, s"plain INSERT ran $jobs jobs")
+      readsNone(read, freshCids(dir, before), "INSERT")
+    }
+    // a clustered INSERT: the range-bounds sample, the shuffle and the
+    // write (before, also an emptiness probe and a 2-job read-back)
+    val clDir = s"$wh/lake/kern_cl"
+    val (clJobs, _, clRead) = counted("INSERT INTO gdml.lake.kern_cl " +
+      "SELECT id, concat('v', id) FROM range(0, 2000)")
+    assert(clJobs == 3, s"clustered INSERT ran $clJobs jobs")
+    readsNone(clRead, freshCids(clDir, Set.empty), "clustered INSERT")
+    assert(ManifestTable.livePaths(fs, clDir).size == 4)
+    // CALL compact over the 4 dirs: sample, shuffle and write (2 more
+    // before: the grouped read-back of the rb= dirs)
+    val before = ManifestTable.livePaths(fs, dir).toSet
+    val (jobs, _, read) = counted("CALL gdml.system.compact(table => 'lake.kern', k => 4)")
+    val cids = freshCids(dir, before)
+    assert(cids.size == 1 && ManifestTable.livePaths(fs, dir).size == 4,
+      ManifestTable.livePaths(fs, dir))
+    readsNone(read, cids, "compact")
+    assert(jobs == 3, s"compact ran $jobs jobs")
+    assert(spark.table("gdml.lake.kern").count() == 2000L)
+  }
+
+  test("a zero-row INSERT into a clustered table commits its version and lands no dir") {
+    wh: Unit
+    spark.sql("DROP TABLE IF EXISTS gdml.lake.cl0")
+    spark.sql("CREATE TABLE gdml.lake.cl0 (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('statsCols'='k', 'clusterBy'='k')")
+    spark.sql("INSERT INTO gdml.lake.cl0 VALUES (1, 'a'), (2, 'b')")
+    val dir = s"$wh/lake/cl0"
+    val v0 = ManifestTable.headVersion(spark, dir).get
+    val paths0 = ManifestTable.livePaths(fs, dir)
+    def entries = fs.listStatus(new Path(dir)).map(_.getPath.getName).toSet
+    val entries0 = entries
+    spark.sql("INSERT INTO gdml.lake.cl0 SELECT k + 10, v FROM gdml.lake.cl0 WHERE false")
+    val v1 = ManifestTable.headVersion(spark, dir).get
+    assert(v1 == v0 + 1)
+    assert(ManifestTable.livePaths(fs, dir) == paths0)
+    assert(entries == entries0, "the empty batch left a dir behind")
+    assert(ManifestTable.schemaOf(fs, dir, v1) == ManifestTable.schemaOf(fs, dir, v0))
+    assert(spark.table("gdml.lake.cl0").count() == 2L)
+    // path API: the txn watermark lands with the dir-less commit, and a
+    // table whose first append had no rows reads as an empty table
+    val empty = spark.table("gdml.lake.cl0").filter(lit(false))
+    ManifestTable.appendClustered(empty, dir, Seq("k"),
+      meta = Map("txn:app" -> "7")): Unit
+    assert(ManifestTable.metaOf(fs, dir,
+      ManifestTable.headVersion(spark, dir).get).get("txn:app").contains("7"))
+    val fresh = s"$wh/zero_first"
+    ManifestTable.append(empty, fresh, statsCols = Seq("k")): Unit
+    assert(ManifestTable.livePaths(fs, fresh).isEmpty)
+    val back = ManifestTable.read(spark, fresh)
+    assert(back.count() == 0L && back.columns.toSeq == Seq("k", "v"))
   }
 
   test("a copy-on-write UPDATE violating a CHECK on a generated-column table lands nothing") {
